@@ -26,15 +26,10 @@ a filter over the checkpointed state — never a separately materialized
 or counted DataFrame. Checkpoints store only the state (the bitmap
 rides along); resume re-derives the frontier by filtering.
 
-EXECUTION (r6, guide §1/§2 — same rewrite as pagerank.py): while the
-|E|/20 dispatch stays in the DENSE regime, rounds are CHAINED through
-``localCheckpoint(eager=False)`` — each round's plan truncates to a
-LogicalRDD leaf, the whole chain executes as ONE stage cascade, and
-per-round changed-counts come back from a single union-aggregate
-collect per chain. Convergence detection stays EXACT: the collect
-yields every round's changed-count, the state at the first
-zero-change round is returned, speculative rounds past it are
-unpersisted. Sparse-push rounds (broadcast frontier) run one per
+The loop is linkgraph/loop.py's driver. While the |E|/20 dispatch
+stays in the DENSE regime, chains of up to LABEL_CHAIN rounds end in
+one changed-count collect and the state at the first zero-change round
+is returned. Sparse-push rounds (broadcast frontier) run one per
 collect — the broadcast is a blocking point anyway — preserving the
 dispatch test-pinned mode record. Dense rounds are exchange-free on
 both joins (scatter co-partitioned with the src-bucketed edge cache,
@@ -54,23 +49,24 @@ frontier takes the dense-pull form, a small frontier the sparse-push
 form (broadcast join). On the symmetrized input the in-edge set equals
 the out-edge set, so the pull direction scans the SAME cached table —
 no transpose exchange (frontier.py module docstring). The chosen mode
-is recorded per-iteration in metrics ('mode': 'dense-pull'|'sparse-push').
+is recorded per-iteration in metrics ('mode': 'dense-pull'|'sparse-push')
+beside the estimate it was chosen on ('dispatch_volume').
 """
 
 from __future__ import annotations
 
 import os
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
-from linkgraph.checkpoint import CheckpointManager, release, sever
+from linkgraph.checkpoint import CheckpointManager
 from linkgraph.frontier import edge_map
-from linkgraph.session import conf_override
+from linkgraph.loop import LABEL_CHAIN, fixpoint, loop_width
 
 
 @dataclass
@@ -79,10 +75,6 @@ class CCResult:
     iterations: int
     wall_seconds: float
     metrics: list[dict] = field(default_factory=list)
-
-
-def _chain_target() -> int:
-    return max(1, int(os.environ.get("LINKGRAPH_CC_CHAIN", "4")))
 
 
 def connected_components(
@@ -94,19 +86,9 @@ def connected_components(
     sym_edges = None
     t0 = time.time()
     if symmetrize_edges:
-        # partition the symmetrized cache to the DATA (~64k rows per
-        # partition, the pagerank.py r6 rule — per-task dispatch
-        # dominates a defaultParallelism-wide tiny-task stage), never
-        # wider than the source cache
-        import math
-
-        rows_per_part = int(
-            os.environ.get("LINKGRAPH_PR_EDGE_ROWS_PER_PART", str(64 * 1024))
-        )
-        p = min(
-            graph.edges.rdd.getNumPartitions(),
-            max(4, math.ceil(2 * graph.m / max(rows_per_part, 1))),
-        )
+        # partition the symmetrized cache to the DATA (loop.loop_width),
+        # never wider than the source cache
+        p = min(graph.edges.rdd.getNumPartitions(), loop_width(2 * graph.m))
         rev = graph.edges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst")
         )
@@ -145,49 +127,6 @@ def _cc_loop(
     ckpt: CheckpointManager | None,
     t0: float,
 ) -> CCResult:
-
-    state = None
-    start_iter = 0
-    fcount = 0
-    if ckpt is not None:
-        last = ckpt.last_complete()
-        if last is not None:
-            loaded_state, _, rec = ckpt.load(graph.edges.sparkSession, last)
-            if "changed" not in loaded_state.columns:
-                # pre-bitmap checkpoint layout (state without the
-                # bitmap column): resume with a full frontier — a
-                # superset frontier is safe for hash-min (monotone;
-                # extra messages can't change the fixpoint), it only
-                # re-does one round's worth of work.
-                loaded_state = loaded_state.select(
-                    "id", "comp", F.lit(True).alias("changed")
-                )
-                rec = {**rec, "frontier_size_next": graph.n}
-            state = sever(loaded_state)  # (id, comp, changed) — bitmap rides along
-            start_iter = last + 1
-            fcount = int(rec.get("frontier_size_next") or 0)
-            if fcount == 0:
-                return CCResult(state.select("id", "comp"), last + 1, 0.0, [rec])
-    if state is None:
-        # ids[v] = v (algos.rs:88); round 0 frontier = full (algos.rs:113)
-        # — encoded as changed=true on every row of the bitmap state, so
-        # the full frontier costs no materialization of its own.
-        state = sever(
-            graph.vertices.select(
-                "id", F.col("id").alias("comp"), F.lit(True).alias("changed")
-            )
-        )
-        fcount = graph.n
-    # align the state with the loop width in round 1's plan — a wider
-    # init partitioning would win the round-1 join alignment and
-    # re-exchange the message gather back up to it every round
-    # (pagerank.py r6 rationale); skipped when already aligned
-    p_loop = graph.edges.rdd.getNumPartitions()
-    if state.rdd.getNumPartitions() != p_loop:
-        state = state.repartition(p_loop, "id")
-
-    iterations = start_iter
-    metrics: list[dict] = []
     avg_deg = graph.m / max(graph.n, 1)
     # below this edge count a full dense scan of the cached edge table
     # is cheaper than the sparse path's per-round frontier broadcast,
@@ -196,117 +135,111 @@ def _cc_loop(
     force_dense = graph.m <= int(
         os.environ.get("LINKGRAPH_DENSE_CHAIN_EDGES", str(2_000_000))
     )
-    # durable checkpoints save once per executed round — chain only
-    # when no CheckpointManager is attached.
-    chain_cap = 1 if ckpt is not None else _chain_target()
-    # AQE off in the loop (same rationale as pagerank.py); shuffle
-    # partitions pinned to the edge cache so the message exchange lands
-    # co-partitioned with the state (pagerank.py loop_conf comment).
-    loop_conf = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.sql.shuffle.partitions": str(graph.edges.rdd.getNumPartitions()),
-    }
-    with conf_override(graph.edges.sparkSession, loop_conf):
-      it = start_iter
-      state_raw = state
-      while it < max_iter and fcount > 0:
-        blk_t0 = time.time()
-        # edge_map dispatch for the WHOLE chain: push (broadcast) from a
-        # small frontier, pull (dense) when |frontier| * avg_degree >
-        # m/20 (ligra.rs:82-87; fcount came free off the last chain's
-        # collect). Dense chains speculate that the frontier stays
-        # dense; a mis-moded tail round costs one edge-cache scan, and
-        # the chain resets to the exact rule at every collect.
-        est_volume = int(fcount * avg_deg)
-        dense = force_dense or est_volume > graph.threshold
-        c = min(chain_cap, max_iter - it) if dense else 1
-        states: list[DataFrame] = []
-        modes: list[dict] = []
-        cur = state
-        for _j in range(c):
-            frontier = cur.where(F.col("changed")).select("id", "comp")
-            if dense:
-                # SHUFFLE_HASH build on the frontier side: the edge
-                # cache streams in place (both sides co-partitioned by
-                # src in steady state — zero-exchange scatter).
-                frontier = frontier.hint("shuffle_hash")
-            info: dict = {}
-            msgs = edge_map(
-                graph,
-                frontier,
-                aggs=[F.min("comp").alias("new_comp")],
-                volume=est_volume,
-                dense=dense,
-                info=info,
+    # the current chain's edge_map dispatch, fixed by plan() at its start
+    dispatch: dict = {}
+
+    def from_pre_bitmap(state: DataFrame, rec: dict) -> tuple[DataFrame, dict]:
+        # pre-bitmap checkpoint layout (state without the bitmap
+        # column): resume with a full frontier — a superset frontier is
+        # safe for hash-min (monotone; extra messages can't change the
+        # fixpoint), it only re-does one round's worth of work.
+        if "changed" in state.columns:
+            return state, rec
+        full = state.select("id", "comp", F.lit(True).alias("changed"))
+        return full, {**rec, "frontier_size_next": graph.n}
+
+    def plan(prev: list[dict]) -> int | None:
+        # push (broadcast) from a small frontier, pull (dense) when
+        # |frontier| * avg_degree > m/20 (ligra.rs:82-87; the frontier
+        # size came free off the last chain's collect). Dense chains
+        # speculate that the frontier stays dense; a mis-moded tail
+        # round costs one edge-cache scan, and the chain resets to the
+        # exact rule at every collect.
+        fcount = prev[-1]["frontier_size_next"] if prev else graph.n
+        volume = int(fcount * avg_deg)
+        dense = force_dense or volume > graph.threshold
+        dispatch.update(fcount=fcount, volume=volume, dense=dense)
+        return None if dense else 1
+
+    def step(cur: DataFrame, edges: DataFrame) -> DataFrame:
+        frontier = cur.where(F.col("changed")).select("id", "comp")
+        if dispatch["dense"]:
+            # SHUFFLE_HASH build on the frontier side: the edge cache
+            # streams in place (both sides co-partitioned by src in
+            # steady state — zero-exchange scatter).
+            frontier = frontier.hint("shuffle_hash")
+        msgs = edge_map(
+            replace(graph, edges=edges),
+            frontier,
+            aggs=[F.min("comp").alias("new_comp")],
+            volume=dispatch["volume"],
+            dense=dispatch["dense"],
+        )
+        return cur.join(
+            msgs.hint("shuffle_hash"), cur["id"] == msgs["dst"], "left"
+        ).select(
+            cur["id"],
+            F.least(cur["comp"], F.coalesce(F.col("new_comp"), cur["comp"])).alias(
+                "comp"
+            ),
+            (F.coalesce(F.col("new_comp"), cur["comp"]) < cur["comp"]).alias(
+                "changed"
+            ),
+        )
+
+    def report(first: int, rows: list[dict], wall: float, _stopped: bool) -> list[dict]:
+        recs = []
+        fcount = dispatch["fcount"]
+        for r in rows:
+            recs.append(
+                {
+                    "iteration": r["iteration"],
+                    "frontier_size": fcount,
+                    "frontier_rep": "bitmap",
+                    "mode": "dense-pull" if dispatch["dense"] else "sparse-push",
+                    # `volume` is the round's own input frontier; the
+                    # chain dispatched on `dispatch_volume`, the
+                    # estimate at its start
+                    "volume": int(fcount * avg_deg),
+                    "dispatch_volume": dispatch["volume"],
+                    "frontier_size_next": r["frontier_size_next"],
+                    "wall_s": wall / len(rows),
+                    "block_wall_s": wall,
+                    "rounds_in_block": len(rows),
+                }
             )
-            modes.append(info)
-            nxt = (
-                cur.join(
-                    msgs.hint("shuffle_hash"), cur["id"] == msgs["dst"], "left"
-                )
-                .select(
-                    cur["id"],
-                    F.least(
-                        cur["comp"], F.coalesce(F.col("new_comp"), cur["comp"])
-                    ).alias("comp"),
-                    (
-                        F.coalesce(F.col("new_comp"), cur["comp"]) < cur["comp"]
-                    ).alias("changed"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            states.append(nxt)
-            cur = nxt
-        # ONE collect per chain: every round's changed-count (the next
-        # frontier sizes), driving exact termination + the next chain's
-        # dispatch.
-        cnt_df = None
-        for j in range(c):
-            d = (
-                states[j]
-                .groupBy()
-                .agg(F.sum(F.col("changed").cast("long")).alias("chg"))
-                .select(F.lit(j).alias("j"), "chg")
-            )
-            cnt_df = d if cnt_df is None else cnt_df.unionAll(d)
-        counts = {r["j"]: int(r["chg"] or 0) for r in cnt_df.collect()}
+            fcount = r["frontier_size_next"]
+        return recs
+
+    fp = fixpoint(
+        graph.edges,
+        m=graph.m,
+        n=graph.n,
+        # ids[v] = v (algos.rs:88); round 0 frontier = full
+        # (algos.rs:113) — encoded as changed=true on every row of the
+        # bitmap state, so the full frontier costs no materialization
+        init=lambda: graph.vertices.select(
+            "id", F.col("id").alias("comp"), F.lit(True).alias("changed")
+        ),
+        step=step,
+        scalars=[
+            F.coalesce(F.sum(F.col("changed").cast("long")), F.lit(0)).alias(
+                "frontier_size_next"
+            ),
+        ],
         # first zero-change round ends the loop (that round executed —
-        # reference semantics: the frontier emptied after it).
-        stop = next((j for j in range(c) if counts[j] == 0), None)
-        last = stop if stop is not None else c - 1
-        blk_wall = time.time() - blk_t0
-        for j in range(last + 1):
-            fnext = counts[j]
-            rec = {
-                "iteration": it + j,
-                "frontier_size": fcount,
-                "frontier_rep": "bitmap",
-                "mode": modes[j].get("mode"),
-                # per-round volume from the rolling frontier size (the
-                # chain DISPATCHED on the chain-start estimate, but the
-                # record reflects each round's actual input frontier)
-                "volume": int(fcount * avg_deg),
-                "frontier_size_next": fnext,
-                "wall_s": blk_wall / (last + 1),
-                "block_wall_s": blk_wall,
-                "rounds_in_block": last + 1,
-            }
-            metrics.append(rec)
-            fcount = fnext
-        for j, sdf in enumerate(states):
-            if j != last:
-                release(sdf)
-        release(state_raw)
-        state_raw = states[last]
-        state = states[last]
-        it += last + 1
-        iterations = it
-        if ckpt is not None:
-            ckpt.save(it - 1, state, metrics=metrics[-1])
+        # reference semantics: the frontier emptied after it)
+        stop=lambda r: not r.get("frontier_size_next"),
+        chain=LABEL_CHAIN,
+        max_iter=max_iter,
+        report=report,
+        plan=plan,
+        ckpt=ckpt,
+        on_load=from_pre_bitmap,
+    )
     return CCResult(
-        df=state.select("id", "comp"),
-        iterations=iterations,
+        df=fp.state.select("id", "comp"),
+        iterations=fp.iterations,
         wall_seconds=time.time() - t0,
-        metrics=metrics,
+        metrics=fp.metrics,
     )

@@ -15,26 +15,24 @@ collapses to all-zeros (the norm guard keeps that ANSI-safe and the
 run converges rather than throwing) — the standard caveat, documented
 rather than hidden.
 
-Spark shape per round (hits.py's loop, single phase): ONE m-row
+Spark shape per round (hits.py's round, single phase): ONE m-row
 SHUFFLE_HASH-hinted join against the src-laid-out edge cache +
 partial+final SUM keyed on dst (two-stage skew-safe gather), the L2
 norm as an in-plan one-row aggregate broadcast into the projection
-(no driver scalar mid-round), and the convergence diff riding the
-round's lineage-severing job as an Observation — one job per round.
+(no driver scalar mid-round). The loop is linkgraph/loop.py's driver.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
-from linkgraph.checkpoint import CheckpointManager, release, sever
+from linkgraph.checkpoint import CheckpointManager
 from linkgraph.kernels.hits import _normalized
-from linkgraph.session import conf_override
+from linkgraph.loop import DIFF_CHAIN, decay_chain, fixpoint, max_change
 
 
 @dataclass
@@ -44,6 +42,17 @@ class EigenResult:
     converged: bool
     wall_seconds: float
     metrics: list[dict] = field(default_factory=list)
+
+
+def _step(cur: DataFrame, edges: DataFrame) -> DataFrame:
+    raw = (
+        edges.join(
+            cur.select(F.col("id").alias("src"), "score").hint("shuffle_hash"), "src"
+        )
+        .groupBy("dst")
+        .agg(F.sum("score").alias("raw"))
+    )
+    return _normalized(raw, cur.select("id", F.col("score").alias("_score")), "dst", "score")
 
 
 def eigenvector_centrality(
@@ -59,76 +68,24 @@ def eigenvector_centrality(
     `ckpt_every` rounds and on convergence; resume continues from the
     last complete round (the uniform lifecycle all iterative kernels
     share)."""
-    edges = graph.edges
-
-    start_iter = 0
-    state = None
-    if ckpt is not None:
-        last = ckpt.last_complete()
-        if last is not None:
-            loaded, _, rec = ckpt.load(edges.sparkSession, last)
-            state = sever(loaded)
-            start_iter = last + 1
-            if rec.get("converged"):
-                return EigenResult(state, last + 1, True, 0.0, [rec])
-    if state is None:
-        state = sever(graph.vertices.select("id", F.lit(1.0).alias("score")))
-
-    t0 = time.time()
-    iterations = start_iter
-    converged = False
-    prev_ckpt = state
-    metrics: list[dict] = []
-    loop_conf = {
-        # same rationale as pagerank/hits: fixed plan shapes per round,
-        # shuffled-hash over sort-merge on the src-laid-out edge cache
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.sql.adaptive.enabled": "false",
-    }
-    with conf_override(edges.sparkSession, loop_conf):
-        for rnd in range(start_iter, max_iter):
-            it_t0 = time.time()
-            olds = state.select("id", F.col("score").alias("_old"))
-            raw = (
-                edges.join(
-                    state.select(F.col("id").alias("src"), "score").hint(
-                        "shuffle_hash"
-                    ),
-                    "src",
-                )
-                .groupBy("dst")
-                .agg(F.sum("score").alias("raw"))
-            )
-            nxt = _normalized(raw, olds, "dst", "score")
-            obs = Observation("eigen_iter")
-            new_state = sever(
-                nxt.observe(
-                    obs,
-                    F.max(F.abs(F.col("score") - F.col("_old"))).alias("diff"),
-                ).select("id", "score")
-            )
-            diff = float(obs.get["diff"] or 0.0)
-            release(prev_ckpt)
-            prev_ckpt = new_state
-            state = new_state
-            iterations = rnd + 1
-            converged = diff < tol
-            rec = {
-                "iteration": rnd,
-                "diff": diff,
-                "wall_s": time.time() - it_t0,
-                "converged": converged,
-            }
-            metrics.append(rec)
-            if ckpt is not None and (converged or (rnd + 1) % ckpt_every == 0):
-                ckpt.save(rnd, state, metrics=rec)
-            if converged:
-                break
-
+    fp = fixpoint(
+        graph.edges,
+        m=graph.m,
+        n=graph.n,
+        init=lambda: graph.vertices.select("id", F.lit(1.0).alias("score")),
+        step=_step,
+        scalars=[max_change("score")],
+        stop=lambda r: r["diff"] < tol,
+        chain=DIFF_CHAIN,
+        max_iter=max_iter,
+        plan=decay_chain(tol),
+        ckpt=ckpt,
+        ckpt_every=ckpt_every,
+    )
     return EigenResult(
-        df=state.select("id", "score"),
-        iterations=iterations,
-        converged=converged,
-        wall_seconds=time.time() - t0,
-        metrics=metrics,
+        df=fp.state.select("id", "score"),
+        iterations=fp.iterations,
+        converged=fp.converged,
+        wall_seconds=fp.wall_seconds,
+        metrics=fp.metrics,
     )

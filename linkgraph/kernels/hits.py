@@ -18,24 +18,22 @@ forward (combine on dst) and one over the free transpose (combine on
 src) — each a partial+final SUM (the two-stage skew-safe gather), and
 two IN-PLAN one-row L2-norm aggregates broadcast into the
 normalization, so no driver-side scalar is ever collected mid-round.
-The convergence diff (max |Δhub| + max |Δauth|) rides the round's
-lineage-severing job as an Observation — one job per round, zero
-extra passes. ANSI-safe: norms guard the division behind a
-``nv > 0`` CASE (an edgeless graph converges to all-zeros instead of
+The convergence diff is max |Δhub| + max |Δauth|; the loop is
+linkgraph/loop.py's driver. ANSI-safe: norms guard the division behind
+a ``nv > 0`` CASE (an edgeless graph converges to all-zeros instead of
 throwing).
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
-from linkgraph.checkpoint import CheckpointManager, release, sever
-from linkgraph.session import conf_override
+from linkgraph.checkpoint import CheckpointManager
+from linkgraph.loop import DIFF_CHAIN, decay_chain, fixpoint, max_change
 
 
 @dataclass
@@ -47,17 +45,19 @@ class HITSResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-def _normalized(raw: DataFrame, base: DataFrame, key: str, out: str) -> DataFrame:
-    """L2-normalize `raw`'s sums and left-join them onto `base` by id.
+def _normalized(
+    raw: DataFrame, base: DataFrame, key: str, out: str, l1: bool = False
+) -> DataFrame:
+    """L2- (or L1-) normalize `raw`'s sums and left-join them onto
+    `base` by id.
 
     raw  : (key, raw double) per-target gather sums
     base : state rows keyed by `id` (all vertices)
     The norm is an in-plan one-row aggregate broadcast into the
     projection — Spark runs it as a subquery stage, no driver scalar.
     """
-    norm = raw.agg(
-        F.coalesce(F.sqrt(F.sum(F.col("raw") * F.col("raw"))), F.lit(0.0)).alias("nv")
-    )
+    total = F.sum("raw") if l1 else F.sqrt(F.sum(F.col("raw") * F.col("raw")))
+    norm = raw.agg(F.coalesce(total, F.lit(0.0)).alias("nv"))
     score = (
         F.when(
             F.col("nv") > 0,
@@ -74,6 +74,25 @@ def _normalized(raw: DataFrame, base: DataFrame, key: str, out: str) -> DataFram
     )
 
 
+def _step(cur: DataFrame, edges: DataFrame) -> DataFrame:
+    olds = cur.select("id", F.col("hub").alias("_hub"), F.col("auth").alias("_auth"))
+    # forward gather: auth sums keyed by dst
+    a_raw = (
+        edges.join(cur.select(F.col("id").alias("src"), "hub").hint("shuffle_hash"), "src")
+        .groupBy("dst")
+        .agg(F.sum("hub").alias("raw"))
+    )
+    s1 = _normalized(a_raw, olds, "dst", "auth")
+    # transpose gather: hub sums keyed by src, reading the round's
+    # already-normalized auth (two-phase update)
+    h_raw = (
+        edges.join(s1.select(F.col("id").alias("dst"), "auth").hint("shuffle_hash"), "dst")
+        .groupBy("src")
+        .agg(F.sum("auth").alias("raw"))
+    )
+    return _normalized(h_raw, s1, "src", "hub").select("id", "hub", "auth", "_hub", "_auth")
+
+
 def hits(
     graph: Graph,
     tol: float = 1e-6,
@@ -86,105 +105,26 @@ def hits(
     With a CheckpointManager the (id, hub, auth) state is durable
     every `ckpt_every` rounds and on convergence; resume continues
     from the last complete round (same lifecycle as pagerank)."""
-    edges = graph.edges
-
-    start_iter = 0
-    state = None
-    if ckpt is not None:
-        last = ckpt.last_complete()
-        if last is not None:
-            loaded, _, rec = ckpt.load(edges.sparkSession, last)
-            state = sever(loaded)
-            start_iter = last + 1
-            if rec.get("converged"):
-                return HITSResult(state, last + 1, True, 0.0, [rec])
-    if state is None:
-        state = sever(
-            graph.vertices.select(
-                "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
-            )
-        )
-
-    t0 = time.time()
-    iterations = start_iter
-    converged = False
-    prev_ckpt = state
-    metrics: list[dict] = []
-    # Same loop conf as pagerank: fixed plan shapes (AQE's per-stage
-    # re-plan costs driver latency each round), and shuffled-hash over
-    # sort-merge — the edge cache is src-laid-out; SMJ would re-sort
-    # the n-row state side on every join.
-    loop_conf = {
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.sql.adaptive.enabled": "false",
-    }
-    with conf_override(edges.sparkSession, loop_conf):
-        for rnd in range(start_iter, max_iter):
-            it_t0 = time.time()
-            olds = state.select(
-                "id",
-                F.col("hub").alias("_oldhub"),
-                F.col("auth").alias("_oldauth"),
-            )
-            # forward gather: auth sums keyed by dst
-            a_raw = (
-                edges.join(
-                    state.select(F.col("id").alias("src"), "hub").hint(
-                        "shuffle_hash"
-                    ),
-                    "src",
-                )
-                .groupBy("dst")
-                .agg(F.sum("hub").alias("raw"))
-            )
-            s1 = _normalized(a_raw, olds, "dst", "auth")
-            # transpose gather: hub sums keyed by src, reading the
-            # round's already-normalized auth (two-phase update)
-            h_raw = (
-                edges.join(
-                    s1.select(F.col("id").alias("dst"), "auth").hint(
-                        "shuffle_hash"
-                    ),
-                    "dst",
-                )
-                .groupBy("src")
-                .agg(F.sum("auth").alias("raw"))
-            )
-            s2 = _normalized(h_raw, s1, "src", "hub")
-            obs = Observation("hits_iter")
-            new_state = sever(
-                s2.observe(
-                    obs,
-                    (
-                        F.max(F.abs(F.col("hub") - F.col("_oldhub")))
-                        + F.max(F.abs(F.col("auth") - F.col("_oldauth")))
-                    ).alias("diff"),
-                ).select("id", "hub", "auth")
-            )
-            diff = float(obs.get["diff"] or 0.0)
-            release(prev_ckpt)
-            prev_ckpt = new_state
-            state = new_state
-            iterations = rnd + 1
-            converged = diff < tol
-            rec = {
-                "iteration": rnd,
-                "diff": diff,
-                "wall_s": time.time() - it_t0,
-                "converged": converged,
-            }
-            metrics.append(rec)
-            if ckpt is not None and (
-                converged or (rnd + 1) % ckpt_every == 0
-            ):
-                ckpt.save(rnd, state, metrics=rec)
-            if converged:
-                break
-
+    fp = fixpoint(
+        graph.edges,
+        m=graph.m,
+        n=graph.n,
+        init=lambda: graph.vertices.select(
+            "id", F.lit(1.0).alias("hub"), F.lit(1.0).alias("auth")
+        ),
+        step=_step,
+        scalars=[max_change("hub", "auth")],
+        stop=lambda r: r["diff"] < tol,
+        chain=DIFF_CHAIN,
+        max_iter=max_iter,
+        plan=decay_chain(tol),
+        ckpt=ckpt,
+        ckpt_every=ckpt_every,
+    )
     return HITSResult(
-        df=state.select("id", "hub", "auth"),
-        iterations=iterations,
-        converged=converged,
-        wall_seconds=time.time() - t0,
-        metrics=metrics,
+        df=fp.state.select("id", "hub", "auth"),
+        iterations=fp.iterations,
+        converged=fp.converged,
+        wall_seconds=fp.wall_seconds,
+        metrics=fp.metrics,
     )

@@ -14,31 +14,29 @@ Katz is beyond-reference link-analysis coverage like hits/salsa).
 Convergence requires alpha < 1/lambda_max(A). The kernel cannot know
 the spectral radius, so the contract is the textbook one: the caller
 picks alpha (default 0.05, safe for sparse web-ish graphs); if the
-iteration diverges the diff Observation grows monotonically and the
+iteration diverges the per-round diff grows monotonically and the
 max_iter cap stops the loop with converged=False — loud, not wrong.
 
 Spark shape per round — pagerank.py's audited skeleton minus the
 teleport/dangling scalars (Katz has neither): ONE m-row SHUFFLE_HASH
 join (src-laid-out edge cache ⋈ state on src), ONE partial+final SUM
 on dst (two-stage skew-safe gather), one left join back onto the
-vertex skeleton, and the convergence diff riding the severing job's
-Observation. Plans are byte-identical across rounds (alpha/beta are
-literals), so Janino compiles once. Uniform CheckpointManager
-lifecycle: (id, katz) durable every ckpt_every rounds and on
-convergence; resume continues from the last complete round.
+vertex skeleton. Plans are byte-identical across rounds (alpha/beta
+are literals), so Janino compiles once. The loop — chains, the
+convergence collect, checkpoints every ckpt_every rounds and on
+convergence, resume — is linkgraph/loop.py's driver.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
-from linkgraph.checkpoint import CheckpointManager, release, sever
-from linkgraph.session import conf_override
+from linkgraph.checkpoint import CheckpointManager
+from linkgraph.loop import DIFF_CHAIN, decay_chain, fixpoint, max_change
 
 
 @dataclass
@@ -62,91 +60,47 @@ def katz(
     """Runs x' = beta + alpha * Aᵀ x until max|Δx| < tol or max_iter."""
     if alpha <= 0 or beta <= 0:
         raise ValueError("katz needs alpha > 0 and beta > 0")
-    edges = graph.edges
 
-    start_iter = 0
-    state = None
-    if ckpt is not None:
-        last = ckpt.last_complete()
-        if last is not None:
-            loaded, _, rec = ckpt.load(edges.sparkSession, last)
-            state = sever(loaded)
-            start_iter = last + 1
-            if rec.get("converged"):
-                return KatzResult(state, last + 1, True, 0.0, [rec])
-    if state is None:
-        state = sever(
-            graph.vertices.select("id", F.lit(float(beta)).alias("katz"))
+    def step(cur: DataFrame, edges: DataFrame) -> DataFrame:
+        gathered = (
+            edges.join(
+                cur.select(F.col("id").alias("src"), "katz").hint("shuffle_hash"),
+                "src",
+            )
+            .groupBy("dst")
+            .agg(F.sum("katz").alias("gathered"))
+        )
+        return (
+            cur.select("id", F.col("katz").alias("_katz"))
+            .join(gathered.hint("shuffle_hash"), F.col("id") == F.col("dst"), "left")
+            .select(
+                "id",
+                (
+                    F.lit(float(beta))
+                    + F.lit(float(alpha)) * F.coalesce("gathered", F.lit(0.0))
+                ).alias("katz"),
+                "_katz",
+            )
         )
 
-    t0 = time.time()
-    iterations = start_iter
-    converged = False
-    prev_ckpt = state
-    metrics: list[dict] = []
-    loop_conf = {
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.sql.adaptive.enabled": "false",
-    }
-    with conf_override(edges.sparkSession, loop_conf):
-        for rnd in range(start_iter, max_iter):
-            it_t0 = time.time()
-            gathered = (
-                edges.join(
-                    state.select(F.col("id").alias("src"), "katz").hint(
-                        "shuffle_hash"
-                    ),
-                    "src",
-                )
-                .groupBy("dst")
-                .agg(F.sum("katz").alias("gathered"))
-            )
-            nxt = (
-                state.select("id", F.col("katz").alias("_old"))
-                .join(
-                    gathered.hint("shuffle_hash"),
-                    F.col("id") == F.col("dst"),
-                    "left",
-                )
-                .select(
-                    "id",
-                    (
-                        F.lit(float(beta))
-                        + F.lit(float(alpha))
-                        * F.coalesce("gathered", F.lit(0.0))
-                    ).alias("katz"),
-                    "_old",
-                )
-            )
-            obs = Observation("katz_iter")
-            new_state = sever(
-                nxt.observe(
-                    obs,
-                    F.max(F.abs(F.col("katz") - F.col("_old"))).alias("diff"),
-                ).select("id", "katz")
-            )
-            diff = float(obs.get["diff"] or 0.0)
-            release(prev_ckpt)
-            prev_ckpt = new_state
-            state = new_state
-            iterations = rnd + 1
-            converged = diff < tol
-            rec = {
-                "iteration": rnd,
-                "diff": diff,
-                "wall_s": time.time() - it_t0,
-                "converged": converged,
-            }
-            metrics.append(rec)
-            if ckpt is not None and (converged or (rnd + 1) % ckpt_every == 0):
-                ckpt.save(rnd, state, metrics=rec)
-            if converged:
-                break
-
+    fp = fixpoint(
+        graph.edges,
+        m=graph.m,
+        n=graph.n,
+        init=lambda: graph.vertices.select("id", F.lit(float(beta)).alias("katz")),
+        step=step,
+        scalars=[max_change("katz")],
+        stop=lambda r: r["diff"] < tol,
+        chain=DIFF_CHAIN,
+        max_iter=max_iter,
+        plan=decay_chain(tol),
+        ckpt=ckpt,
+        ckpt_every=ckpt_every,
+    )
     return KatzResult(
-        df=state.select("id", "katz"),
-        iterations=iterations,
-        converged=converged,
-        wall_seconds=time.time() - t0,
-        metrics=metrics,
+        df=fp.state.select("id", "katz"),
+        iterations=fp.iterations,
+        converged=fp.converged,
+        wall_seconds=fp.wall_seconds,
+        metrics=fp.metrics,
     )

@@ -15,30 +15,24 @@ no per-partition window sort. (SURVEY §2.6 row 1 prescribed a
 row_number window; min_by gives the identical winner with one less
 sort per round — the plan has no Window node.)
 
-EXECUTION (r6, guide §1/§2 — the pagerank.py chaining): rounds chain
-through ``localCheckpoint(eager=False)`` (plan = LogicalRDD leaf per
-round), the whole chain runs as one stage cascade, and per-round
-changed-counts come back from ONE union-aggregate collect per chain —
-no per-round eager checkpoint job, no Observation round-trip.
-Termination stays exact: the collect carries every round's count, the
-state at the first zero-change round is returned, speculative rounds
-past it are unpersisted. The scatter and apply joins are co-partitioned
-SHUFFLE_HASH (state hash(id,P) against the src-bucketed edge cache) —
-the exchanges per round are the two aggregation shuffles only.
+The loop is linkgraph/loop.py's driver (chains of LABEL_CHAIN rounds,
+one changed-count collect per chain, the state at the first
+zero-change round returned). The scatter and apply joins are
+co-partitioned SHUFFLE_HASH (state hash(id,P) against the src-bucketed
+edge cache) — the exchanges per round are the two aggregation
+shuffles only.
 """
 
 from __future__ import annotations
 
-import os
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
-from linkgraph.checkpoint import CheckpointManager, release, sever
-from linkgraph.session import conf_override
+from linkgraph.checkpoint import CheckpointManager
+from linkgraph.loop import LABEL_CHAIN, fixpoint
 
 
 @dataclass
@@ -49,8 +43,43 @@ class LabelPropResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-def _chain_target() -> int:
-    return max(1, int(os.environ.get("LINKGRAPH_LP_CHAIN", "4")))
+def _step(cur: DataFrame, edges: DataFrame) -> DataFrame:
+    counts = (
+        edges.join(
+            cur.select(F.col("id").alias("src"), "label").hint("shuffle_hash"), "src"
+        )
+        .groupBy("dst", "label")
+        .agg(F.count("*").alias("cnt"))
+    )
+    # winner per dst = label with (cnt desc, label asc): one min_by hash
+    # aggregation, no window sort
+    winners = (
+        counts.groupBy("dst")
+        .agg(
+            F.min_by("label", F.struct(F.negate(F.col("cnt")), F.col("label"))).alias(
+                "new_label"
+            )
+        )
+        .select(F.col("dst").alias("id"), "new_label")
+    )
+    return cur.join(winners.hint("shuffle_hash"), "id", "left").select(
+        "id",
+        F.coalesce("new_label", "label").alias("label"),
+        F.col("label").alias("_label"),
+    )
+
+
+def _report(first: int, rows: list[dict], wall: float, _stopped: bool) -> list[dict]:
+    return [
+        {
+            "iteration": r["iteration"],
+            "changed": r["changed"],
+            "wall_s": wall / len(rows),
+            "block_wall_s": wall,
+            "rounds_in_block": len(rows),
+        }
+        for r in rows
+    ]
 
 
 def label_propagation(
@@ -58,143 +87,27 @@ def label_propagation(
     max_iter: int = 20,
     ckpt: CheckpointManager | None = None,
 ) -> LabelPropResult:
-    t0 = time.time()
-    labels = None
-    start_iter = 0
-    if ckpt is not None:
-        last = ckpt.last_complete()
-        if last is not None:
-            loaded, _, rec = ckpt.load(graph.edges.sparkSession, last)
-            labels = sever(loaded)
-            start_iter = last + 1
-            if rec.get("changed") == 0:
-                return LabelPropResult(labels, last + 1, 0.0, [rec])
-    if labels is None:
-        labels = sever(graph.vertices.select("id", F.col("id").alias("label")))
-    iterations = start_iter
-    metrics: list[dict] = []
-    # durable checkpoints save once per executed round — chain only
-    # when no CheckpointManager is attached.
-    chain_cap = 1 if ckpt is not None else _chain_target()
-    # partition the loop to the DATA (pagerank.py r6 rule): re-cache
-    # the edges once at ~64k rows/partition when the cache is wider —
-    # measured 1.13 -> 0.94 s on the 3-round bench leg including the
-    # re-cache pass; no-op on large graphs.
-    import math
-
-    edges = graph.edges
-    edges_recached = False
-    p_edges = edges.rdd.getNumPartitions()
-    p_target = max(
-        4,
-        math.ceil(
-            graph.m
-            / int(os.environ.get("LINKGRAPH_PR_EDGE_ROWS_PER_PART", str(64 * 1024)))
-        ),
+    """With a CheckpointManager the labels are saved every round."""
+    fp = fixpoint(
+        graph.edges,
+        m=graph.m,
+        n=graph.n,
+        init=lambda: graph.vertices.select("id", F.col("id").alias("label")),
+        step=_step,
+        scalars=[
+            F.coalesce(
+                F.sum((F.col("label") != F.col("_label")).cast("long")), F.lit(0)
+            ).alias("changed")
+        ],
+        stop=lambda r: r.get("changed") == 0,
+        chain=LABEL_CHAIN,
+        max_iter=max_iter,
+        report=_report,
+        ckpt=ckpt,
     )
-    if p_target < p_edges:
-        from pyspark import StorageLevel
-
-        edges = edges.repartition(p_target, "src").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        edges_recached = True
-        p_edges = p_target
-        # align the init state with the loop width in round 1's plan
-        # (pagerank.py rationale: a wider init partitioning would win
-        # the join alignment and re-exchange winners every round)
-        labels = labels.repartition(p_target, "id")
-    # AQE off in the loop (same rationale as pagerank.py); shuffle
-    # partitions pinned to the edge cache for co-partitioned joins.
-    loop_conf = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.sql.shuffle.partitions": str(p_edges),
-    }
-    with conf_override(graph.edges.sparkSession, loop_conf):
-      it = start_iter
-      labels_raw = labels
-      stop_seen = False
-      while it < max_iter and not stop_seen:
-        blk_t0 = time.time()
-        c = min(chain_cap, max_iter - it)
-        states: list[DataFrame] = []
-        cur = labels
-        for _j in range(c):
-            counts = (
-                edges.join(
-                    cur.select(F.col("id").alias("src"), "label").hint(
-                        "shuffle_hash"
-                    ),
-                    "src",
-                )
-                .groupBy("dst", "label")
-                .agg(F.count("*").alias("cnt"))
-            )
-            # winner per dst = label with (cnt desc, label asc): one
-            # min_by hash aggregation, no window sort
-            winners = counts.groupBy("dst").agg(
-                F.min_by(
-                    "label", F.struct(F.negate(F.col("cnt")), F.col("label"))
-                ).alias("new_label")
-            ).select(F.col("dst").alias("id"), "new_label")
-            nxt = (
-                cur.join(winners.hint("shuffle_hash"), "id", "left")
-                .select(
-                    "id",
-                    F.coalesce("new_label", "label").alias("label"),
-                    F.col("label").alias("_old"),
-                )
-                .localCheckpoint(eager=False)
-            )
-            states.append(nxt)
-            cur = nxt.drop("_old")
-        # ONE collect per chain: per-round changed-counts
-        cnt_df = None
-        for j in range(c):
-            d = (
-                states[j]
-                .groupBy()
-                .agg(
-                    F.sum(
-                        (F.col("label") != F.col("_old")).cast("long")
-                    ).alias("chg")
-                )
-                .select(F.lit(j).alias("j"), "chg")
-            )
-            cnt_df = d if cnt_df is None else cnt_df.unionAll(d)
-        chgs = {r["j"]: int(r["chg"] or 0) for r in cnt_df.collect()}
-        stop = next((j for j in range(c) if chgs[j] == 0), None)
-        last = stop if stop is not None else c - 1
-        stop_seen = stop is not None
-        blk_wall = time.time() - blk_t0
-        for j in range(last + 1):
-            metrics.append(
-                {
-                    "iteration": it + j,
-                    "changed": chgs[j],
-                    "wall_s": blk_wall / (last + 1),
-                    "block_wall_s": blk_wall,
-                    "rounds_in_block": last + 1,
-                }
-            )
-        for j, sdf in enumerate(states):
-            if j != last:
-                release(sdf)
-        release(labels_raw)
-        labels_raw = states[last]
-        labels = states[last].drop("_old")
-        it += last + 1
-        iterations = it
-        if ckpt is not None:
-            ckpt.save(it - 1, labels, metrics=metrics[-1])
-    if edges_recached:
-        # loop-local data-sized cache; the returned labels are a
-        # checkpointed RDD independent of it
-        edges.unpersist()
     return LabelPropResult(
-        df=labels,
-        iterations=iterations,
-        wall_seconds=time.time() - t0,
-        metrics=metrics,
+        df=fp.state,
+        iterations=fp.iterations,
+        wall_seconds=fp.wall_seconds,
+        metrics=fp.metrics,
     )

@@ -19,47 +19,21 @@ for clusters whose partial-agg memory is the bottleneck, SURVEY
 §4.4), one left join back onto the vertex skeleton, and an in-plan
 one-row broadcast carrying the dangling mass.
 
-EXECUTION (r6 rewrite, guide §1/§2): rounds are CHAINED through
-``localCheckpoint(eager=False)``. Each round's DataFrame is planned
-immediately (its plan truncates to a LogicalRDD leaf, so Catalyst
-work stays LINEAR in the chain length — the in-plan chaining this
-replaces cloned the round subtree ~3^K times, measured K=4 = 31.8 s
-vs K=1 = 9.9 s on the sf0.1 graph), while execution happens through
-the round's own dangling-mass broadcast job plus ONE convergence
-collect per chain instead of one eager checkpoint job + Observation
-round-trip per round. Every chained round is its own persisted RDD,
-so convergence detection stays EXACT: the state AT the detected
-boundary is returned directly, speculatively computed rounds past it
-are just unpersisted. Measured (local[32], sf0.1 cust-supp graph,
-587k edges): 23.0 s → 8.9 s same-session (r5 kernel vs chain=8);
-20k-page web graph, check_every=2: 53.5 s → 23.0 s; ranks
-bit-identical on the web graph, ≤3.3e-19 absolute drift on sf0.1
-(driver-literal vs in-plan dangling-mass sum — far below the
-round(9) oracle comparison). With the loop additionally partitioned
-to the DATA (~64k edge rows/partition, re-cached once per call when
-the existing cache is wider — guide §2.2, per-task dispatch dominates
-few-ms tasks) the same leg measured 20.3 s → 4.5 s in a slow host
-phase, whole-bench pagerank 4.3-4.9 s vs the r5 record 16.2 s.
-
-Lineage is severed every round by the lazy localCheckpoint (SURVEY
-hard-part #1); blocks of superseded rounds are released as soon as
-the chain's convergence collect lands.
+The loop (resume, data-sized edge re-cache, loop conf, chained
+rounds with one convergence collect per chain, checkpoints, cleanup)
+is linkgraph/loop.py's driver; this module supplies the round.
 """
 
 from __future__ import annotations
 
-import itertools
-import math
-import os
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
-from linkgraph.checkpoint import CheckpointManager, release, sever
-from linkgraph.session import conf_override
+from linkgraph.checkpoint import CheckpointManager
+from linkgraph.loop import DIFF_CHAIN, decay_chain, fixpoint, max_change, view_names
 
 
 @dataclass
@@ -74,28 +48,6 @@ class PageRankResult:
     @property
     def edges_per_second(self) -> float:
         return self.edges_processed / self.wall_seconds if self.wall_seconds else 0.0
-
-
-def _chain_rows_budget() -> int:
-    """Cap on SUM of cached state rows held by one chain (each chained
-    round persists one n-row state until the chain's convergence
-    collect). 32M rows ≈ 1.3 GB at ~40 B/row — scale-adaptive: at
-    bench scale (n≈16k) the cap never binds; on a graph with n=100M
-    the chain degrades toward 1 round per job, where per-round driver
-    latency is noise against multi-second rounds anyway."""
-    return int(os.environ.get("LINKGRAPH_PR_CHAIN_ROWS", str(32 * 1024 * 1024)))
-
-
-def _chain_target() -> int:
-    """Rounds chained per convergence collect. 16 measured best once
-    the data-sized partitioning landed (web leg: chain 8 = 12.5 s,
-    16 = 11.75 s, 24 = 11.65 s — the cheaper the round, the more the
-    per-chain collect barrier matters); the cached-row budget still
-    caps depth on big states and the decay predictor trims the tail."""
-    return max(1, int(os.environ.get("LINKGRAPH_PR_CHAIN", "16")))
-
-
-_VIEW_SEQ = itertools.count()
 
 
 def pagerank(
@@ -113,28 +65,20 @@ def pagerank(
     """check_every=K: convergence is checked only at iteration numbers
     that are multiples of K (so detection can be up to K-1 iterations
     late); ranks after N executed iterations are IDENTICAL to
-    check_every=1 (same recurrence, pinned by pytest parity). The
-    executor chains up to `_chain_target()` rounds (a multiple of K)
-    per driver round-trip regardless of K — K is a semantic knob, not
-    an execution knob, since r6."""
-    n = graph.n
-    edges = graph.edges
+    check_every=1 (same recurrence, pinned by pytest parity). Chains
+    are a multiple of K rounds long — K is a semantic knob, not an
+    execution knob.
 
-    start_iter = 0
-    state = None
-    if ckpt is not None:
-        last = ckpt.last_complete()
-        if last is not None:
-            loaded, _, rec = ckpt.load(edges.sparkSession, last)
-            state = sever(loaded)
-            start_iter = last + 1
-            if rec.get("converged"):
-                df = state.select("id", "rank")
-                return PageRankResult(df, last + 1, True, 0, 0.0, [rec])
-    if state is None:
+    Metrics are one record per chain (``iterations_in_block`` rounds),
+    carrying ``edges_processed`` and ``wall_s`` for the chain."""
+    n = graph.n
+    spark = graph.edges.sparkSession
+
+    def init() -> DataFrame:
         # state skeleton: (id, out_deg, rank); out_deg joined in once so
         # the hot loop never touches the degrees table again.
-        #
+        if init_ranks is None:
+            return graph.degrees.select("id", "out_deg", (F.lit(1.0) / n).alias("rank"))
         # init_ranks (id, rank) warm-starts the iteration — the
         # incremental-crawl companion to build.update_graph: surviving
         # urls keep their ids, so a previous run's converged scores are
@@ -146,301 +90,94 @@ def pagerank(
         # iteration's dangling handling restores ||r||1 = 1 within the
         # first rounds and renormalizing would perturb the surviving
         # scores' relative values for no faster convergence.
-        if init_ranks is not None:
-            state = sever(
-                graph.degrees.join(
-                    init_ranks.select("id", F.col("rank").alias("_ir")),
-                    "id",
-                    "left",
-                ).select(
-                    "id",
-                    "out_deg",
-                    F.coalesce("_ir", F.lit(1.0 / n)).alias("rank"),
-                )
-            )
-        else:
-            state = sever(
-                graph.degrees.select(
-                    "id", "out_deg", (F.lit(1.0) / n).alias("rank")
-                )
-            )
+        return graph.degrees.join(
+            init_ranks.select("id", F.col("rank").alias("_ir")), "id", "left"
+        ).select("id", "out_deg", F.coalesce("_ir", F.lit(1.0 / n)).alias("rank"))
 
-    t0 = time.time()
-    check_every = max(1, check_every)
-
-    # Partition the loop to the DATA, not the core count (guide §2.2:
-    # fewer, larger partitions). A defaultParallelism-partitioned edge
-    # cache leaves a few-ms task per stage at bench scale, and per-task
-    # dispatch dominates the round: re-caching the edges ONCE at
-    # ~64k rows/partition (LINKGRAPH_PR_EDGE_ROWS_PER_PART) measured
-    # 20.3 s -> 4.5 s for the whole 31-iteration sf0.1 leg INCLUDING
-    # the extra re-cache pass (P=32 -> 10; P=16: 5.4 s, P=6: 4.3 s).
-    # Scale-adaptive: when the data-sized target is not BELOW the
-    # cache's current partition count (any large graph), this is a
-    # no-op and the existing cache is used as-is.
-    edges_recached = False
-    p_edges = edges.rdd.getNumPartitions()
-    rows_per_part = int(
-        os.environ.get("LINKGRAPH_PR_EDGE_ROWS_PER_PART", str(64 * 1024))
+    # The round is ONE constant SQL template over two temp views instead
+    # of ~45 per-round py4j Column/DataFrame calls: SHUFFLE_HASH scatter
+    # (the LogicalRDD state has unknown stats, so without the hint the
+    # planner falls back to SMJ) + SHUFFLE_HASH apply + an in-plan
+    # one-row dangling-mass broadcast (no driver scalar, no
+    # createDataFrame: measured ~0.2 s/call). It measured ~0.05-0.08 s
+    # per round of driver time below the Column API. The float literals
+    # use repr() round-tripping with the D suffix so the parsed doubles
+    # are exactly the Column-API literals. `salt` adds a first gather
+    # level keyed on (dst, pmod(src, salt)), splitting a hub dst's
+    # first-level aggregation `salt` ways (SURVEY §4.4).
+    edges_view, cur_view = views = view_names("linkgraph_pr")
+    scatter = f"""SELECT /*+ SHUFFLE_HASH(s) */ e.dst AS dst, sum(s.w) AS {"pw" if salt else "gathered"}
+  FROM {edges_view} e
+  JOIN (SELECT id AS src, rank / out_deg AS w
+        FROM {cur_view} WHERE out_deg > 0) s
+    ON e.src = s.src
+  GROUP BY e.dst{f", pmod(e.src, {int(salt)})" if salt else ""}"""
+    gather = (
+        f"SELECT dst, sum(pw) AS gathered FROM ({scatter}) GROUP BY dst"
+        if salt
+        else scatter
     )
-    p_target = max(4, math.ceil(graph.m / max(rows_per_part, 1)))
-    if p_target < p_edges:
-        from pyspark import StorageLevel
-
-        edges = edges.repartition(p_target, "src").persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        edges_recached = True
-        p_edges = p_target
-        # align the initial state with the loop width IN round 1's
-        # plan (one n-row exchange, computed once via exchange reuse):
-        # otherwise the wider init partitioning wins the round-1 join
-        # alignment and every subsequent round re-exchanges the
-        # gathered side back up to it
-        state = state.repartition(p_target, "id")
-
-    # Chain sizing: a multiple of check_every, capped by the cached-row
-    # budget and — when durable checkpoints are requested — by
-    # ckpt_every, so save granularity is preserved.
-    chain_cap = _chain_target()
-    if ckpt is not None:
-        chain_cap = min(chain_cap, max(1, ckpt_every))
-    chain_cap = min(chain_cap, max(1, _chain_rows_budget() // max(n, 1)))
-    chain_cap = max(check_every, (chain_cap // check_every) * check_every)
-
-    iterations = start_iter
-    converged = False
-    metrics: list[dict] = []
-    # AQE off inside the loop: fixed plan shapes, and AQE's per-stage
-    # re-planning costs ~0.3-0.7s driver latency per iteration
-    # (measured 25-35% of iteration wall on rMAT-20). Skew in the
-    # gather is already handled by partial+final aggregation.
-    # Shuffled-hash join instead of sort-merge: the edge cache is
-    # already laid out by src, but SMJ re-sorts the n-row state side
-    # on BOTH per-iteration joins (scatter on src, apply on id) —
-    # 2 × n log(n/P) of pure overhead per round. SHJ builds a small
-    # per-partition hash table on the state/gathered side (n/P rows)
-    # and streams the edges — no sorts at all.
-    #
-    # Shuffle partitions are pinned to the EDGE CACHE's partition
-    # count: the state is hash(id)-partitioned (preserved through
-    # LogicalRDD), the edge cache hash(src)-partitioned, so with
-    # matching counts the scatter AND apply joins are exchange-free
-    # and the gather's output feeds the apply without a re-exchange.
-    # A mismatched count (e.g. a data-sized session setting) re-adds
-    # one n-row Exchange per round: measured 10.0-11.1 s vs 8.9 s at
-    # sf0.1. This follows the data's layout, not the core count.
-    loop_conf = {
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.sql.shuffle.partitions": str(p_edges),
-    }
-    if not adaptive:
-        loop_conf["spark.sql.adaptive.enabled"] = "false"
-
-    # The non-salted round is issued as ONE constant SQL template over
-    # two temp views instead of ~45 per-round py4j Column/DataFrame
-    # calls: same plan (SHUFFLE_HASH scatter + SHUFFLE_HASH apply +
-    # broadcast one-row dangling mass), bit-identical ranks (pinned by
-    # pytest), measured ~0.05-0.08 s/round of driver time saved. The
-    # float literals use repr() round-tripping with the D suffix so the
-    # parsed doubles are exactly the Column-API literals.
-    token = next(_VIEW_SEQ)
-    edges_view = f"linkgraph_pr_edges_{token}"
-    cur_view = f"linkgraph_pr_cur_{token}"
     round_sql = f"""
 SELECT /*+ SHUFFLE_HASH(gth), BROADCAST(dmv) */
        cur.id, cur.out_deg,
        {(1.0 - damping) / n!r}D + {damping!r}D
          * (coalesce(gth.gathered, 0.0D) + dmv.dm_val / {n}) AS rank,
-       cur.rank AS _old
+       cur.rank AS _rank
 FROM {cur_view} cur
-LEFT JOIN (
-  SELECT /*+ SHUFFLE_HASH(s) */ e.dst AS dst, sum(s.w) AS gathered
-  FROM {edges_view} e
-  JOIN (SELECT id AS src, rank / out_deg AS w
-        FROM {cur_view} WHERE out_deg > 0) s
-    ON e.src = s.src
-  GROUP BY e.dst
-) gth ON cur.id = gth.dst
+LEFT JOIN ({gather}) gth ON cur.id = gth.dst
 CROSS JOIN (
   SELECT coalesce(sum(rank), 0.0D) AS dm_val
   FROM {cur_view} WHERE out_deg = 0
 ) dmv
 """
 
-    def one_round_sql(cur: DataFrame) -> DataFrame:
-        cur.createOrReplaceTempView(cur_view)
-        return edges.sparkSession.sql(round_sql)
-
-    def one_round(cur: DataFrame, dm_df: DataFrame) -> DataFrame:
-        # SHUFFLE_HASH hint: checkpointed state is a LogicalRDD with
-        # unknown stats, so the planner's size check would fall back to
-        # SMJ; the hint forces the hash build on the n-row side (n/P
-        # rows per task — trivially in-memory) and streams the cached
-        # edge partitions with no sort.
-        contribs = edges.join(
-            cur.where(F.col("out_deg") > 0)
-            .select(
-                F.col("id").alias("src"),
-                (F.col("rank") / F.col("out_deg")).alias("w"),
-            )
-            .hint("shuffle_hash"),
-            "src",
-        )
-        if salt:
-            gathered = (
-                contribs.groupBy("dst", F.pmod(F.col("src"), F.lit(salt)).alias("_s"))
-                .agg(F.sum("w").alias("pw"))
-                .groupBy("dst")
-                .agg(F.sum("pw").alias("gathered"))
-            )
-        else:
-            gathered = contribs.groupBy("dst").agg(F.sum("w").alias("gathered"))
-        return (
-            cur.join(gathered.hint("shuffle_hash"), cur["id"] == gathered["dst"], "left")
-            .crossJoin(F.broadcast(dm_df))
-            .select(
-                cur["id"],
-                cur["out_deg"],
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("gathered"), F.lit(0.0)) + F.col("dm_val") / n)
-                ).alias("rank"),
-                cur["rank"].alias("_old"),
-            )
-        )
-
-    def predict_chain(rows: dict[int, tuple[float, float]], base_it: int) -> int:
-        """Shrink the next chain when the diff's geometric decay says
-        convergence is < chain_cap rounds away — bounds speculative
-        overshoot (wasted rounds) to ~0 at scale, costs nothing when
-        far from tol (falls back to chain_cap)."""
-        if tol <= 0.0 or len(rows) < 2:
-            return chain_cap
-        (j1, (d1, _)), (j2, (d2, _)) = sorted(rows.items())[-2:]
-        if not (d1 > d2 > 0.0) or d2 <= tol:
-            return chain_cap
-        rho = (d2 / d1) ** (1.0 / (j2 - j1))
-        if not (0.0 < rho < 1.0):
-            return chain_cap
-        pred = math.ceil(math.log(tol / d2) / math.log(rho))
-        pred = max(check_every, math.ceil(pred / check_every) * check_every)
-        return min(chain_cap, pred)
-
-    if salt is None or not salt:
-        edges.createOrReplaceTempView(edges_view)
-    try:
-      with conf_override(edges.sparkSession, loop_conf):
-        it = start_iter
-        next_chain = chain_cap
-        # the raw (pre-.drop) checkpointed DF backing `state` — release()
-        # reaches the RDD through a bare LogicalRDD plan only
-        state_raw = state
-        while it < max_iter and not converged:
-            it_t0 = time.time()
-            c = min(next_chain, max_iter - it)
-            c = max(check_every, (c // check_every) * check_every)
-            c = min(c, max_iter - it)
-            states: list[DataFrame] = []
-            cur = state
-            for j in range(c):
-                # In-plan dangling mass: one-row aggregate of the
-                # round's input state (a LogicalRDD leaf), broadcast
-                # into the apply join — no driver round-trip, no
-                # createDataFrame conversion (measured ~0.2 s/call);
-                # the broadcast's collect job is also what materializes
-                # the previous round's RDD, so execution pipelines
-                # into this build loop.
-                if salt:
-                    dm_df = cur.where(F.col("out_deg") == 0).agg(
-                        F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm_val")
-                    )
-                    nxt = one_round(cur, dm_df)
-                else:
-                    nxt = one_round_sql(cur)
-                nxt = nxt.localCheckpoint(eager=False)
-                states.append(nxt)
-                cur = nxt.drop("_old")
-            # ONE collect per chain: per-boundary convergence diff +
-            # dangling mass (the next chain's round-1 literal), unioned
-            # into a single job over the chain's persisted states.
-            bounds = [j for j in range(c) if (j + 1) % check_every == 0 or j == c - 1]
-            diff_df = None
-            for j in bounds:
-                d = (
-                    states[j]
-                    .groupBy()
-                    .agg(
-                        F.max(F.abs(F.col("rank") - F.col("_old"))).alias("diff"),
-                        F.sum(
-                            F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(
-                                F.lit(0.0)
-                            )
-                        ).alias("dm"),
-                    )
-                    .select(F.lit(j).alias("j"), "diff", "dm")
-                )
-                diff_df = d if diff_df is None else diff_df.unionAll(d)
-            rows = {r["j"]: (r["diff"], r["dm"]) for r in diff_df.collect()}
-            hit = None
-            for j in bounds:
-                if rows[j][0] < tol:
-                    hit = j
-                    break
-            last = hit if hit is not None else bounds[-1]
-            diff, dm = rows[last]
-            dm = dm or 0.0
-            new_state = states[last]
-            # free the previous chain's terminal state and every round
-            # this chain superseded (including speculative overshoot
-            # rounds past the detected boundary) NOW, not at GC time.
-            for j, sdf in enumerate(states):
-                if j != last:
-                    release(sdf)
-            release(state_raw)
-            state_raw = new_state
-            state = new_state.drop("_old")
-            it += last + 1
-            iterations = it
-            converged = hit is not None
-            rec = {
-                "iteration": it - 1,
-                "iterations_in_block": last + 1,
-                "diff": diff,
-                "dangling_mass": dm,
-                "edges_processed": graph.m * (last + 1),
-                "wall_s": time.time() - it_t0,
-                "converged": converged,
+    def report(first: int, rows: list[dict], wall: float, stopped: bool) -> list[dict]:
+        r = rows[-1]
+        k = r["iteration"] - first + 1
+        return [
+            {
+                "iteration": r["iteration"],
+                "iterations_in_block": k,
+                "diff": r["diff"],
+                "dangling_mass": r["dangling_mass"],
+                "edges_processed": graph.m * k,
+                "wall_s": wall,
+                "converged": stopped,
             }
-            metrics.append(rec)
-            next_chain = predict_chain(rows, it)
-            if ckpt is not None and (
-                converged or (it % ckpt_every) < (last + 1) and it >= ckpt_every
-            ):
-                # partition_counts opted in: pagerank saves at chain
-                # granularity, so the extra per-save job is cheap
-                # relative to the sidecar detail it buys
-                ckpt.save(it - 1, state, metrics=rec, partition_counts=True)
-    finally:
-        # temp views are session-global: drop them so later kernel
-        # calls and caller code never see stale registrations
-        for v in (edges_view, cur_view):
-            try:
-                edges.sparkSession.catalog.dropTempView(v)
-            except Exception:
-                pass
-        if edges_recached:
-            # the loop-local data-sized edge cache; the returned state
-            # is a checkpointed RDD independent of it
-            edges.unpersist()
+        ]
 
-    wall = time.time() - t0
+    check_every = max(1, check_every)
+    fp = fixpoint(
+        graph.edges,
+        m=graph.m,
+        n=n,
+        init=init,
+        step=lambda cur, edges: spark.sql(round_sql),
+        scalars=[
+            max_change("rank"),
+            F.sum(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)).alias(
+                "dangling_mass"
+            ),
+        ],
+        stop=lambda r: r["diff"] < tol,
+        chain=DIFF_CHAIN,
+        max_iter=max_iter,
+        report=report,
+        plan=decay_chain(tol, check_every),
+        ckpt=ckpt,
+        ckpt_every=ckpt_every,
+        # chain-granularity saves: the extra per-save job is cheap
+        # relative to the sidecar detail it buys
+        partition_counts=True,
+        check_every=check_every,
+        adaptive=adaptive,
+        views=views,
+    )
     return PageRankResult(
-        df=state.select("id", "rank"),
-        iterations=iterations,
-        converged=converged,
-        edges_processed=(iterations - start_iter) * graph.m,
-        wall_seconds=wall,
-        metrics=metrics,
+        df=fp.state.select("id", "rank"),
+        iterations=fp.iterations,
+        converged=fp.converged,
+        edges_processed=(fp.iterations - fp.start_iter) * graph.m,
+        wall_seconds=fp.wall_seconds,
+        metrics=fp.metrics,
     )

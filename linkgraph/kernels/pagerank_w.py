@@ -4,9 +4,8 @@ rank over out-edges PROPORTIONALLY TO EDGE WEIGHT instead of uniformly
 graph the natural weight is the href multiplicity between hosts, so a
 host that links another ten times passes ten times the rank of a
 single stray link). The unweighted kernel is pagerank.py; this one
-shares its loop discipline (sever per round, Observation-borne diff +
-dangling mass, SHUFFLE_HASH hints, AQE off) but gathers rank * p(u,v)
-where
+runs on the same loop driver (linkgraph/loop.py) with the same round
+shape, but gathers rank * p(u,v) where
 
     p(u, v) = w(u, v) / Σ_x w(u, x)        (row-normalized once,
                                             BEFORE the loop)
@@ -24,9 +23,9 @@ ROUND(9) like the unweighted kernel's.
 Scale shape per iteration — identical to pagerank.py's audited plan:
 one m-row SHUFFLE_HASH join (normalized edges ⋈ state on src), one
 partial+final SUM on dst (two-stage skew-safe gather), one left join
-back onto the skeleton, diff + dangling mass riding the checkpoint
-job's Observation. The normalization itself is one groupBy + one join,
-paid once.
+back onto the skeleton, and an in-plan one-row dangling-mass
+broadcast. The normalization itself is one groupBy + one join, paid
+once.
 """
 
 from __future__ import annotations
@@ -34,12 +33,11 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
-from linkgraph.checkpoint import release, sever
-from linkgraph.session import conf_override
+from linkgraph.loop import DIFF_CHAIN, decay_chain, fixpoint, max_change
 
 
 @dataclass
@@ -58,96 +56,88 @@ def pagerank_weighted(
     tol: float = 1e-6,
     max_iter: int = 200,
 ) -> WeightedPageRankResult:
-    """weights: (src, dst, w) with w > 0 covering the walkable edges."""
+    """weights: (src, dst, w) with w > 0 covering the walkable edges.
+
+    Metrics are one record per round, numbered from 1, with ``wall_s``
+    the time since the call started."""
     t0 = time.time()
     n = graph.n
-    spark = graph.edges.sparkSession
     wsum = weights.groupBy("src").agg(F.sum("w").alias("wsum"))
-    pe = sever(
-        weights.join(wsum, "src").select(
-            "src",
-            "dst",
-            (F.col("w").cast("double") / F.col("wsum").cast("double")).alias("p"),
-        )
+    # the walk's edge table, cached by the loop driver for this call
+    pe = weights.join(wsum, "src").select(
+        "src",
+        "dst",
+        (F.col("w").cast("double") / F.col("wsum").cast("double")).alias("p"),
     )
-    # skeleton: (id, has_out, rank); has_out joined in once.
-    state = sever(
-        graph.vertices.select("id")
-        .join(wsum.select(F.col("src").alias("id")).withColumn("has_out", F.lit(True)),
-              "id", "left")
-        .select(
+
+    def init() -> DataFrame:
+        # skeleton: (id, has_out, rank); has_out joined in once.
+        has_out = wsum.select(F.col("src").alias("id")).withColumn("has_out", F.lit(True))
+        return graph.vertices.select("id").join(has_out, "id", "left").select(
             "id",
             F.coalesce("has_out", F.lit(False)).alias("has_out"),
             (F.lit(1.0) / n).alias("rank"),
         )
-    )
-    dm = state.where(~F.col("has_out")).agg(F.sum("rank")).first()[0] or 0.0
 
-    loop_conf = {
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.sql.adaptive.enabled": "false",
-    }
-    iterations = 0
-    converged = False
-    prev = state
-    metrics: list[dict] = []
-    with conf_override(spark, loop_conf):
-        for it in range(1, max_iter + 1):
-            dm_df = spark.createDataFrame([(float(dm),)], "dm_val double")
-            contribs = pe.join(
-                state.where(F.col("has_out"))
-                .select(F.col("id").alias("src"), "rank")
-                .hint("shuffle_hash"),
-                "src",
-            ).select("dst", (F.col("rank") * F.col("p")).alias("c"))
-            gathered = contribs.groupBy("dst").agg(F.sum("c").alias("gathered"))
-            nxt = (
-                state.join(
-                    gathered.hint("shuffle_hash"),
-                    state["id"] == gathered["dst"],
-                    "left",
-                )
-                .crossJoin(F.broadcast(dm_df))
-                .select(
-                    state["id"],
-                    state["has_out"],
-                    (
-                        F.lit((1.0 - damping) / n)
-                        + F.lit(damping)
-                        * (F.coalesce("gathered", F.lit(0.0)) + F.col("dm_val") / n)
-                    ).alias("rank"),
-                    state["rank"].alias("_old"),
-                )
+    def step(cur: DataFrame, edges: DataFrame) -> DataFrame:
+        dm = cur.where(~F.col("has_out")).agg(
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm_val")
+        )
+        contribs = edges.join(
+            cur.where(F.col("has_out"))
+            .select(F.col("id").alias("src"), "rank")
+            .hint("shuffle_hash"),
+            "src",
+        ).select("dst", (F.col("rank") * F.col("p")).alias("c"))
+        gathered = contribs.groupBy("dst").agg(F.sum("c").alias("gathered"))
+        return (
+            cur.join(gathered.hint("shuffle_hash"), cur["id"] == gathered["dst"], "left")
+            .crossJoin(F.broadcast(dm))
+            .select(
+                cur["id"],
+                cur["has_out"],
+                (
+                    F.lit((1.0 - damping) / n)
+                    + F.lit(damping)
+                    * (F.coalesce("gathered", F.lit(0.0)) + F.col("dm_val") / n)
+                ).alias("rank"),
+                cur["rank"].alias("_rank"),
             )
-            obs = Observation("prw_iter")
-            nxt = sever(
-                nxt.observe(
-                    obs,
-                    F.max(F.abs(F.col("rank") - F.col("_old"))).alias("diff"),
-                    F.sum(
-                        F.when(~F.col("has_out"), F.col("rank")).otherwise(F.lit(0.0))
-                    ).alias("dm"),
-                )
-            )
-            got = obs.get
-            diff = got["diff"]
-            dm = got["dm"] or 0.0
-            release(prev)
-            prev = nxt
-            state = nxt.drop("_old")
-            iterations = it
-            converged = diff is not None and diff < tol
-            metrics.append(
-                {"iteration": it, "diff": diff, "dangling_mass": dm,
-                 "wall_s": time.time() - t0}
-            )
-            if converged:
-                break
-    release(pe)
+        )
+
+    def report(first: int, rows: list[dict], wall: float, _stopped: bool) -> list[dict]:
+        return [
+            {
+                "iteration": r["iteration"] + 1,
+                "diff": r["diff"],
+                "dangling_mass": r["dangling_mass"],
+                "wall_s": time.time() - t0,
+            }
+            for r in rows
+        ]
+
+    fp = fixpoint(
+        pe,
+        m=graph.m,
+        n=n,
+        init=init,
+        step=step,
+        scalars=[
+            max_change("rank"),
+            F.sum(F.when(~F.col("has_out"), F.col("rank")).otherwise(0.0)).alias(
+                "dangling_mass"
+            ),
+        ],
+        stop=lambda r: r["diff"] < tol,
+        chain=DIFF_CHAIN,
+        max_iter=max_iter,
+        report=report,
+        plan=decay_chain(tol),
+    )
     return WeightedPageRankResult(
-        df=state.select("id", "rank"),
-        iterations=iterations,
-        converged=converged,
+        df=fp.state.select("id", "rank"),
+        iterations=fp.iterations,
+        converged=fp.converged,
         wall_seconds=time.time() - t0,
-        metrics=metrics,
+        metrics=fp.metrics,
     )

@@ -15,25 +15,23 @@ S = V this degenerates to exactly pagerank.py's recurrence.
 
 Spark shape per round — the same skeleton as pagerank.py (one m-row
 SHUFFLE_HASH scatter join, one partial+final SUM gather, one apply
-join back onto the skeleton) with one difference: the teleport is a
-per-vertex `base` COLUMN carried on the state (joined in once at
-init), not a scalar literal, so the loop plan stays byte-identical
-across iterations (Janino cache) with no per-round driver scalar —
-the dangling mass rides the convergence Observation exactly as in
-pagerank.py.
+join back onto the skeleton, an in-plan one-row dangling-mass
+broadcast) with one difference: the teleport is a per-vertex `base`
+COLUMN carried on the state (joined in once at init), not a scalar
+literal, so the loop plan stays byte-identical across iterations
+(Janino cache). The loop is linkgraph/loop.py's driver.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
-from linkgraph.checkpoint import CheckpointManager, release, sever
-from linkgraph.session import conf_override
+from linkgraph.checkpoint import CheckpointManager
+from linkgraph.loop import DIFF_CHAIN, decay_chain, fixpoint, max_change
 
 
 @dataclass
@@ -56,129 +54,76 @@ def ppr(
 ) -> PPRResult:
     if not sources:
         raise ValueError("ppr needs a non-empty seed set")
-    edges = graph.edges
-    spark = edges.sparkSession
-    base_val = 1.0 / len(sources)
+    spark = graph.edges.sparkSession
 
-    start_iter = 0
-    state = None
-    if ckpt is not None:
-        last = ckpt.last_complete()
-        if last is not None:
-            loaded, _, rec = ckpt.load(spark, last)
-            state = sever(loaded)
-            start_iter = last + 1
-            if rec.get("converged"):
-                return PPRResult(
-                    state.select("id", "rank"), last + 1, True, 0.0, [rec]
-                )
-    if state is None:
+    def init() -> DataFrame:
         # seed indicator joined in ONCE; the loop never touches it again
         seeds = F.broadcast(
             spark.createDataFrame([(int(s),) for s in sources], "id long")
             .distinct()
-            .withColumn("base", F.lit(base_val))
+            .withColumn("base", F.lit(1.0 / len(sources)))
         )
-        state = sever(
-            graph.degrees.join(seeds, "id", "left")
+        base = F.coalesce(F.col("base"), F.lit(0.0))
+        return graph.degrees.join(seeds, "id", "left").select(
+            "id", "out_deg", base.alias("base"), base.alias("rank")
+        )
+
+    def step(cur: DataFrame, edges: DataFrame) -> DataFrame:
+        dm = cur.where(F.col("out_deg") == 0).agg(
+            F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dm_val")
+        )
+        contribs = edges.join(
+            cur.where(F.col("out_deg") > 0)
             .select(
-                "id",
-                "out_deg",
-                F.coalesce(F.col("base"), F.lit(0.0)).alias("base"),
-                F.coalesce(F.col("base"), F.lit(0.0)).alias("rank"),
+                F.col("id").alias("src"),
+                (F.col("rank") / F.col("out_deg")).alias("w"),
+            )
+            .hint("shuffle_hash"),
+            "src",
+        )
+        gathered = contribs.groupBy("dst").agg(F.sum("w").alias("gathered"))
+        return (
+            cur.join(gathered.hint("shuffle_hash"), cur["id"] == gathered["dst"], "left")
+            .crossJoin(F.broadcast(dm))
+            .select(
+                cur["id"],
+                cur["out_deg"],
+                cur["base"],
+                (
+                    F.lit(1.0 - damping) * F.col("base")
+                    + F.lit(damping)
+                    * (
+                        F.coalesce(F.col("gathered"), F.lit(0.0))
+                        + F.col("dm_val") * F.col("base")
+                    )
+                ).alias("rank"),
+                cur["rank"].alias("_rank"),
             )
         )
 
-    t0 = time.time()
-    # dangling mass of the CURRENT state; refreshed by the round's
-    # Observation so the loop does exactly one collect per round
-    dm = (
-        state.where(F.col("out_deg") == 0).agg(F.sum("rank")).first()[0] or 0.0
+    fp = fixpoint(
+        graph.edges,
+        m=graph.m,
+        n=graph.n,
+        init=init,
+        step=step,
+        scalars=[
+            max_change("rank"),
+            F.sum(F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(0.0)).alias(
+                "dangling_mass"
+            ),
+        ],
+        stop=lambda r: r["diff"] < tol,
+        chain=DIFF_CHAIN,
+        max_iter=max_iter,
+        plan=decay_chain(tol),
+        ckpt=ckpt,
+        ckpt_every=ckpt_every,
     )
-
-    iterations = start_iter
-    converged = False
-    prev_ckpt = state
-    metrics: list[dict] = []
-    loop_conf = {
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.sql.adaptive.enabled": "false",
-    }
-    with conf_override(spark, loop_conf):
-        for rnd in range(start_iter, max_iter):
-            it_t0 = time.time()
-            # dangling mass as a broadcast 1-row column (byte-identical
-            # plans across rounds, same rationale as pagerank.py)
-            dm_df = spark.createDataFrame([(float(dm),)], "dm_val double")
-            contribs = edges.join(
-                state.where(F.col("out_deg") > 0)
-                .select(
-                    F.col("id").alias("src"),
-                    (F.col("rank") / F.col("out_deg")).alias("w"),
-                )
-                .hint("shuffle_hash"),
-                "src",
-            )
-            gathered = contribs.groupBy("dst").agg(F.sum("w").alias("gathered"))
-            nxt = (
-                state.join(
-                    gathered.hint("shuffle_hash"),
-                    state["id"] == gathered["dst"],
-                    "left",
-                )
-                .crossJoin(F.broadcast(dm_df))
-                .select(
-                    state["id"],
-                    state["out_deg"],
-                    state["base"],
-                    (
-                        F.lit(1.0 - damping) * F.col("base")
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(F.col("gathered"), F.lit(0.0))
-                            + F.col("dm_val") * F.col("base")
-                        )
-                    ).alias("rank"),
-                    state["rank"].alias("_old"),
-                )
-            )
-            obs = Observation("ppr_iter")
-            new_state = sever(
-                nxt.observe(
-                    obs,
-                    F.max(F.abs(F.col("rank") - F.col("_old"))).alias("diff"),
-                    F.sum(
-                        F.when(F.col("out_deg") == 0, F.col("rank")).otherwise(
-                            F.lit(0.0)
-                        )
-                    ).alias("dm"),
-                ).drop("_old")
-            )
-            got = obs.get
-            diff = float(got["diff"] or 0.0)
-            dm = float(got["dm"] or 0.0)
-            release(prev_ckpt)
-            prev_ckpt = new_state
-            state = new_state
-            iterations = rnd + 1
-            converged = diff < tol
-            rec = {
-                "iteration": rnd,
-                "diff": diff,
-                "dangling_mass": dm,
-                "wall_s": time.time() - it_t0,
-                "converged": converged,
-            }
-            metrics.append(rec)
-            if ckpt is not None and (converged or (rnd + 1) % ckpt_every == 0):
-                ckpt.save(rnd, state, metrics=rec)
-            if converged:
-                break
-
     return PPRResult(
-        df=state.select("id", "rank"),
-        iterations=iterations,
-        converged=converged,
-        wall_seconds=time.time() - t0,
-        metrics=metrics,
+        df=fp.state.select("id", "rank"),
+        iterations=fp.iterations,
+        converged=fp.converged,
+        wall_seconds=fp.wall_seconds,
+        metrics=fp.metrics,
     )

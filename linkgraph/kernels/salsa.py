@@ -31,21 +31,20 @@ one m-row SHUFFLE_HASH-hinted join against the src-laid-out edge cache
 with the degree ratio computed on the n-row state side, combined by a
 partial+final SUM (two-stage skew-safe), and each L1 norm is an
 in-plan one-row aggregate broadcast into the normalization — no
-driver-side scalar mid-round. The convergence diff rides the round's
-lineage-severing job as an Observation: one job per round.
+driver-side scalar mid-round. The loop is linkgraph/loop.py's driver.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
-from linkgraph.checkpoint import CheckpointManager, release, sever
-from linkgraph.session import conf_override
+from linkgraph.checkpoint import CheckpointManager
+from linkgraph.kernels.hits import _normalized
+from linkgraph.loop import DIFF_CHAIN, decay_chain, fixpoint, max_change
 
 
 @dataclass
@@ -57,28 +56,49 @@ class SALSAResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-def _l1_normalized(raw: DataFrame, base: DataFrame, key: str, out: str) -> DataFrame:
-    """L1-normalize `raw`'s gather sums and left-join onto `base` by id.
-
-    raw  : (key, raw double) degree-weighted gather sums (all ≥ 0)
-    base : state rows keyed by `id` (all vertices)
-    The norm is an in-plan one-row aggregate broadcast into the
-    projection — a subquery stage, never a driver scalar.
-    """
-    norm = raw.agg(F.coalesce(F.sum("raw"), F.lit(0.0)).alias("nv"))
-    score = (
-        F.when(
-            F.col("nv") > 0,
-            F.coalesce(F.col("raw"), F.lit(0.0)) / F.col("nv"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias(out)
+def _step(cur: DataFrame, edges: DataFrame) -> DataFrame:
+    olds = cur.select(
+        "id",
+        "out_deg",
+        "in_deg",
+        F.col("hub").alias("_hub"),
+        F.col("auth").alias("_auth"),
     )
-    keep = [base[c] for c in base.columns if c != out]
-    return (
-        base.join(raw.hint("shuffle_hash"), base["id"] == raw[key], "left")
-        .crossJoin(F.broadcast(norm))
-        .select(*keep, score)
+    # forward gather: auth sums keyed by dst; the hub/outdeg ratio is
+    # computed on the n-row state side (every src has out_deg ≥ 1 — no
+    # guard needed)
+    a_raw = (
+        edges.join(
+            cur.where(F.col("out_deg") > 0)
+            .select(
+                F.col("id").alias("src"),
+                (F.col("hub") / F.col("out_deg")).alias("w"),
+            )
+            .hint("shuffle_hash"),
+            "src",
+        )
+        .groupBy("dst")
+        .agg(F.sum("w").alias("raw"))
+    )
+    s1 = _normalized(a_raw, olds, "dst", "auth", l1=True)
+    # transpose gather: hub sums keyed by src, reading the round's
+    # already-normalized auth (two-phase update); every dst has
+    # in_deg ≥ 1
+    h_raw = (
+        edges.join(
+            s1.where(F.col("in_deg") > 0)
+            .select(
+                F.col("id").alias("dst"),
+                (F.col("auth") / F.col("in_deg")).alias("w"),
+            )
+            .hint("shuffle_hash"),
+            "dst",
+        )
+        .groupBy("src")
+        .agg(F.sum("w").alias("raw"))
+    )
+    return _normalized(h_raw, s1, "src", "hub", l1=True).select(
+        "id", "out_deg", "in_deg", "hub", "auth", "_hub", "_auth"
     )
 
 
@@ -94,120 +114,31 @@ def salsa(
     With a CheckpointManager the (id, hub, auth, out_deg, in_deg)
     state is durable every `ckpt_every` rounds and on convergence;
     resume continues from the last complete round (hits lifecycle)."""
-    edges = graph.edges
-
-    start_iter = 0
-    state = None
-    if ckpt is not None:
-        last = ckpt.last_complete()
-        if last is not None:
-            loaded, _, rec = ckpt.load(edges.sparkSession, last)
-            state = sever(loaded)
-            start_iter = last + 1
-            if rec.get("converged"):
-                return SALSAResult(
-                    state.select("id", "hub", "auth"), last + 1, True, 0.0, [rec]
-                )
-    if state is None:
+    fp = fixpoint(
+        graph.edges,
+        m=graph.m,
+        n=graph.n,
         # degrees ride the state so the hot loop never re-joins them
-        state = sever(
-            graph.degrees.select(
-                "id",
-                "out_deg",
-                "in_deg",
-                F.lit(1.0).alias("hub"),
-                F.lit(1.0).alias("auth"),
-            )
-        )
-
-    t0 = time.time()
-    iterations = start_iter
-    converged = False
-    prev_ckpt = state
-    metrics: list[dict] = []
-    # fixed plan shapes + shuffled-hash over sort-merge (pagerank.py
-    # rationale: the edge cache is src-laid-out, AQE re-plans cost
-    # driver latency per round)
-    loop_conf = {
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.sql.adaptive.enabled": "false",
-    }
-    with conf_override(edges.sparkSession, loop_conf):
-        for rnd in range(start_iter, max_iter):
-            it_t0 = time.time()
-            olds = state.select(
-                "id",
-                "out_deg",
-                "in_deg",
-                F.col("hub").alias("_oldhub"),
-                F.col("auth").alias("_oldauth"),
-            )
-            # forward gather: auth sums keyed by dst; the hub/outdeg
-            # ratio is computed on the n-row state side (every src has
-            # out_deg ≥ 1 — no guard needed)
-            a_raw = (
-                edges.join(
-                    state.where(F.col("out_deg") > 0)
-                    .select(
-                        F.col("id").alias("src"),
-                        (F.col("hub") / F.col("out_deg")).alias("w"),
-                    )
-                    .hint("shuffle_hash"),
-                    "src",
-                )
-                .groupBy("dst")
-                .agg(F.sum("w").alias("raw"))
-            )
-            s1 = _l1_normalized(a_raw, olds, "dst", "auth")
-            # transpose gather: hub sums keyed by src, reading the
-            # round's already-normalized auth (two-phase update);
-            # every dst has in_deg ≥ 1
-            h_raw = (
-                edges.join(
-                    s1.where(F.col("in_deg") > 0)
-                    .select(
-                        F.col("id").alias("dst"),
-                        (F.col("auth") / F.col("in_deg")).alias("w"),
-                    )
-                    .hint("shuffle_hash"),
-                    "dst",
-                )
-                .groupBy("src")
-                .agg(F.sum("w").alias("raw"))
-            )
-            s2 = _l1_normalized(h_raw, s1, "src", "hub")
-            obs = Observation("salsa_iter")
-            new_state = sever(
-                s2.observe(
-                    obs,
-                    (
-                        F.max(F.abs(F.col("hub") - F.col("_oldhub")))
-                        + F.max(F.abs(F.col("auth") - F.col("_oldauth")))
-                    ).alias("diff"),
-                ).select("id", "out_deg", "in_deg", "hub", "auth")
-            )
-            diff = float(obs.get["diff"] or 0.0)
-            release(prev_ckpt)
-            prev_ckpt = new_state
-            state = new_state
-            iterations = rnd + 1
-            converged = diff < tol
-            rec = {
-                "iteration": rnd,
-                "diff": diff,
-                "wall_s": time.time() - it_t0,
-                "converged": converged,
-            }
-            metrics.append(rec)
-            if ckpt is not None and (converged or (rnd + 1) % ckpt_every == 0):
-                ckpt.save(rnd, state, metrics=rec)
-            if converged:
-                break
-
+        init=lambda: graph.degrees.select(
+            "id",
+            "out_deg",
+            "in_deg",
+            F.lit(1.0).alias("hub"),
+            F.lit(1.0).alias("auth"),
+        ),
+        step=_step,
+        scalars=[max_change("hub", "auth")],
+        stop=lambda r: r["diff"] < tol,
+        chain=DIFF_CHAIN,
+        max_iter=max_iter,
+        plan=decay_chain(tol),
+        ckpt=ckpt,
+        ckpt_every=ckpt_every,
+    )
     return SALSAResult(
-        df=state.select("id", "hub", "auth"),
-        iterations=iterations,
-        converged=converged,
-        wall_seconds=time.time() - t0,
-        metrics=metrics,
+        df=fp.state.select("id", "hub", "auth"),
+        iterations=fp.iterations,
+        converged=fp.converged,
+        wall_seconds=fp.wall_seconds,
+        metrics=fp.metrics,
     )

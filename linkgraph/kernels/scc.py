@@ -60,6 +60,7 @@ from pyspark.sql import functions as F
 from linkgraph.build import Graph, build_graph_from_edges
 from linkgraph.checkpoint import CheckpointManager, release, sever
 from linkgraph.frontier import edge_map
+from linkgraph.loop import loop_width
 from linkgraph.session import conf_override
 
 
@@ -158,25 +159,9 @@ def scc(
                     res_verts.withColumnRenamed("id", "dst"), "dst", "left_semi"
                 )
             ).select("src", "dst")
-            # residual cache partitioned to the data (pagerank.py r6
-            # rule; the full graph's m bounds the residual)
-            import math
-
-            p_res = min(
-                graph.edges.rdd.getNumPartitions(),
-                max(
-                    4,
-                    math.ceil(
-                        graph.m
-                        / int(
-                            os.environ.get(
-                                "LINKGRAPH_PR_EDGE_ROWS_PER_PART",
-                                str(64 * 1024),
-                            )
-                        )
-                    ),
-                ),
-            )
+            # residual cache partitioned to the data (loop.loop_width;
+            # the full graph's m bounds the residual)
+            p_res = min(graph.edges.rdd.getNumPartitions(), loop_width(graph.m))
             g_res = build_graph_from_edges(
                 res_edges,
                 vertices=res_verts,

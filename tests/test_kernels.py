@@ -4,6 +4,8 @@ asymmetric-pin."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -35,7 +37,9 @@ from tests.oracles import (
     triangle_count_numpy,
 )
 
-REFERENCE_FIXTURE = "/root/reference/test-graph.input"
+# FIXTURES.md §2a: the reference's test-graph.input (4 nodes, edges
+# {0→1, 2→3}), vendored as AdjacencyGraph text
+REFERENCE_FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "test-graph.input")
 
 
 def _graph(spark, edges_pdf: pd.DataFrame, n: int):
@@ -230,6 +234,9 @@ def test_cc_takes_both_directions_in_one_run(spark, monkeypatch):
     res = connected_components(g)
     modes = {m["mode"] for m in res.metrics}
     assert modes == {"dense-pull", "sparse-push"}, res.metrics
+    # the mode follows the chain-start estimate dispatch used
+    for m in res.metrics:
+        assert (m["mode"] == "dense-pull") == (m["dispatch_volume"] > g.threshold), m
     got = res.df.toPandas().sort_values("id")["comp"].to_numpy()
     expected = cc_numpy(31, pdf["src"].to_numpy(), pdf["dst"].to_numpy())
     np.testing.assert_array_equal(got, expected)
@@ -247,7 +254,8 @@ def test_bfs_records_dispatch_mode(rmat_graph):
 def test_pagerank_check_every_parity(rmat_graph):
     """check_every=K chains K rounds per job with in-plan dangling
     mass; executed-iteration ranks must be bit-comparable to the
-    round-per-job path (same recurrence, same float op order)."""
+    round-per-job path (same recurrence, same float op order); the
+    salted gather's match up to summation order."""
     from linkgraph.kernels import pagerank
 
     g, _, _ = rmat_graph
@@ -259,6 +267,9 @@ def test_pagerank_check_every_parity(rmat_graph):
     # accounted exactly once across the chain records
     assert sum(m["iterations_in_block"] for m in blocked.metrics) == 6
     np.testing.assert_allclose(got["rank"], base["rank"], atol=1e-15, rtol=0)
+    # salted gather: GROUP BY (dst, pmod(src, salt)) first, then dst
+    salted = pagerank(g, tol=0.0, max_iter=6, salt=4).df.orderBy("id").toPandas()
+    np.testing.assert_allclose(salted["rank"], base["rank"], atol=1e-15, rtol=0)
 
     # convergence detection at block boundaries: tol reached mid-block
     # -> stops at the block end with converged=True
