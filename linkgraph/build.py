@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from linkgraph.extract import edges_from_pages
+from linkgraph.loop import loop_width
 
 EDGES_SCHEMA = "src long, dst long"
 
@@ -165,6 +166,14 @@ def build_graph_from_pages(
     return g
 
 
+def _csr_layout(edges: DataFrame, p: int) -> DataFrame:
+    return (
+        edges.repartition(p, "src")
+        .sortWithinPartitions("src", "dst")
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+
+
 def build_graph_from_edges(
     edges: DataFrame,
     vertices: DataFrame | None = None,
@@ -174,7 +183,9 @@ def build_graph_from_edges(
 ) -> Graph:
     """Edge list -> Graph. Dedups edges, derives degrees, persists the
     edge table hash-partitioned by src (the 'CSR edge table' — the
-    bucketed layout the reference's CSR build S2 maps to).
+    bucketed layout the reference's CSR build S2 maps to) at
+    `num_partitions`, by default at its data-sized loop width, never
+    wider than the default parallelism.
 
     If `vertices` is None the vertex set is ids 0..n-1 when `n` given,
     else the distinct ids appearing in edges.
@@ -184,12 +195,14 @@ def build_graph_from_edges(
     edges = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
     if not assume_deduped:
         edges = edges.distinct()
-    edges = (
-        edges.repartition(p, "src")
-        .sortWithinPartitions("src", "dst")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    edges = _csr_layout(edges, p)
     m = edges.count()
+    if num_partitions is None and loop_width(m) < p:
+        # lay the cache out for its size, so the loops run on it as is
+        # instead of re-caching it on every call
+        wide, edges = edges, _csr_layout(edges, loop_width(m))
+        edges.count()
+        wide.unpersist()
     if vertices is None:
         if n is not None:
             vertices = spark.range(n).select(F.col("id").cast("long"))

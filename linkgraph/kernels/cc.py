@@ -86,8 +86,9 @@ def connected_components(
     sym_edges = None
     t0 = time.time()
     if symmetrize_edges:
-        # partition the symmetrized cache to the DATA (loop.loop_width),
-        # never wider than the source cache
+        # partition the symmetrized cache to the DATA (loop.loop_width,
+        # one partition below 64k rows), never wider than the source
+        # cache, which the build already sized to the data
         p = min(graph.edges.rdd.getNumPartitions(), loop_width(2 * graph.m))
         rev = graph.edges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst")

@@ -8,15 +8,27 @@ round's scalars; :func:`fixpoint` owns everything else, once:
 
 * Resume. ``last_complete`` -> ``load`` -> ``sever``; a saved record
   the stop predicate accepts returns at once.
-* Edge re-cache. The loop's edge table is cached once per call at
-  ``loop_width(m)`` (~64k rows per partition) when the given cache is
-  wider, or when the table is not cached at all. Per-task dispatch
-  dominates few-ms tasks: on the 31-round sf0.1 pagerank leg this
-  measured 20.3 s -> 4.5 s including the re-cache pass (P=32 -> 10;
-  P=16: 5.4 s, P=6: 4.3 s), and 1.13 -> 0.94 s on the 3-round
-  labelprop leg. The init state is aligned to that width inside round
-  1's plan; otherwise the wider init layout wins the round-1 join
-  alignment and every later round re-exchanges back up to it.
+* Edge re-cache. The loop runs at ``loop_width(m)`` =
+  ceil(m / 64k) partitions, with no floor. ``build_graph_from_edges``
+  lays its cache out at that width by default, so a loop runs on the
+  caller's cache as is; a wider cache, or an uncached table, is cached
+  once per call at that width. Per-task dispatch dominates few-ms
+  tasks: on the 31-round sf0.1 pagerank leg this measured 20.3 s ->
+  4.5 s including the re-cache pass (P=32 -> 10; P=16: 5.4 s, P=6:
+  4.3 s), and 1.13 -> 0.94 s on the 3-round labelprop leg. Below 64k
+  edges a round runs one task per stage: at the old floor of 4
+  partitions, 10 pagerank rounds on R-MAT scale 11 (13.9k edges) took
+  46 stages and 148 tasks, and 16 rounds on a 2,000-page crawl (4.9k
+  edges) 70 stages and 226 tasks; at width 1 they take 16 stages and
+  25 tasks, and 21 stages and 39 tasks (local[4]).
+* Init layout. A wider init state is coalesced to the width, which
+  leaves its layout unknown, so round 1's own joins lay it out by
+  their own keys. Otherwise the wider init layout wins the round-1
+  join alignment and every later round re-exchanges back up to it.
+  A ``repartition("id")`` would key the layout on an attribute
+  without the SQL round's ``cur`` qualifier, which Spark cannot map
+  onto a second reference of the checkpointed state: that costs one
+  n-row scatter Exchange per round.
 * Loop conf. AQE is off unless the kernel was called with
   ``adaptive=True``: plan shapes are fixed, and AQE's per-stage
   re-planning cost 0.3-0.7 s of driver latency per round (25-35 % of
@@ -82,7 +94,7 @@ _VIEW_SEQ = itertools.count()
 
 def loop_width(m: int) -> int:
     """Data-sized partition count for an m-row edge table."""
-    return max(4, math.ceil(m / EDGE_ROWS_PER_PART))
+    return max(1, math.ceil(m / EDGE_ROWS_PER_PART))
 
 
 def view_names(prefix: str) -> tuple[str, str]:
@@ -238,8 +250,8 @@ def fixpoint(
         if views is not None:
             loop_edges.createOrReplaceTempView(views[0])
         cur = state
-        if state.rdd.getNumPartitions() != width:
-            cur = state.repartition(width, "id")
+        if state.rdd.getNumPartitions() > width:
+            cur = state.coalesce(width)
         it = start
         converged = False
         metrics: list[dict] = []

@@ -13,7 +13,8 @@ from linkgraph.build import (
     read_graph,
     write_graph,
 )
-from linkgraph.datagen import PagesSpec, expected_edges, generate_pages
+from linkgraph.datagen import PagesSpec, expected_edges, generate_pages, rmat_edges
+from linkgraph.loop import EDGE_ROWS_PER_PART, loop_width
 
 
 def test_assign_dense_ids_dense_and_deterministic(spark):
@@ -26,6 +27,22 @@ def test_assign_dense_ids_dense_and_deterministic(spark):
     m1 = dict(zip(ids1["url"], ids1["id"]))
     m2 = dict(zip(ids2["url"], ids2["id"]))
     assert m1 == m2  # deterministic given the url set and P
+
+
+def test_edge_cache_is_sized_to_the_data(spark):
+    """Below EDGE_ROWS_PER_PART edges the default build caches the edge
+    table in one partition, the loop width, so the loops run on it as
+    is; an explicit num_partitions is kept."""
+    edges = spark.createDataFrame(rmat_edges(scale=8, seed=3), "src long, dst long")
+    g = build_graph_from_edges(edges)
+    assert g.m < EDGE_ROWS_PER_PART
+    assert g.edges.rdd.getNumPartitions() == 1
+    assert loop_width(g.m) == 1
+    g4 = build_graph_from_edges(edges, num_partitions=4)
+    assert g4.m == g.m
+    assert g4.edges.rdd.getNumPartitions() == 4
+    g.unpersist()
+    g4.unpersist()
 
 
 def test_build_graph_from_pages(spark):

@@ -51,13 +51,13 @@ def _result_rdd(df: DataFrame) -> int:
     return int(df._jdf.queryExecution().analyzed().collectLeaves().head().rdd().id())
 
 
-@pytest.mark.parametrize("num_partitions", [4, 8])
+@pytest.mark.parametrize("num_partitions", [1, 4])
 def test_pagerank_keeps_caller_edge_cache(spark, num_partitions):
-    """At 4 partitions the data-sized loop width (4) is not below the
-    cache's, so the loop runs on graph.edges itself; at 8 the loop
-    re-caches. Either way the caller's cache survives two calls, and
-    the repeat call runs no more jobs than the first (an evicted cache
-    recomputes the edge lineage every round)."""
+    """At 1 partition the cache is at the data-sized loop width (1), so
+    the loop runs on graph.edges itself; at 4 the loop re-caches.
+    Either way the caller's cache survives two calls, and the repeat
+    call runs no more jobs than the first (an evicted cache recomputes
+    the edge lineage every round)."""
     g = _rmat_graph(spark, num_partitions)
     tracker = spark.sparkContext.statusTracker()
     jobs = []

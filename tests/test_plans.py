@@ -10,12 +10,17 @@ no AQE runtime re-plan has happened yet.
 
 from __future__ import annotations
 
+import importlib
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from linkgraph.build import build_graph_from_edges
+from linkgraph.datagen import rmat_edges
 from linkgraph.frontier import edge_map
+from linkgraph.kernels import label_propagation, pagerank
+from linkgraph.loop import loop_width
 
 
 def _plan(df) -> str:
@@ -626,6 +631,97 @@ def test_sever_loop_stays_flat(spark):
     # flat runs sit within noise of 1x
     assert tail < 8 * head + 0.5, (head, tail, walls)
     g.unpersist()
+
+
+# kernel module -> a call that builds >= 3 rounds in its first chain
+ROUND_KERNELS = {
+    "linkgraph.kernels.pagerank": lambda g: pagerank(g, tol=0.0, max_iter=4),
+    "linkgraph.kernels.labelprop": lambda g: label_propagation(g, max_iter=4),
+}
+
+
+def _round_exchanges(monkeypatch, module: str, g, rnd: int = 3) -> list[str]:
+    """The output partitionings of the Exchanges in the executed plan
+    of round ``rnd``, captured live by wrapping the kernel module's
+    ``fixpoint`` step. The walk follows plan children only, so the
+    plan under a cached InMemoryRelation (an inner child of its scan)
+    is not counted."""
+    mod = importlib.import_module(module)
+    real = mod.fixpoint
+    plans = []
+
+    def fixpoint(edges, *, step, **kw):
+        def probe(cur, e):
+            out = step(cur, e)
+            plans.append(out._jdf.queryExecution().executedPlan())
+            return out
+
+        return real(edges, step=probe, **kw)
+
+    monkeypatch.setattr(mod, "fixpoint", fixpoint)
+    ROUND_KERNELS[module](g).df.count()
+    out, todo = [], [plans[rnd - 1]]
+    while todo:
+        node = todo.pop()
+        if "Exchange" in node.nodeName():
+            out.append(node.outputPartitioning().toString())
+        it = node.children().iterator()
+        while it.hasNext():
+            todo.append(it.next())
+    return sorted(out)
+
+
+@pytest.fixture(scope="module")
+def width2_graph(spark):
+    g = build_graph_from_edges(
+        spark.createDataFrame(rmat_edges(scale=14, seed=3), "src long, dst long")
+    )
+    assert (g.m, loop_width(g.m), g.edges.rdd.getNumPartitions()) == (119_821, 2, 2)
+    yield g
+    g.unpersist()
+
+
+@pytest.mark.parametrize(
+    "module, expected",
+    [
+        ("linkgraph.kernels.labelprop", []),
+        ("linkgraph.kernels.pagerank", ["BroadcastPartitioning(IdentityBroadcastMode)"]),
+    ],
+)
+def test_round_plan_at_width_one_has_no_hash_exchange(
+    spark, monkeypatch, module, expected
+):
+    """Below 64k edges the build and the loop use one partition, which
+    satisfies every clustered distribution: a steady-state round has no
+    scatter, gather or apply exchange. pagerank keeps only its one-row
+    dangling-mass broadcast; labelprop has no exchange at all."""
+    g = build_graph_from_edges(
+        spark.createDataFrame(rmat_edges(scale=8, seed=3), "src long, dst long")
+    )
+    assert loop_width(g.m) == 1
+    assert _round_exchanges(monkeypatch, module, g) == expected
+    g.unpersist()
+
+
+def test_pagerank_round_plan_at_width_two(spark, monkeypatch, width2_graph):
+    """At width 2 a steady-state pagerank round exchanges only the
+    gather (hash on dst) and the one-row dangling mass (SinglePartition,
+    then its broadcast): the scatter join reads the state in place, no
+    n-row exchange keyed on src."""
+    ex = _round_exchanges(monkeypatch, "linkgraph.kernels.pagerank", width2_graph)
+    assert len(ex) == 3, ex
+    assert ex[0] == "BroadcastPartitioning(IdentityBroadcastMode)", ex
+    assert ex[1] == "SinglePartition", ex
+    assert ex[2].startswith("hashpartitioning(dst#") and ex[2].endswith(", 2)"), ex
+
+
+def test_labelprop_round_plan_at_width_two(spark, monkeypatch, width2_graph):
+    """At width 2 a labelprop round exchanges only on its gather keys
+    (dst, then (dst, label)); the scatter join reads the state in
+    place."""
+    ex = _round_exchanges(monkeypatch, "linkgraph.kernels.labelprop", width2_graph)
+    assert len(ex) == 2, ex
+    assert all(x.startswith("hashpartitioning(dst#") for x in ex), ex
 
 
 def test_committed_plan_audit_is_clean():
