@@ -179,8 +179,16 @@ def sever(df: DataFrame) -> DataFrame:
     per-row state, wrap it in an identity groupBy on its key.
     pagerank's loop is naturally immune because its only derived
     branch passes the gather aggregation; louvain needed an explicit
-    identity-aggregate (kernels/louvain.py `vstate`). Pinned by
-    tests/test_plans.py::test_sever_loop_stays_flat."""
+    identity-aggregate (kernels/louvain.py `vstate`). The second
+    measured case was trussness: a support recompute that oriented
+    the severed edge list through a plain unionAll fed two
+    un-aggregated state paths into both its wedge and closing joins,
+    and rounds grew ~5× each (1.3 s → 199 s by round 14 on 250
+    edges). The cure is the dedupe (a distinct aggregation) inside
+    kernels/triangles.py `oriented_edges`, which every triangle-family
+    loop now enumerates through. Pinned by
+    tests/test_plans.py::test_sever_loop_stays_flat and
+    tests/test_kernels.py::test_trussness_matches_sequential_peeling."""
     return df.localCheckpoint(eager=True)
 
 

@@ -6,7 +6,8 @@ pagerank_delta  faithful reproduction of the reference's frontier PR
 cc              connected components via hash-min label propagation
 bfs             frontier BFS (levels + min-parent tree)
 labelprop       community label propagation (most-frequent in-neighbor label)
-triangles       triangle count via degree-ordered edge-intersection join
+triangles       triangle count via degree-ordered edge-intersection join;
+                the triangle family's one enumerator (`triangles`)
 msbfs           multi-source BFS (all lanes in one frontier loop) +
                 sampled harmonic + closeness centrality rollups
 coreness        full k-core decomposition: per-vertex core numbers +
@@ -55,7 +56,7 @@ scc             strongly connected components (trim + forward-max
 bowtie          Broder bow-tie decomposition (CORE/IN/OUT/OTHER from
                 the largest SCC + two multi-root reachability sweeps)
 local_clustering per-vertex triangle counts + Watts-Strogatz local
-                clustering coefficient (degree-ordered orientation)
+                clustering coefficient (over triangles.py's enumerator)
 link_prediction common-neighbors + Adamic-Adar scores for non-adjacent
                 pairs (wedge self-join, center-degree skew guard)
 densest_subgraph 2(1+eps)-approx densest subgraph by parallel peeling
@@ -66,8 +67,8 @@ degree_distribution log2-binned in/out-degree histogram (exact
                 integer binning via length(bin(deg)) - 1)
 power_law_alpha Hill MLE tail exponent of the degree distribution
                 (Broder WWW'00 reports ~2.1 in / ~2.72 out)
-ktruss          k-truss decomposition (edge-support peeling over the
-                degree-ordered triangle enumeration, Cohen 2008)
+ktruss          k-truss decomposition (edge-support peeling over
+                triangles.py's edge_support, Cohen 2008)
 ego_net         radius-k ego network + induced subgraph extraction
                 (bounded frontier BFS, out/in/both walks)
 maximal_matching parallel greedy maximal matching with deterministic
@@ -75,7 +76,7 @@ maximal_matching parallel greedy maximal matching with deterministic
 minimum_spanning_forest Borůvka MSF (unique under the strict (w,u,v)
                 edge order; min-edge select + pointer-jump contraction)
 edge_jaccard    per-edge neighborhood Jaccard / embeddedness
-                (common neighbors via the truss support enumeration)
+                (common neighbors = triangles.py's edge_support)
 pagerank_weighted rank distributed proportionally to edge weight
                 (href multiplicity on host graphs; row-normalized once)
 resolve_redirects redirect-chain resolution over the functional crawl

@@ -6,14 +6,14 @@ refinement of the engine's global triangle count (SURVEY §2.6; the
 reference engine at /root/reference/src has no per-vertex variant,
 this extends its algorithm family on the same edge table).
 
-Algorithm: reuse the degree-ordered orientation from
-kernels/triangles.py (each triangle u<v<w in (deg, id) rank order is
-materialized exactly once as a closed wedge), then credit each of the
-triangle's three corners with +1 via a 3-way explode + groupBy — one
-extra narrow shuffle over the triangle set, which is tiny relative to
-the edge set on web-shaped graphs. Degrees are distinct-neighbor
-degrees (symmetrize() dedupes), so C(v) matches the textbook
-definition on multigraph inputs too.
+Algorithm: enumerate the triangles with the triangle family's one
+enumerator, kernels/triangles.py `triangles` (each triangle u<v<w in
+(deg, id) rank order is materialized exactly once as a closed wedge),
+then credit each of the triangle's three corners with +1 via a 3-way
+explode + groupBy — one extra narrow shuffle over the triangle set,
+which is tiny relative to the edge set on web-shaped graphs. Degrees
+are distinct-neighbor degrees (symmetrize() dedupes), so C(v) matches
+the textbook definition on multigraph inputs too.
 
 Scale notes: the orientation bounds per-vertex wedge work to
 ~sqrt(m) even at hub vertices (the triangles.py skew-killer), the
@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.build import Graph, symmetrize
 from linkgraph.checkpoint import sever
-from linkgraph.kernels.triangles import oriented_edges
+from linkgraph.kernels.triangles import oriented_edges, triangles
 
 
 @dataclass
@@ -54,28 +54,11 @@ def local_clustering(graph: Graph) -> ClusteringResult:
         F.count(F.lit(1)).alias("deg")
     )
 
-    o = oriented_edges(graph.edges).persist()
+    o = oriented_edges(graph.edges, n_hint=graph.n).persist()
     try:
-        e1 = o.select(
-            F.col("src").alias("u"), F.col("dst").alias("v"),
-            F.col("ddeg").alias("vdeg"),
-        )
-        e2 = o.select(
-            F.col("src").alias("u"), F.col("dst").alias("w"),
-            F.col("ddeg").alias("wdeg"),
-        )
-        wedges = e1.join(e2, "u").where(
-            (F.col("vdeg") < F.col("wdeg"))
-            | ((F.col("vdeg") == F.col("wdeg")) & (F.col("v") < F.col("w")))
-        )
-        triangles = wedges.join(
-            o.select(F.col("src").alias("v"), F.col("dst").alias("w")),
-            ["v", "w"],
-        ).select("u", "v", "w")
         credit = (
-            triangles.select(
-                F.explode(F.array("u", "v", "w")).alias("id")
-            )
+            triangles(o, graph.m)
+            .select(F.explode(F.array("u", "v", "w")).alias("id"))
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("tri"))
         )

@@ -15,8 +15,8 @@ guards. cn and the degrees are exact int64 aggregates and jaccard is a
 single fixed-order expression over them — bit-identical to the DuckDB
 oracle with NO rounding (the graph_stats.py approach).
 
-Scale shape: cn IS the k-truss support table, computed by the same
-degree-ordered orientation (kernels/truss.py `_support`) — wedge work
+Scale shape: cn IS the k-truss support table, kernels/triangles.py
+`edge_support` over the triangle family's one enumerator — wedge work
 at a vertex is bounded by its oriented out-degree ≈ sqrt(m) (the
 standard orientation skew-killer), one explode + partial+final groupBy
 credits each triangle's three canonical edges, and the degree
@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.build import Graph, symmetrize
 from linkgraph.checkpoint import sever
-from linkgraph.kernels.truss import _support
+from linkgraph.kernels.triangles import edge_support
 
 
 @dataclass
@@ -51,7 +51,7 @@ def edge_jaccard(graph: Graph) -> EdgeJaccardResult:
     canon = sym.where(F.col("src") < F.col("dst")).select(
         F.col("src").alias("u"), F.col("dst").alias("w")
     )
-    sup = _support(canon)
+    sup = edge_support(graph.edges, graph.n, graph.m)
     deg = sym.groupBy(F.col("src").alias("vtx")).agg(
         F.count(F.lit(1)).alias("deg")
     )

@@ -1,25 +1,27 @@
-"""Triangle counting via degree-ordered edge-intersection join
-(BASELINE.json:6; semantics pinned in SURVEY §2.6 — no reference
-implementation exists).
+"""The triangle family's one enumerator: degree-ordered orientation
+plus wedge-closing join (BASELINE.json:6; semantics pinned in SURVEY
+§2.6 — no reference implementation exists). triangle_count,
+clustering.local_clustering, truss.ktruss / truss.trussness and
+nodesim.edge_jaccard all enumerate through `oriented_edges` and
+`triangles` here; no other module orients edges or self-joins wedges.
 
 Algorithm: symmetrize + drop self-loops; rank vertices by
 (degree, id); orient every undirected edge from the lower-ranked to
 the higher-ranked endpoint (the oriented graph is a DAG where each
 vertex keeps only ~sqrt(m) out-edges even at hub vertices — this is
 the classic skew-killer for triangle counting, cf. HERO SIGMOD'24 in
-PAPERS.md); every triangle u<v<w (rank order) is then counted exactly
+PAPERS.md); every triangle u<v<w (rank order) is then produced exactly
 once as the wedge (u→v, u→w) closed by the oriented edge (v→w):
 
-    wedges  = oriented e1 ⋈ e2 on shared source u
-    count   = wedges ⋈ oriented on (v, w)   -- |rows|
+    wedges    = oriented e1 ⋈ e2 on shared source u
+    triangles = wedges ⋈ oriented on (v, w)
 
-All three steps are shuffle joins + one global count — no Python in
-the hot path. Oracle: DuckDB 3-way self-join SQL (exact).
+All steps are joins + aggregates — no Python in the hot path. Oracle:
+DuckDB 3-way self-join SQL (exact).
 """
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass
 
@@ -28,19 +30,17 @@ from pyspark.sql import functions as F
 
 from linkgraph.build import Graph, symmetrize
 
+# Row cap under which the degree table / oriented edge set are
+# broadcast instead of shuffled (≈16 B/row → 64 MB). Scale-adaptive:
+# bench graphs sit far below it, a 100 TB graph far above — the
+# shuffle plans stay the fallback there.
+BCAST_ROWS = 4_000_000
+
 
 @dataclass
 class TriangleResult:
     count: int
     wall_seconds: float
-
-
-def _bcast_rows_cap() -> int:
-    """Row cap under which the degree table / oriented edge set are
-    broadcast instead of shuffled (≈16 B/row → 64 MB at the default).
-    Scale-adaptive: bench graphs sit far below it, a 100 TB graph far
-    above — the shuffle plans below stay the fallback there."""
-    return int(os.environ.get("LINKGRAPH_TRI_BCAST_ROWS", str(4_000_000)))
 
 
 def oriented_edges(edges: DataFrame, n_hint: int | None = None) -> DataFrame:
@@ -50,18 +50,81 @@ def oriented_edges(edges: DataFrame, n_hint: int | None = None) -> DataFrame:
     total order without another join. When the vertex count is known
     to be broadcast-sized, both degree joins broadcast the n-row
     degree table so the symmetrized stream is never re-exchanged
-    (guide §3.1); otherwise they shuffle as before."""
+    (guide §3.1); otherwise they shuffle.
+
+    The dedupe inside `symmetrize` is an aggregation, so every path
+    from a checkpointed loop state into the wedge and closing joins
+    passes one — the cure for sever()'s narrow-diamond compounding
+    (linkgraph/checkpoint.py) when a peeling loop feeds its state
+    back through here."""
     sym = symmetrize(edges).where(F.col("src") != F.col("dst"))
     deg = sym.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("deg"))
     sdeg = deg.select(F.col("v").alias("src"), F.col("deg").alias("sdeg"))
     ddeg = deg.select(F.col("v").alias("dst"), F.col("deg").alias("ddeg"))
-    if n_hint is not None and n_hint <= _bcast_rows_cap():
+    if n_hint is not None and n_hint <= BCAST_ROWS:
         sdeg, ddeg = F.broadcast(sdeg), F.broadcast(ddeg)
     with_deg = sym.join(sdeg, "src").join(ddeg, "dst")
     return with_deg.where(
         (F.col("sdeg") < F.col("ddeg"))
         | ((F.col("sdeg") == F.col("ddeg")) & (F.col("src") < F.col("dst")))
     ).select("src", "dst", "ddeg")
+
+
+def _wedges(o: DataFrame) -> DataFrame:
+    """Wedges (u, v, w) of the oriented set: (u→v, u→w) kept only with
+    rank(v) < rank(w) in the SAME (deg, id) order used for
+    orientation, so the closing edge — if it exists — is exactly the
+    oriented edge (v, w). SHUFFLE_HASH on the oriented side (the same
+    choice pagerank.py makes): the default sort-merge plan SORTS the
+    Σ outdeg² wedge stream before the closing probe — 17 GB spill per
+    rep at rMAT-18 bench scale (BENCH/BASELINE.md r5 triangles
+    entry)."""
+    e1 = o.select(F.col("src").alias("u"), F.col("dst").alias("v"), F.col("ddeg").alias("vdeg"))
+    e2 = o.select(F.col("src").alias("u"), F.col("dst").alias("w"), F.col("ddeg").alias("wdeg"))
+    return e1.join(e2.hint("shuffle_hash"), "u").where(
+        (F.col("vdeg") < F.col("wdeg"))
+        | ((F.col("vdeg") == F.col("wdeg")) & (F.col("v") < F.col("w")))
+    )
+
+
+def _closing(o: DataFrame, m_hint: int | None) -> DataFrame:
+    """The oriented edge set keyed (v, w) as the closing join's build
+    side. Broadcast when it fits the cap (r6): the wedge stream then
+    probes it IN the generation stage — no exchange touches the wedge
+    stream at all (sf0.1 copart graph: 6.6-9.7 s → 5.2-6.4 s per rep,
+    identical counts); shuffle-hashed otherwise."""
+    closing = o.select(F.col("src").alias("v"), F.col("dst").alias("w"))
+    if m_hint is not None and m_hint <= BCAST_ROWS:
+        return F.broadcast(closing)
+    return closing.hint("shuffle_hash")
+
+
+def triangles(o: DataFrame, m_hint: int | None = None) -> DataFrame:
+    """Every triangle of the oriented edge set `o` (from
+    `oriented_edges`) exactly once, as (u, v, w) in ascending (deg, id)
+    rank order. `m_hint` bounds |o| (any graph edge count does) and
+    selects the broadcast close when it fits the cap."""
+    return _wedges(o).join(_closing(o, m_hint), ["v", "w"]).select("u", "v", "w")
+
+
+def edge_support(
+    edges: DataFrame, n_hint: int | None = None, m_hint: int | None = None
+) -> DataFrame:
+    """Per-edge triangle support (u, w, support) of the undirected graph
+    of the (src, dst) edge set: each triangle credits its three edges
+    under canonical (u < w) keys. Triangle-free edges have no row."""
+    tri = triangles(oriented_edges(edges, n_hint), m_hint)
+    credits = tri.select(
+        F.explode(
+            F.array(
+                *(
+                    F.struct(F.least(a, b).alias("u"), F.greatest(a, b).alias("w"))
+                    for a, b in (("u", "v"), ("u", "w"), ("v", "w"))
+                )
+            )
+        ).alias("e")
+    ).select("e.u", "e.w")
+    return credits.groupBy("u", "w").agg(F.count(F.lit(1)).alias("support"))
 
 
 def triangle_count(graph: Graph) -> TriangleResult:
@@ -73,40 +136,17 @@ def triangle_count(graph: Graph) -> TriangleResult:
     # in front of the Σ outdeg² row blowup (guide §2.4).
     o = oriented_edges(graph.edges, n_hint=graph.n).repartition(p, "src").persist()
     try:
-        # wedge (u→v, u→w) kept only with rank(v) < rank(w) in the SAME
-        # (deg, id) order used for orientation, so the closing edge —
-        # if it exists — is exactly the oriented edge (v, w).
-        e1 = o.select(F.col("src").alias("u"), F.col("dst").alias("v"), F.col("ddeg").alias("vdeg"))
-        e2 = o.select(F.col("src").alias("u"), F.col("dst").alias("w"), F.col("ddeg").alias("wdeg"))
-        # Measured plan choices on the wedge stream (the Σ outdeg²
-        # row blowup that dominates this kernel — BENCH/BASELINE.md r5
-        # triangles entry; r6 adds the broadcast closing):
-        #  * SHUFFLE_HASH on the oriented side of both joins (the same
-        #    choice pagerank.py makes): the default sort-merge plan
-        #    SORTS the wedge stream before the closing probe — 17 GB
-        #    spill per rep at rMAT-18 bench scale;
-        #  * broadcast closing (r6, small graphs): when the oriented
-        #    edge set fits the broadcast cap, the wedge stream probes a
-        #    broadcast hash of it IN the generation stage — no (v,w)
-        #    combine hash-map, no exchange touches the wedge stream at
-        #    all. sf0.1 copart graph: 6.6-9.7 s → 5.2-6.4 s per rep,
-        #    identical counts;
-        #  * map-side combine BEFORE the closing exchange (fallback at
-        #    scale): wedges reduce to (v, w, count) inside the
-        #    generation stage, so the exchange carries distinct
-        #    closing-pair counts, not raw wedges. rMAT-18 @ 8 cores:
-        #    120.9 s (SMJ) -> 108.5 s (SHJ) -> ~76 s (SHJ + combine)
-        #    per rep, identical counts.
-        wedges = e1.join(e2.hint("shuffle_hash"), "u").where(
-            (F.col("vdeg") < F.col("wdeg"))
-            | ((F.col("vdeg") == F.col("wdeg")) & (F.col("v") < F.col("w")))
-        )
-        closing = o.select(F.col("src").alias("v"), F.col("dst").alias("w"))
-        if graph.m <= _bcast_rows_cap():
-            count = int(wedges.join(F.broadcast(closing), ["v", "w"]).count())
+        if graph.m <= BCAST_ROWS:
+            count = int(triangles(o, graph.m).count())
         else:
-            wcnt = wedges.groupBy("v", "w").agg(F.count(F.lit(1)).alias("wc"))
-            closed = wcnt.join(closing.hint("shuffle_hash"), ["v", "w"])
+            # map-side combine BEFORE the closing exchange (fallback at
+            # scale): wedges reduce to (v, w, count) inside the
+            # generation stage, so the exchange carries distinct
+            # closing-pair counts, not raw wedges. rMAT-18 @ 8 cores:
+            # 120.9 s (SMJ) -> 108.5 s (SHJ) -> ~76 s (SHJ + combine)
+            # per rep, identical counts.
+            wcnt = _wedges(o).groupBy("v", "w").agg(F.count(F.lit(1)).alias("wc"))
+            closed = wcnt.join(_closing(o, graph.m), ["v", "w"])
             count = int(closed.agg(F.sum("wc")).collect()[0][0] or 0)
     finally:
         o.unpersist()

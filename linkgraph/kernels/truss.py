@@ -8,14 +8,13 @@ raw degree. The reference engine at /root/reference/src has no truss
 app; this extends its algorithm family on the same edge table.
 
 Algorithm (peeling, Matula-Beck style at edge granularity): per round
-  1. enumerate the CURRENT subgraph's triangles once via the
-     degree-ordered orientation (triangles.py's skew-killer — per-
-     vertex wedge work bounded ~sqrt(m) at hubs, each triangle
-     materialized exactly once);
-  2. credit each triangle's three edges (canonical u<w keys via
-     least/greatest) — explode + partial+final groupBy = the support
-     table;
-  3. drop edges with support < k−2 (left join + coalesce 0 so
+  1. per-edge support of the CURRENT subgraph from
+     kernels/triangles.py `edge_support`: one pass of the triangle
+     family's one enumerator (degree-ordered orientation, per-vertex
+     wedge work bounded ~sqrt(m) at hubs, each triangle materialized
+     exactly once), each triangle crediting its three canonical u<w
+     edges — explode + partial+final groupBy = the support table;
+  2. drop edges with support < k−2 (left join + coalesce 0 so
      triangle-free edges drop too); the removal count rides an
      Observation on the severed next state — one job per round.
 Fixpoint: a round that removes nothing; its freshly-computed support
@@ -41,6 +40,7 @@ from pyspark.sql import functions as F
 
 from linkgraph.build import Graph, symmetrize
 from linkgraph.checkpoint import CheckpointManager, release, sever
+from linkgraph.kernels.triangles import edge_support
 
 
 @dataclass
@@ -49,58 +49,6 @@ class TrussResult:
     iterations: int
     wall_seconds: float
     metrics: list[dict] = field(default_factory=list)
-
-
-def _support(edges_cn: DataFrame) -> DataFrame:
-    """Per-edge triangle support over the canonical (u < w) edge list:
-    orientation → wedges → closed triangles → 3 canonical credits."""
-    sym = edges_cn.select(
-        F.col("u").alias("src"), F.col("w").alias("dst")
-    ).unionAll(
-        edges_cn.select(F.col("w").alias("src"), F.col("u").alias("dst"))
-    )
-    deg = sym.groupBy(F.col("src").alias("v")).agg(
-        F.count(F.lit(1)).alias("deg")
-    )
-    with_deg = sym.join(
-        deg.select(F.col("v").alias("src"), F.col("deg").alias("sdeg")), "src"
-    ).join(deg.select(F.col("v").alias("dst"), F.col("deg").alias("ddeg")), "dst")
-    o = with_deg.where(
-        (F.col("sdeg") < F.col("ddeg"))
-        | ((F.col("sdeg") == F.col("ddeg")) & (F.col("src") < F.col("dst")))
-    ).select("src", "dst", "ddeg")
-
-    e1 = o.select(
-        F.col("src").alias("a"), F.col("dst").alias("b"),
-        F.col("ddeg").alias("bdeg"),
-    )
-    e2 = o.select(
-        F.col("src").alias("a"), F.col("dst").alias("c"),
-        F.col("ddeg").alias("cdeg"),
-    )
-    wedges = e1.join(e2, "a").where(
-        (F.col("bdeg") < F.col("cdeg"))
-        | ((F.col("bdeg") == F.col("cdeg")) & (F.col("b") < F.col("c")))
-    )
-    tri = wedges.join(
-        o.select(F.col("src").alias("b"), F.col("dst").alias("c")), ["b", "c"]
-    ).select("a", "b", "c")
-    credits = tri.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.least("a", "b").alias("u"), F.greatest("a", "b").alias("w")
-                ),
-                F.struct(
-                    F.least("a", "c").alias("u"), F.greatest("a", "c").alias("w")
-                ),
-                F.struct(
-                    F.least("b", "c").alias("u"), F.greatest("b", "c").alias("w")
-                ),
-            )
-        ).alias("e")
-    ).select("e.u", "e.w")
-    return credits.groupBy("u", "w").agg(F.count(F.lit(1)).alias("support"))
 
 
 def ktruss(graph: Graph, k: int, max_iter: int = 10_000) -> TrussResult:
@@ -117,7 +65,11 @@ def ktruss(graph: Graph, k: int, max_iter: int = 10_000) -> TrussResult:
     metrics: list[dict] = []
     while iterations < max_iter:
         iterations += 1
-        sup = _support(cur)
+        sup = edge_support(
+            cur.select(F.col("u").alias("src"), F.col("w").alias("dst")),
+            graph.n,
+            graph.m,
+        )
         scored = cur.select("u", "w").join(sup, ["u", "w"], "left").select(
             "u",
             "w",
@@ -178,8 +130,8 @@ def trussness(
     Level-synchronous bucket peeling, coreness.py's loop at edge
     granularity. Per round:
       1. recompute residual triangle support (ONE degree-ordered
-         triangle enumeration of the residual graph — _support, the
-         skew-killer orientation);
+         triangle enumeration of the residual graph — triangles.py
+         `edge_support`, the skew-killer orientation);
       2. advance the level: t = max(t, min support + 2) — exact, not
          heuristic: a residual graph whose edges all have support
          >= s is itself an (s+2)-truss, so the level jump cannot
@@ -259,7 +211,11 @@ def trussness(
                 cur = residual
                 start_rnd = last + 1
     for rnd in range(start_rnd, max_iter + 1):
-        sup = _support(cur)
+        sup = edge_support(
+            cur.select(F.col("u").alias("src"), F.col("w").alias("dst")),
+            graph.n,
+            graph.m,
+        )
         sobs = Observation(f"trussness_sup_{rnd}")
         scored = sever(
             cur.join(sup, ["u", "w"], "left")

@@ -57,6 +57,15 @@ def rmat_graph(spark):
     g.unpersist()
 
 
+@pytest.fixture(params=["default", "cap0"])
+def tri_cap(request, monkeypatch):
+    """The triangle enumerator's broadcast cap at its default, and at 0:
+    the shuffle-hash close and triangle_count's map-side combine, the
+    plans of graphs above the cap, on the same small fixture."""
+    if request.param == "cap0":
+        monkeypatch.setattr("linkgraph.kernels.triangles.BCAST_ROWS", 0)
+
+
 def test_testgraph_input_parity(spark):
     with open(REFERENCE_FIXTURE) as f:
         pdf = parse_adjacency_graph(f.read())
@@ -187,7 +196,7 @@ def test_labelprop_matches_numpy(rmat_graph):
     np.testing.assert_array_equal(got, expected)
 
 
-def test_triangles_match(rmat_graph):
+def test_triangles_match(rmat_graph, tri_cap):
     g, pdf, n = rmat_graph
     got = triangle_count(g).count
     expected = triangle_count_numpy(n, pdf["src"].to_numpy(), pdf["dst"].to_numpy())
@@ -1342,7 +1351,7 @@ def test_bowtie_textbook_shape(spark):
     g.unpersist()
 
 
-def test_clustering_matches_replay(rmat_graph):
+def test_clustering_matches_replay(rmat_graph, tri_cap):
     """Per-vertex (tri, coeff) equals the brute-force neighbor-pair
     replay on the rMAT fixture; rollups are consistent with the rows."""
     import math
@@ -2505,10 +2514,13 @@ def test_kclique_count_matches_bruteforce(rmat_graph, spark):
 # ---------------------------------------------------------------------------
 
 
-def test_trussness_matches_sequential_peeling(rmat_graph):
+def test_trussness_matches_sequential_peeling(rmat_graph, tri_cap):
     """Parallel bucket peeling must equal the textbook sequential
     min-support edge peeling edge-for-edge, and max_truss must be the
-    max truss number."""
+    max truss number. Its rounds stay flat: a support recompute whose
+    wedge and closing joins each met two un-aggregated paths from the
+    severed state compounded ~5x per round (sever()'s narrow-diamond
+    caveat, linkgraph/checkpoint.py)."""
     from linkgraph.build import symmetrize
     from linkgraph.kernels import trussness
     from tests.oracles import trussness_py
@@ -2521,6 +2533,13 @@ def test_trussness_matches_sequential_peeling(rmat_graph):
     ).toPandas()
     assert got == trussness_py(sym["src"].to_numpy(), sym["dst"].to_numpy())
     assert res.max_truss == max(got.values())
+    cum = [m["wall_s"] for m in res.metrics]
+    walls = [b - a for a, b in zip([0.0] + cum[:-1], cum)]
+    assert len(walls) >= 8, walls
+    head = sum(walls[:5]) / 5
+    tail = sum(walls[-3:]) / 3
+    # the rule of tests/test_plans.py::test_sever_loop_stays_flat
+    assert tail < 8 * head + 0.5, (head, tail, walls)
 
 
 def test_trussness_consistent_with_fixed_k_kernel(rmat_graph):

@@ -724,6 +724,60 @@ def test_labelprop_round_plan_at_width_two(spark, monkeypatch, width2_graph):
     assert all(x.startswith("hashpartitioning(dst#") for x in ex), ex
 
 
+def _executed_node_names(plan) -> list[str]:
+    """The node names of an executed (AQE) plan. The walk follows plan
+    children only, so the plan under a cached InMemoryRelation is not
+    counted (as in ``_round_exchanges``); it steps into the adaptive
+    root and its query stages, which hold their subtrees outside
+    ``children()``."""
+    out, todo = [], [plan]
+    while todo:
+        node = todo.pop()
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        if cls.endswith("QueryStageExec"):
+            todo.append(node.plan())
+            continue
+        out.append(node.nodeName())
+        it = node.children().iterator()
+        while it.hasNext():
+            todo.append(it.next())
+    return out
+
+
+def test_triangle_count_plan_below_cap(spark, monkeypatch):
+    """rmat_kernels' triangle_count (R-MAT scale 11, seed 3, below the
+    broadcast cap), captured live from its executed count query: the
+    wedge self-join is the one ShuffledHashJoin, reading the cached
+    orientation co-partitioned; the close is the one BroadcastHashJoin;
+    no SortMergeJoin and no Sort touch the wedge stream."""
+    from linkgraph.kernels import triangle_count
+    from tests.oracles import triangle_count_numpy
+
+    pdf = rmat_edges(scale=11, seed=3)
+    g = build_graph_from_edges(spark.createDataFrame(pdf, "src long, dst long"))
+    plans = []
+
+    def count(self):
+        agg = self.groupBy().count()
+        n = agg.collect()[0][0]
+        plans.append(agg._jdf.queryExecution().executedPlan())
+        return n
+
+    with monkeypatch.context() as m:
+        m.setattr(type(g.edges), "count", count)
+        got = triangle_count(g).count
+    assert got == triangle_count_numpy(1 << 11, pdf["src"].to_numpy(), pdf["dst"].to_numpy())
+    assert len(plans) == 1
+    names = _executed_node_names(plans[0])
+    assert names.count("ShuffledHashJoin") == 1, names
+    assert names.count("BroadcastHashJoin") == 1, names
+    assert "SortMergeJoin" not in names and "Sort" not in names, names
+    g.unpersist()
+
+
 def test_committed_plan_audit_is_clean():
     """The committed plan-audit artifact (tools/plan_audit.py ->
     PLANS_r6.json, r5 fallback) must show zero CartesianProduct and
