@@ -16,9 +16,11 @@ first/last rounds the sparse-push broadcast form; the chosen mode is
 recorded per-iteration in metrics.
 
 Driver round-trips: ONE Spark job per level — the newly-reached count
-rides the localCheckpoint materialization as an Observation (the
-pagerank pattern, pagerank.py:212-229), replacing both the
-loop-condition frontier.count() and the checkpoint-time recount.
+rides the localCheckpoint materialization as an Observation, replacing
+both the loop-condition frontier.count() and the checkpoint-time
+recount. (The kernels on linkgraph/loop.py's fixpoint instead chain
+rounds and read every round's scalars from one collect per chain;
+bfs's delta-frontier loop is not on it yet.)
 
 Delta materialization: each level checkpoints only the NEWLY-reached
 rows (the delta), not the whole visited set — per-level write cost is

@@ -8,17 +8,20 @@
 
 Beyond-reference web-graph analysis composed from this engine's own
 primitives: the SCC kernel picks the core, then two multi-root
-reachability sweeps (edge_map BFS from ALL core vertices at once,
-forward and reverse) partition the remainder. IN ∩ OUT = ∅ by
+reachability sweeps (kernels/scc.py `reach` from ALL core vertices at
+once, forward and reverse) partition the remainder. IN ∩ OUT = ∅ by
 construction — a vertex both reaching and reached by the core would
 be in the core's SCC.
 
-Scale notes: the sweeps are plain frontier BFS over the cached edge
-table (|E|/20 push/pull dispatch, delta frontiers, anti-join
-visitedness) — O(diameter) rounds, no per-vertex work beyond the
-frontier. The core pick is a groupBy size + 1-row driver read.
-Tie-break (size DESC, label ASC) is deterministic and mirrored in the
-driver oracle.
+Scale notes: each sweep is a linkgraph/loop.py fixpoint over a bitmap
+(id, color, marked, changed) state on the cached edge table (the
+backward one on a transposed copy cached once per call), seeded with
+the core in one constant color so every target accepts (|E|/20
+push/pull dispatch, chained rounds, one collect per chain) —
+O(diameter) rounds. Both sweeps' per-round records are returned,
+tagged `phase` "fwd"/"bwd", after the SCC kernel's. The core pick is a
+groupBy size + 1-row driver read. Tie-break (size DESC, label ASC) is
+deterministic and mirrored in the driver oracle.
 """
 
 from __future__ import annotations
@@ -26,14 +29,12 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
 from linkgraph.checkpoint import release, sever
-from linkgraph.frontier import edge_map
-from linkgraph.kernels.scc import scc
-from linkgraph.session import conf_override
+from linkgraph.kernels.scc import reach, scc
 
 
 @dataclass
@@ -45,84 +46,58 @@ class BowtieResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-def _reach(graph: Graph, seeds: DataFrame, reverse: bool) -> DataFrame:
-    """Vertices reachable from `seeds` (themselves included) along
-    out-edges (reverse=False) or in-edges (reverse=True): a multi-root
-    BFS with delta frontiers and anti-join visitedness — the bfs.py
-    loop shape without levels/parents."""
-    avg_deg = graph.m / max(graph.n, 1)
-    visited = sever(seeds.select("id"))
-    frontier = visited
-    fcount = visited.count()
-    prev_frontier: DataFrame | None = None
-    while fcount > 0:
-        msgs = edge_map(
-            graph,
-            frontier,
-            aggs=[F.count("*").alias("_m")],
-            reverse=reverse,
-            volume=int(fcount * avg_deg),
-            exclude_dst=visited,
-        ).select(F.col("dst").alias("id"))
-        obs = Observation(f"reach_{reverse}_{fcount}")
-        nxt = sever(msgs.observe(obs, F.count("*").alias("n")))
-        n_new = int(obs.get["n"] or 0)
-        if prev_frontier is not None:
-            release(prev_frontier)
-        if n_new == 0:
-            release(nxt)
-            break
-        new_visited = sever(visited.unionByName(nxt))
-        release(visited)
-        visited = new_visited
-        frontier = nxt
-        prev_frontier = nxt
-        fcount = n_new
-    return visited
-
-
 def bowtie(graph: Graph, scc_df: DataFrame | None = None) -> BowtieResult:
     """Classify every vertex. `scc_df` (id, scc) can be passed in when
     the caller already ran the SCC kernel; otherwise it runs here."""
-    spark = graph.edges.sparkSession
     t0 = time.time()
     metrics: list[dict] = []
     if scc_df is None:
         res = scc(graph)
         scc_df = res.df
         metrics.extend(res.metrics)
-    scc_df = sever(scc_df)
-
-    # largest SCC = the core; deterministic tie-break (size DESC, label ASC)
-    top = (
-        scc_df.groupBy("scc")
-        .agg(F.count("*").alias("n"))
-        .orderBy(F.desc("n"), F.asc("scc"))
-        .first()
-    )
-    core_label, core_size = int(top["scc"]), int(top["n"])
-    core = scc_df.where(F.col("scc") == core_label).select("id")
-
-    with conf_override(spark, {"spark.sql.adaptive.enabled": "false"}):
-        fwd = _reach(graph, core, reverse=False)   # core ∪ OUT
-        bwd = _reach(graph, core, reverse=True)    # core ∪ IN
-
-    cls = (
-        scc_df.join(fwd.withColumn("_f", F.lit(True)), "id", "left")
-        .join(bwd.withColumn("_b", F.lit(True)), "id", "left")
-        .select(
-            "id",
-            F.when(F.col("scc") == core_label, F.lit("CORE"))
-            .when(F.col("_b").isNotNull(), F.lit("IN"))
-            .when(F.col("_f").isNotNull(), F.lit("OUT"))
-            .otherwise(F.lit("OTHER"))
-            .alias("cls"),
+    else:
+        scc_df = sever(scc_df)
+    marks = []
+    try:
+        # largest SCC = the core; deterministic tie-break (size DESC, label ASC)
+        top = (
+            scc_df.groupBy("scc")
+            .agg(F.count("*").alias("n"))
+            .orderBy(F.desc("n"), F.asc("scc"))
+            .first()
         )
-    )
-    out = sever(cls)
-    release(fwd)
-    release(bwd)
-    release(scc_df)
+        core_label, core_size = int(top["scc"]), int(top["n"])
+        is_core = F.col("scc") == core_label
+        for phase, reverse in (("fwd", False), ("bwd", True)):  # core ∪ OUT, core ∪ IN
+            fp = reach(
+                graph,
+                lambda: scc_df.select(
+                    "id",
+                    F.lit(0).cast("long").alias("color"),
+                    is_core.alias("marked"),
+                    is_core.alias("changed"),
+                ),
+                core_size,
+                reverse,
+            )
+            marks.append(fp.state)
+            metrics.extend({**r, "phase": phase} for r in fp.metrics)
+        fwd, bwd = marks
+        out = sever(
+            scc_df.join(fwd.select("id", F.col("marked").alias("_f")), "id")
+            .join(bwd.select("id", F.col("marked").alias("_b")), "id")
+            .select(
+                "id",
+                F.when(is_core, F.lit("CORE"))
+                .when(F.col("_b"), F.lit("IN"))
+                .when(F.col("_f"), F.lit("OUT"))
+                .otherwise(F.lit("OTHER"))
+                .alias("cls"),
+            )
+        )
+    finally:
+        for df in (scc_df, *marks):
+            release(df)
     return BowtieResult(
         df=out,
         core_label=core_label,

@@ -26,15 +26,20 @@ a filter over the checkpointed state — never a separately materialized
 or counted DataFrame. Checkpoints store only the state (the bitmap
 rides along); resume re-derives the frontier by filtering.
 
-The loop is linkgraph/loop.py's driver. While the |E|/20 dispatch
-stays in the DENSE regime, chains of up to LABEL_CHAIN rounds end in
-one changed-count collect and the state at the first zero-change round
-is returned. Sparse-push rounds (broadcast frontier) run one per
-collect — the broadcast is a blocking point anyway — preserving the
-dispatch test-pinned mode record. Dense rounds are exchange-free on
-both joins (scatter co-partitioned with the src-bucketed edge cache,
-apply co-partitioned gather output), leaving ONE message exchange per
-round (plans/r06/cc_round_after.txt).
+The loop is :func:`label_loop` on linkgraph/loop.py's driver, shared
+with scc's forward-max coloring (the extremum is its one difference:
+MIN here, MAX there); :func:`frontier_rounds` holds the dispatch,
+scalar and record it also shares with scc's reachability sweeps.
+While the |E|/20 dispatch stays in the DENSE regime, chains of up to
+LABEL_CHAIN rounds end in one changed-count collect and the state at
+the first zero-change round is returned. Sparse-push rounds
+(broadcast frontier) run one per collect — the broadcast is a
+blocking point anyway — preserving the dispatch test-pinned mode
+record. Dense rounds are exchange-free on both joins (scatter
+co-partitioned with the src-bucketed edge cache, apply co-partitioned
+gather output), leaving ONE message exchange per round, pinned live by
+tests/test_plans.py (`test_round_plan_at_width_one_has_no_hash_exchange`,
+`test_frontier_round_plan_at_width_two`).
 
 The symmetrized internal graph is built SLIM (r6): union+reversed
 edges go through one repartition(src) + in-partition dropDuplicates
@@ -55,9 +60,10 @@ beside the estimate it was chosen on ('dispatch_volume').
 
 from __future__ import annotations
 
-import os
+import operator
 import time
 from dataclasses import dataclass, field, replace
+from typing import Callable
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -66,7 +72,18 @@ from pyspark.sql import functions as F
 from linkgraph.build import Graph
 from linkgraph.checkpoint import CheckpointManager
 from linkgraph.frontier import edge_map
-from linkgraph.loop import LABEL_CHAIN, fixpoint, loop_width
+from linkgraph.loop import LABEL_CHAIN, Fixpoint, fixpoint, loop_width
+
+# Below this edge count a bitmap-frontier loop runs every round dense:
+# a full scan of a small cached edge table costs less than the sparse
+# path's per-round frontier broadcast, and dense rounds carry no
+# blocking broadcast, so a whole chain pipelines into one job. A large
+# graph is far above it and keeps the exact reference dispatch.
+DENSE_CHAIN_EDGES = 2_000_000
+
+# a label loop's extremum: (combine, keep, improves)
+MIN = (F.min, F.least, operator.lt)
+MAX = (F.max, F.greatest, operator.gt)
 
 
 @dataclass
@@ -113,31 +130,6 @@ def connected_components(
             n=graph.n,
             m=m_sym,
         )
-    try:
-        return _cc_loop(graph, max_iter, ckpt, t0)
-    finally:
-        if sym_edges is not None:
-            # release the internal symmetrized edge cache (results are
-            # severed, so this is safe).
-            sym_edges.unpersist()
-
-
-def _cc_loop(
-    graph: Graph,
-    max_iter: int,
-    ckpt: CheckpointManager | None,
-    t0: float,
-) -> CCResult:
-    avg_deg = graph.m / max(graph.n, 1)
-    # below this edge count a full dense scan of the cached edge table
-    # is cheaper than the sparse path's per-round frontier broadcast,
-    # and dense rounds have no blocking broadcast so whole chains
-    # pipeline into one job (scc.py _dense_chain_edges rationale)
-    force_dense = graph.m <= int(
-        os.environ.get("LINKGRAPH_DENSE_CHAIN_EDGES", str(2_000_000))
-    )
-    # the current chain's edge_map dispatch, fixed by plan() at its start
-    dispatch: dict = {}
 
     def from_pre_bitmap(state: DataFrame, rec: dict) -> tuple[DataFrame, dict]:
         # pre-bitmap checkpoint layout (state without the bitmap
@@ -149,44 +141,63 @@ def _cc_loop(
         full = state.select("id", "comp", F.lit(True).alias("changed"))
         return full, {**rec, "frontier_size_next": graph.n}
 
+    try:
+        fp = label_loop(
+            graph,
+            # ids[v] = v (algos.rs:88); round 0 frontier = full
+            # (algos.rs:113) — encoded as changed=true on every row of
+            # the bitmap state, so the full frontier costs no
+            # materialization
+            lambda: graph.vertices.select(
+                "id", F.col("id").alias("comp"), F.lit(True).alias("changed")
+            ),
+            graph.n,
+            "comp",
+            MIN,
+            max_iter,
+            ckpt,
+            on_load=from_pre_bitmap,
+        )
+    finally:
+        if sym_edges is not None:
+            # release the internal symmetrized edge cache (results are
+            # severed, so this is safe).
+            sym_edges.unpersist()
+    return CCResult(
+        df=fp.state.select("id", "comp"),
+        iterations=fp.iterations,
+        wall_seconds=time.time() - t0,
+        metrics=fp.metrics,
+    )
+
+
+def frontier_rounds(graph: Graph, n0: int) -> tuple[dict, dict]:
+    """The fixpoint arguments shared by the bitmap-frontier loops (the
+    label loop here, scc.reach): the state carries a `changed` bool, a
+    round's frontier is `state.where(changed)`, and the loop stops at
+    the first round that changes nothing (that round executed —
+    reference semantics: the frontier emptied after it).
+
+    Returns (dispatch, kwargs). The plan applies the |E|/20 rule once
+    per chain and writes it to `dispatch` ('dense', 'volume'), which
+    the kernel's step reads: push (broadcast) from a small frontier,
+    pull (dense) when |frontier| * avg_degree > m/20 (ligra.rs:82-87),
+    the frontier size coming free off the last chain's collect (`n0`
+    before the first). Dense chains speculate that the frontier stays
+    dense; a mis-moded tail round costs one edge-cache scan, and the
+    chain resets to the exact rule at every collect. Sparse-push
+    rounds run one per collect — the broadcast is a blocking point
+    anyway. Below DENSE_CHAIN_EDGES every round is dense."""
+    avg_deg = graph.m / max(graph.n, 1)
+    force_dense = graph.m <= DENSE_CHAIN_EDGES
+    dispatch: dict = {}
+
     def plan(prev: list[dict]) -> int | None:
-        # push (broadcast) from a small frontier, pull (dense) when
-        # |frontier| * avg_degree > m/20 (ligra.rs:82-87; the frontier
-        # size came free off the last chain's collect). Dense chains
-        # speculate that the frontier stays dense; a mis-moded tail
-        # round costs one edge-cache scan, and the chain resets to the
-        # exact rule at every collect.
-        fcount = prev[-1]["frontier_size_next"] if prev else graph.n
+        fcount = prev[-1]["frontier_size_next"] if prev else n0
         volume = int(fcount * avg_deg)
         dense = force_dense or volume > graph.threshold
         dispatch.update(fcount=fcount, volume=volume, dense=dense)
         return None if dense else 1
-
-    def step(cur: DataFrame, edges: DataFrame) -> DataFrame:
-        frontier = cur.where(F.col("changed")).select("id", "comp")
-        if dispatch["dense"]:
-            # SHUFFLE_HASH build on the frontier side: the edge cache
-            # streams in place (both sides co-partitioned by src in
-            # steady state — zero-exchange scatter).
-            frontier = frontier.hint("shuffle_hash")
-        msgs = edge_map(
-            replace(graph, edges=edges),
-            frontier,
-            aggs=[F.min("comp").alias("new_comp")],
-            volume=dispatch["volume"],
-            dense=dispatch["dense"],
-        )
-        return cur.join(
-            msgs.hint("shuffle_hash"), cur["id"] == msgs["dst"], "left"
-        ).select(
-            cur["id"],
-            F.least(cur["comp"], F.coalesce(F.col("new_comp"), cur["comp"])).alias(
-                "comp"
-            ),
-            (F.coalesce(F.col("new_comp"), cur["comp"]) < cur["comp"]).alias(
-                "changed"
-            ),
-        )
 
     def report(first: int, rows: list[dict], wall: float, _stopped: bool) -> list[dict]:
         recs = []
@@ -212,35 +223,68 @@ def _cc_loop(
             fcount = r["frontier_size_next"]
         return recs
 
-    fp = fixpoint(
-        graph.edges,
-        m=graph.m,
-        n=graph.n,
-        # ids[v] = v (algos.rs:88); round 0 frontier = full
-        # (algos.rs:113) — encoded as changed=true on every row of the
-        # bitmap state, so the full frontier costs no materialization
-        init=lambda: graph.vertices.select(
-            "id", F.col("id").alias("comp"), F.lit(True).alias("changed")
-        ),
-        step=step,
+    return dispatch, dict(
         scalars=[
             F.coalesce(F.sum(F.col("changed").cast("long")), F.lit(0)).alias(
                 "frontier_size_next"
             ),
         ],
-        # first zero-change round ends the loop (that round executed —
-        # reference semantics: the frontier emptied after it)
         stop=lambda r: not r.get("frontier_size_next"),
         chain=LABEL_CHAIN,
-        max_iter=max_iter,
-        report=report,
         plan=plan,
-        ckpt=ckpt,
-        on_load=from_pre_bitmap,
+        report=report,
     )
-    return CCResult(
-        df=fp.state.select("id", "comp"),
-        iterations=fp.iterations,
-        wall_seconds=time.time() - t0,
-        metrics=fp.metrics,
+
+
+def label_loop(
+    graph: Graph,
+    init: Callable[[], DataFrame],
+    n0: int,
+    label: str,
+    ext: tuple,
+    max_iter: int,
+    ckpt: CheckpointManager | None = None,
+    on_load: Callable | None = None,
+) -> Fixpoint:
+    """Hash-extremum label propagation over the bitmap state
+    (id, <label>, changed) from ``init()`` (``n0`` rows): each round
+    the frontier pushes its label along out-edges and a target keeps
+    the extremum ``ext`` — MIN for cc, MAX for scc's forward coloring
+    — entering the next frontier iff its label improved."""
+    combine, keep, improves = ext
+    dispatch, rounds = frontier_rounds(graph, n0)
+
+    def step(cur: DataFrame, edges: DataFrame) -> DataFrame:
+        frontier = cur.where(F.col("changed")).select("id", label)
+        if dispatch["dense"]:
+            # SHUFFLE_HASH build on the frontier side: the edge cache
+            # streams in place (both sides co-partitioned by src in
+            # steady state — zero-exchange scatter).
+            frontier = frontier.hint("shuffle_hash")
+        msgs = edge_map(
+            replace(graph, edges=edges),
+            frontier,
+            aggs=[combine(label).alias(f"new_{label}")],
+            volume=dispatch["volume"],
+            dense=dispatch["dense"],
+        )
+        new = F.coalesce(F.col(f"new_{label}"), cur[label])
+        return cur.join(
+            msgs.hint("shuffle_hash"), cur["id"] == msgs["dst"], "left"
+        ).select(
+            cur["id"],
+            keep(cur[label], new).alias(label),
+            improves(new, cur[label]).alias("changed"),
+        )
+
+    return fixpoint(
+        graph.edges,
+        m=graph.m,
+        n=graph.n,
+        init=init,
+        step=step,
+        max_iter=max_iter,
+        ckpt=ckpt,
+        on_load=on_load,
+        **rounds,
     )

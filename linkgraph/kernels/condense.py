@@ -11,10 +11,11 @@ condensed edge set (shuffles on vertex id, then on component id —
 strictly shrinking); levels by synchronous longest-path relaxation
     lvl'(c) = max(lvl(c), 1 + max_{p→c} lvl(p))
 which converges in depth-D rounds, each ONE condensed-|E|-row join +
-partial+final MAX agg with the changed-count riding the severing job
-as an Observation (labelprop pattern). On a DAG this is exactly the
-Kahn layering; cycles cannot occur by construction (and max_iter
-guards a corrupt label input loudly).
+partial+final MAX agg. The relaxation is a linkgraph/loop.py fixpoint
+(the labelprop pattern: the previous level rides as the scratch
+column `_level`, the `changed` scalar stops the chain). On a DAG this
+is exactly the Kahn layering; cycles cannot occur by construction
+(and max_iter guards a corrupt label input loudly).
 
 Composes from the engine's own primitives: labels come from
 kernels/scc.py unless the caller already has them.
@@ -25,12 +26,12 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
 from linkgraph.checkpoint import release, sever
-from linkgraph.session import conf_override
+from linkgraph.loop import LABEL_CHAIN, fixpoint
 
 
 @dataclass
@@ -41,6 +42,24 @@ class CondenseResult:
     rounds: int
     wall_seconds: float
     metrics: list[dict] = field(default_factory=list)
+
+
+def _relax(cur: DataFrame, edges: DataFrame) -> DataFrame:
+    prop = (
+        edges.join(
+            cur.select(F.col("scc").alias("src"), "level").hint("shuffle_hash"), "src"
+        )
+        .groupBy(F.col("dst").alias("scc"))
+        .agg((F.max("level") + 1).alias("cand"))
+    )
+    return cur.join(prop, "scc", "left").select(
+        "scc",
+        F.greatest(
+            F.col("level"), F.coalesce(F.col("cand"), F.lit(0).cast("long"))
+        ).alias("level"),
+        "size",
+        F.col("level").alias("_level"),
+    )
 
 
 def condensation(
@@ -54,85 +73,67 @@ def condensation(
     when absent. Raises if relaxation hasn't converged after max_iter
     rounds (only possible if `labels` is not a valid SCC labeling)."""
     t0 = time.time()
+    owned = None
     if labels is None:
         from linkgraph.kernels.scc import scc as _scc
 
-        labels = _scc(graph).df
-    labels = labels.select("id", "scc")
-    cedges = sever(
-        graph.edges.join(
-            labels.select(F.col("id").alias("src"), F.col("scc").alias("csrc")),
-            "src",
+        labels = owned = _scc(graph).df
+    try:
+        labels = labels.select("id", "scc")
+        cedges = sever(
+            graph.edges.join(
+                labels.select(F.col("id").alias("src"), F.col("scc").alias("csrc")),
+                "src",
+            )
+            .join(
+                labels.select(F.col("id").alias("dst"), F.col("scc").alias("cdst")),
+                "dst",
+            )
+            .where(F.col("csrc") != F.col("cdst"))
+            .select("csrc", "cdst")
+            .distinct()
         )
-        .join(
-            labels.select(F.col("id").alias("dst"), F.col("scc").alias("cdst")),
-            "dst",
+        sizes = labels.groupBy("scc").agg(F.count("*").alias("size"))
+        try:
+            # the graph's m and n bound the condensed edge and component
+            # counts, which size the loop's width and chain budget
+            fp = fixpoint(
+                cedges.toDF("src", "dst"),
+                m=graph.m,
+                n=graph.n,
+                init=lambda: sizes.select(
+                    "scc", F.lit(0).cast("long").alias("level"), "size"
+                ),
+                step=_relax,
+                scalars=[
+                    F.coalesce(
+                        F.sum((F.col("level") != F.col("_level")).cast("long")),
+                        F.lit(0),
+                    ).alias("changed")
+                ],
+                stop=lambda r: r.get("changed") == 0,
+                chain=LABEL_CHAIN,
+                max_iter=max_iter,
+            )
+        except BaseException:
+            release(cedges)
+            raise
+    finally:
+        if owned is not None:
+            release(owned)
+    if not fp.converged:
+        release(cedges)
+        raise RuntimeError(
+            f"condensation did not converge in {max_iter} rounds — "
+            "the labels input is not a valid SCC labeling (cycle in "
+            "the condensed graph)"
         )
-        .where(F.col("csrc") != F.col("cdst"))
-        .select("csrc", "cdst")
-        .distinct()
-    )
-    sizes = labels.groupBy("scc").agg(F.count("*").alias("size"))
-    lvl = sever(sizes.select("scc", F.lit(0).cast("long").alias("level"), "size"))
-    prev_ckpt = lvl
-    metrics: list[dict] = []
-    rounds = 0
-    loop_conf = {
-        "spark.sql.join.preferSortMergeJoin": "false",
-        "spark.sql.adaptive.enabled": "false",
-    }
-    with conf_override(graph.edges.sparkSession, loop_conf):
-        for rnd in range(max_iter):
-            it_t0 = time.time()
-            prop = (
-                cedges.join(
-                    lvl.select(F.col("scc").alias("csrc"), "level").hint(
-                        "shuffle_hash"
-                    ),
-                    "csrc",
-                )
-                .groupBy(F.col("cdst").alias("scc"))
-                .agg((F.max("level") + 1).alias("cand"))
-            )
-            upd = lvl.join(prop, "scc", "left").select(
-                "scc",
-                F.greatest(
-                    F.col("level"), F.coalesce(F.col("cand"), F.lit(0).cast("long"))
-                ).alias("level"),
-                "size",
-                F.col("level").alias("_old"),
-            )
-            obs = Observation(f"condense_{rnd}")
-            new_lvl = sever(
-                upd.observe(
-                    obs,
-                    F.sum(
-                        (F.col("level") != F.col("_old")).cast("long")
-                    ).alias("changed"),
-                ).select("scc", "level", "size")
-            )
-            changed = int(obs.get["changed"] or 0)
-            release(prev_ckpt)
-            prev_ckpt = new_lvl
-            lvl = new_lvl
-            rounds = rnd + 1
-            metrics.append(
-                {"round": rnd, "changed": changed, "wall_s": time.time() - it_t0}
-            )
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"condensation did not converge in {max_iter} rounds — "
-                "the labels input is not a valid SCC labeling (cycle in "
-                "the condensed graph)"
-            )
-    depth = lvl.agg(F.coalesce(F.max("level"), F.lit(0).cast("long"))).first()[0]
+    depth = fp.state.agg(F.coalesce(F.max("level"), F.lit(0).cast("long"))).first()[0]
     return CondenseResult(
-        df=lvl.select("scc", "level", "size"),
+        df=fp.state.select("scc", "level", "size"),
         edges=cedges,
         depth=int(depth),
-        rounds=rounds,
+        rounds=fp.iterations,
         wall_seconds=time.time() - t0,
-        metrics=metrics,
+        metrics=fp.metrics,
     )

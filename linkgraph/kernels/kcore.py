@@ -14,7 +14,7 @@ Scale shape: the edge relation is the loop state. Each round
      partitioning, so the groupBy plans with no exchange;
   2. the round's removed set (deg < k) is materialized via
      localCheckpoint with its count riding an Observation (one job per
-     round, the pagerank/bfs driver pattern);
+     round, the bfs loop shape);
   3. cur_edges loses all edges touching removed vertices via two
      broadcast anti-joins — the removed set is small after the first
      round (peeling long tails), so no edge shuffle ever recurs.

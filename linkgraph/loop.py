@@ -4,7 +4,16 @@ Every Ligra-style kernel here has one shape: a vertex-state update
 repeated in rounds until a global scalar says stop. A kernel supplies
 its init state, a ``step(cur, edges) -> DataFrame`` round, the
 per-round scalar aggregate Columns and a stop predicate over one
-round's scalars; :func:`fixpoint` owns everything else, once:
+round's scalars; :func:`fixpoint` owns everything else, once.
+
+On it: the diff family (pagerank, pagerank_weighted, katz, ppr,
+eigenvector, hits, salsa), labelprop, kernels/cc.py's label loop (cc,
+and scc's forward-max coloring), kernels/scc.py's ``reach`` (scc's
+backward sweep, bowtie's two sweeps) and condensation's level
+relaxation. Still on hand-written loops: bfs, msbfs, sssp, kcore,
+coreness, mis, coloring, anf, louvain and pagerank_delta.
+
+What the driver owns:
 
 * Resume. ``last_complete`` -> ``load`` -> ``sever``; a saved record
   the stop predicate accepts returns at once.

@@ -231,11 +231,11 @@ def test_cc_takes_both_directions_in_one_run(spark, monkeypatch):
     round-0 frontier exceeds |E|/20 -> dense-pull; once the clique
     settles, only a hanging path's tail keeps changing -> frontier
     volume drops under the threshold -> sparse-push. One run, both
-    paths, result still exact. (The r6 small-graph dense override is
+    paths, result still exact. (The small-graph dense override is
     disabled here so the reference rule itself stays pinned; by
-    default graphs under LINKGRAPH_DENSE_CHAIN_EDGES run all-dense
-    chains — same results, no per-round broadcast.)"""
-    monkeypatch.setenv("LINKGRAPH_DENSE_CHAIN_EDGES", "0")
+    default graphs under cc.DENSE_CHAIN_EDGES run all-dense chains —
+    same results, no per-round broadcast.)"""
+    monkeypatch.setattr("linkgraph.kernels.cc.DENSE_CHAIN_EDGES", 0)
     clique = [(i, j) for i in range(20) for j in range(20) if i != j]
     tail = [(i, i + 1) for i in range(19, 30)]
     pdf = pd.DataFrame(clique + tail, columns=["src", "dst"])
@@ -1284,12 +1284,14 @@ def test_scc_matches_tarjan(rmat_graph):
 
 
 def test_scc_two_cycles_bridge(spark):
-    """1->2->3->1 bridged to 4->5->6->4: exactly the two 3-cycles plus
-    no cross-SCC merging over the bridge edge."""
+    """1->2->3->1 bridged to 4->5->6->4 (3->4, 2->6): exactly the two
+    3-cycles plus no cross-SCC merging over the bridge edges. In the
+    first sweep round 2 hears both roots, 3 (its own color) and 6, and
+    must still accept 3."""
     from linkgraph.kernels import scc
 
     edges = pd.DataFrame(
-        {"src": [1, 2, 3, 3, 4, 5, 6], "dst": [2, 3, 1, 4, 5, 6, 4]}
+        {"src": [1, 2, 3, 3, 4, 5, 6, 2], "dst": [2, 3, 1, 4, 5, 6, 4, 6]}
     )
     g = _graph(spark, edges, 7)
     res = scc(g)
@@ -1310,6 +1312,18 @@ def test_scc_dag_all_singletons(spark):
     res = scc(g)
     got = {r["id"]: r["scc"] for r in res.df.collect()}
     assert got == {v: v for v in range(6)}
+    g.unpersist()
+
+
+def test_scc_color_round_cap_raises(spark):
+    """max_color_rounds bounds the coloring: on a 4-cycle round 1
+    still changes a color, so a cap of 1 stops unconverged and raises."""
+    from linkgraph.kernels import scc
+
+    edges = pd.DataFrame({"src": [0, 1, 2, 3], "dst": [1, 2, 3, 0]})
+    g = _graph(spark, edges, 4)
+    with pytest.raises(RuntimeError, match="did not converge"):
+        scc(g, max_color_rounds=1)
     g.unpersist()
 
 

@@ -13,6 +13,8 @@ from linkgraph.build import build_graph_from_edges
 from linkgraph.checkpoint import CheckpointManager
 from linkgraph.datagen import rmat_edges
 from linkgraph.kernels import (
+    bowtie,
+    condensation,
     connected_components,
     eigenvector_centrality,
     hits,
@@ -22,6 +24,7 @@ from linkgraph.kernels import (
     pagerank_weighted,
     ppr,
     salsa,
+    scc,
 )
 
 
@@ -78,7 +81,7 @@ def _weights(g):
 
 
 # with a checkpoint every call saves every round and runs >= 2 rounds
-# on this graph
+# on this graph (scc: every outer round, and it runs one)
 KERNELS = {
     "pagerank": lambda g, ck: pagerank(g, tol=0.0, max_iter=4, ckpt=ck, ckpt_every=1),
     "connected_components": lambda g, ck: connected_components(g, ckpt=ck),
@@ -90,9 +93,13 @@ KERNELS = {
     ),
     "hits": lambda g, ck: hits(g, tol=0.0, max_iter=4, ckpt=ck, ckpt_every=1),
     "salsa": lambda g, ck: salsa(g, tol=0.0, max_iter=4, ckpt=ck, ckpt_every=1),
-    # no checkpoint parameter: its failure is a round's checkpoint raising
+    "scc": lambda g, ck: scc(g, ckpt=ck),
+    # no checkpoint parameter: their failure is a round's checkpoint raising
     "pagerank_weighted": lambda g, ck: pagerank_weighted(g, _weights(g), tol=0.0, max_iter=4),
+    "bowtie": lambda g, ck: bowtie(g),
+    "condensation": lambda g, ck: condensation(g),
 }
+NO_CKPT = {"pagerank_weighted", "bowtie", "condensation"}
 
 
 class _SecondSaveFails(CheckpointManager):
@@ -105,40 +112,54 @@ class _SecondSaveFails(CheckpointManager):
         super().save(*args, **kwargs)
 
 
+class _FirstSaveFails(_SecondSaveFails):
+    # scc saves once per outer round, and this graph peels in one
+    saves = 1
+
+
 @pytest.mark.parametrize("kernel", sorted(KERNELS))
 def test_loop_leaves_caller_state(spark, tmp_path, monkeypatch, kernel):
-    """Normal path: the only new persistent RDD is the returned
-    result's, no temp view is left, the conf is unchanged. Exception
-    path: no new persistent RDD is left and the conf is back to its
-    value before the call."""
+    """Normal path: the only new persistent RDDs are the returned
+    result's (condensation's two frames), no temp view is left, the
+    conf is unchanged. Exception path: no new persistent RDD is left
+    and the conf is back to its value before the call."""
     run = KERNELS[kernel]
     g = _rmat_graph(spark, 4)
     rdds0, views0, conf0 = _persistent_rdds(spark), _temp_views(spark), dict(spark.conf.getAll)
+    calls = {"n": 0, "fail": None}
+    cls = type(g.edges)
+    checkpoint = cls.localCheckpoint
+
+    def counted(self, eager=True, storageLevel=None):
+        calls["n"] += 1
+        if calls["n"] == calls["fail"]:
+            raise RuntimeError("injected round failure")
+        return checkpoint(self, eager, storageLevel)
+
+    monkeypatch.setattr(cls, "localCheckpoint", counted)
 
     res = run(g, None)
     res.df.count()
-    assert _persistent_rdds(spark) - rdds0 == {_result_rdd(res.df)}
+    want = {_result_rdd(res.df)}
+    if kernel == "condensation":
+        want.add(_result_rdd(res.edges))
+    assert _persistent_rdds(spark) - rdds0 == want
     assert _temp_views(spark) == views0
     assert dict(spark.conf.getAll) == conf0
     assert g.edges.storageLevel != StorageLevel.NONE
     del res
 
     rdds1 = _persistent_rdds(spark)
-    if kernel == "pagerank_weighted":
-        calls = {"n": 0}
-        cls = type(g.edges)
-        checkpoint = cls.localCheckpoint
-
-        def failing(self, eager=True, storageLevel=None):
-            calls["n"] += 1
-            if calls["n"] == 3:
-                raise RuntimeError("injected round failure")
-            return checkpoint(self, eager, storageLevel)
-
-        monkeypatch.setattr(cls, "localCheckpoint", failing)
+    if kernel in NO_CKPT:
+        # pagerank_weighted's third checkpoint is in its loop; bowtie's
+        # and condensation's last but one is a round of their own last
+        # loop, after scc's
+        calls.update(n=0, fail=3 if kernel == "pagerank_weighted" else calls["n"] - 1)
         ckpt = None
     else:
-        ckpt = _SecondSaveFails(str(tmp_path), kernel)
+        ckpt = (_FirstSaveFails if kernel == "scc" else _SecondSaveFails)(
+            str(tmp_path), kernel
+        )
     with pytest.raises(RuntimeError, match="injected"):
         run(g, ckpt)
     monkeypatch.undo()

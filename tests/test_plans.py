@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from linkgraph.build import build_graph_from_edges
 from linkgraph.datagen import rmat_edges
 from linkgraph.frontier import edge_map
-from linkgraph.kernels import label_propagation, pagerank
+from linkgraph.kernels import connected_components, label_propagation, pagerank, scc
 from linkgraph.loop import loop_width
 
 
@@ -192,8 +192,10 @@ def test_anf_round_aggregates_map_side(spark, tiny_graph):
 
 
 def test_scc_sweep_accept_is_equi_join_not_nested_loop(spark, tiny_graph):
-    """scc's backward sweep filters candidates by color equality AFTER
-    an equi-join on dst; Catalyst must plan a hash/broadcast equi-join
+    """The multi-lane accept (edge_map group_extra, then a lane/color
+    equality filter, as in the msbfs and betweenness lanes)
+    filters candidates by color equality AFTER an equi-join on dst;
+    Catalyst must plan a hash/broadcast equi-join
     (the color predicate is a post-join filter), never fall to a
     nested-loop/cartesian — that would be an n^2 sweep at scale. Also
     pins that the cond() anti-join (exclude_dst) sits BELOW the
@@ -634,9 +636,13 @@ def test_sever_loop_stays_flat(spark):
 
 
 # kernel module -> a call that builds >= 3 rounds in its first chain
+# (scc: the first chain of its backward sweep; its coloring runs
+# through cc's label loop, so cc's rows pin that round)
 ROUND_KERNELS = {
     "linkgraph.kernels.pagerank": lambda g: pagerank(g, tol=0.0, max_iter=4),
     "linkgraph.kernels.labelprop": lambda g: label_propagation(g, max_iter=4),
+    "linkgraph.kernels.cc": lambda g: connected_components(g, max_iter=4),
+    "linkgraph.kernels.scc": scc,
 }
 
 
@@ -685,6 +691,8 @@ def width2_graph(spark):
     "module, expected",
     [
         ("linkgraph.kernels.labelprop", []),
+        ("linkgraph.kernels.cc", []),
+        ("linkgraph.kernels.scc", []),
         ("linkgraph.kernels.pagerank", ["BroadcastPartitioning(IdentityBroadcastMode)"]),
     ],
 )
@@ -694,7 +702,8 @@ def test_round_plan_at_width_one_has_no_hash_exchange(
     """Below 64k edges the build and the loop use one partition, which
     satisfies every clustered distribution: a steady-state round has no
     scatter, gather or apply exchange. pagerank keeps only its one-row
-    dangling-mass broadcast; labelprop has no exchange at all."""
+    dangling-mass broadcast; labelprop, cc and the scc sweep have no
+    exchange at all."""
     g = build_graph_from_edges(
         spark.createDataFrame(rmat_edges(scale=8, seed=3), "src long, dst long")
     )
@@ -722,6 +731,17 @@ def test_labelprop_round_plan_at_width_two(spark, monkeypatch, width2_graph):
     ex = _round_exchanges(monkeypatch, "linkgraph.kernels.labelprop", width2_graph)
     assert len(ex) == 2, ex
     assert all(x.startswith("hashpartitioning(dst#") for x in ex), ex
+
+
+@pytest.mark.parametrize("module", ["linkgraph.kernels.cc", "linkgraph.kernels.scc"])
+def test_frontier_round_plan_at_width_two(spark, monkeypatch, width2_graph, module):
+    """At width 2 a cc round and an scc sweep round exchange only their
+    gather key (hash on dst): the scatter join reads the state and the
+    src-laid-out edge cache (the sweep's transposed copy) in place, and
+    the apply join meets the gather on the vertex id alone."""
+    ex = _round_exchanges(monkeypatch, module, width2_graph)
+    assert len(ex) == 1, ex
+    assert ex[0].startswith("hashpartitioning(dst#") and ex[0].endswith(", 2)"), ex
 
 
 def _executed_node_names(plan) -> list[str]:
