@@ -8,24 +8,34 @@ vertex ids"). Assignment is deterministic and shuffle-parallel — no
 zipWithIndex, no single-partition window:
   1. hash-partition distinct urls into P partitions (hash(url) is
      deterministic), sort within each partition by url;
-  2. count rows per partition, broadcast the exclusive prefix sums;
-  3. mapInPandas assigns id = partition_offset + local_row_number.
+  2. count rows per partition (one P-row collect); the exclusive
+     prefix sums are the partition offsets;
+  3. id = offset[spark_partition_id()] + the row's index within its
+     partition (the low 33 bits of monotonically_increasing_id()),
+     read in the JVM over the same cached, sorted partitions: no
+     Python worker, no Arrow round trip.
 Given fixed P the mapping url->id is a pure function of the url set.
 """
 
 from __future__ import annotations
 
+import itertools
+from contextlib import nullcontext
 from dataclasses import dataclass
 
-import numpy as np
-from pyspark import StorageLevel, TaskContext
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from linkgraph.extract import edges_from_pages
-from linkgraph.loop import loop_width
+from linkgraph.loop import loop_conf, loop_width
+from linkgraph.session import conf_override
 
 EDGES_SCHEMA = "src long, dst long"
+
+# monotonically_increasing_id() holds the partition index above bit 33
+# and the row's index within its partition below it
+_ROW_INDEX = (1 << 33) - 1
 
 
 @dataclass
@@ -61,51 +71,46 @@ class Graph:
                 pass
 
 
+def _number(
+    part: DataFrame, p: int, cols: list[str], name: str = "id", start: int = 0
+) -> DataFrame:
+    """Number the rows of a p-partition frame densely from `start`, in
+    partition order, then row order: each partition's offset from one
+    p-row count collect, plus the row's index within its partition. The
+    counts and the ids read the same cached `part`, which is released
+    once the ids are. Returns `cols` (`name` among them is the id),
+    cached and materialized."""
+    part = part.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        counts = dict(part.groupBy(F.spark_partition_id()).count().collect())
+        offsets = itertools.accumulate(
+            (counts.get(pid, 0) for pid in range(p - 1)), initial=start
+        )
+        offset = F.array(*[F.lit(o).cast("long") for o in offsets])[F.spark_partition_id()]
+        ids = offset + F.monotonically_increasing_id().bitwiseAND(_ROW_INDEX)
+        out = part.select(
+            *[ids.alias(name) if c == name else c for c in cols]
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        out.count()
+    finally:
+        part.unpersist()
+    return out
+
+
 def assign_dense_ids(
     urls: DataFrame, key: str = "url", num_partitions: int | None = None
 ) -> DataFrame:
-    """Distinct `key` values -> (id long, <key>) with ids dense 0..n-1.
+    """Distinct `key` values -> (id long, <key>) with ids dense 0..n-1,
+    cached.
 
     Deterministic given the value set and P (see module docstring).
     Scales: the only driver-side data is P partition counts.
     """
-    spark = urls.sparkSession
-    p = num_partitions or spark.sparkContext.defaultParallelism
+    p = num_partitions or urls.sparkSession.sparkContext.defaultParallelism
     part = (
-        urls.select(key)
-        .distinct()
-        .repartition(p, F.col(key))
-        .sortWithinPartitions(key)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        urls.select(key).distinct().repartition(p, F.col(key)).sortWithinPartitions(key)
     )
-    counts = {
-        r["pid"]: r["cnt"]
-        for r in part.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    offsets = {}
-    acc = 0
-    for pid in range(p):
-        offsets[pid] = acc
-        acc += counts.get(pid, 0)
-    offsets_bc = spark.sparkContext.broadcast(offsets)
-
-    out_schema = f"id long, {key} string"
-
-    def assign(iterator):
-        pid = TaskContext.get().partitionId()
-        start = offsets_bc.value[pid]
-        seen = 0
-        for pdf in iterator:
-            n = len(pdf)
-            yield pdf.assign(id=np.arange(start + seen, start + seen + n, dtype="int64"))[
-                ["id", key]
-            ]
-            seen += n
-
-    ids = part.mapInPandas(assign, schema=out_schema)
-    return ids
+    return _number(part, p, ["id", key])
 
 
 def build_graph_from_pages(
@@ -117,53 +122,76 @@ def build_graph_from_pages(
     to pages outside the crawl become sink vertices (out_deg 0) and the
     dangling-mass path is exercised.
 
+    Ids are assigned at `num_partitions`, by default at the loop width
+    of the edge count; the edge table is laid out once, at its default
+    data-sized width. A build at width 1 runs as one-partition queries
+    under the loop conf (loop.loop_conf): on a 2,000-page crawl
+    (local[4]) the build went 24 -> 11 jobs with the one-pass extract.
+
     `phase_walls`: pass a dict to record per-phase wall seconds
-    (extract_s / ids_s / build_s). Phase boundaries are forced with a
-    count() on the already-persisted intermediate, so the only extra
-    work is that scan — used by bench.py to decompose the web leg."""
+    (extract_s / ids_s / build_s). The phase boundaries are the build's
+    own materializations (the edge count, the id cache), so recording
+    them adds no work — used by bench.py to decompose the web leg."""
     import time as _time
 
+    spark = pages.sparkSession
     t0 = _time.time()
     url_edges = edges_from_pages(pages).persist(StorageLevel.MEMORY_AND_DISK)
-    if phase_walls is not None:
-        url_edges.count()
-        phase_walls["extract_s"] = round(_time.time() - t0, 3)
-        t0 = _time.time()
-    all_urls = (
-        pages.select(F.col("url"))
-        .union(url_edges.select(F.col("dst_url").alias("url")))
-        .distinct()
-    )
-    vertices = assign_dense_ids(all_urls, "url", num_partitions).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    if phase_walls is not None:
-        vertices.count()
-        phase_walls["ids_s"] = round(_time.time() - t0, 3)
-        t0 = _time.time()
-    # two broadcast-or-shuffle joins map urls -> ids; vertices is the
-    # smaller side at web scale? No — vertices is huge; both joins are
-    # shuffle hash joins on url. AQE picks the strategy.
-    edges = (
-        url_edges.join(
-            vertices.withColumnRenamed("url", "src_url").withColumnRenamed("id", "src"),
-            "src_url",
-        )
-        .join(
-            vertices.withColumnRenamed("url", "dst_url").withColumnRenamed("id", "dst"),
-            "dst_url",
-        )
-        .select("src", "dst")
-    )
-    # edges_from_pages is deduped by construction (per-page dedup in
-    # the UDF, src_url is the page key) and the url->id mapping is
-    # 1:1, so the build's dedup pass — a full (src,dst) exchange +
-    # aggregate — is redundant here (r6, guide §2.4).
-    g = build_graph_from_edges(edges, vertices=vertices, assume_deduped=True)
-    if phase_walls is not None:
-        phase_walls["build_s"] = round(_time.time() - t0, 3)
-    url_edges.unpersist()
-    return g
+    try:
+        # the exact m: edges_from_pages is deduped by construction
+        # (per-page dedup in the UDF, src_url is the page key) and the
+        # url->id mapping is 1:1
+        m = url_edges.count()
+        if phase_walls is not None:
+            phase_walls["extract_s"] = round(_time.time() - t0, 3)
+            t0 = _time.time()
+        w = num_partitions or loop_width(m)
+        with _at_width(spark, w):
+            all_urls = pages.select("url").union(
+                url_edges.select(F.col("dst_url").alias("url"))
+            )
+            vertices = assign_dense_ids(all_urls, "url", w)
+            if phase_walls is not None:
+                phase_walls["ids_s"] = round(_time.time() - t0, 3)
+                t0 = _time.time()
+            edges = (
+                url_edges.join(
+                    vertices.withColumnRenamed("url", "src_url").withColumnRenamed("id", "src"),
+                    "src_url",
+                )
+                .join(
+                    vertices.withColumnRenamed("url", "dst_url").withColumnRenamed("id", "dst"),
+                    "dst_url",
+                )
+                .select("src", "dst")
+            )
+            # no dedup pass (a full (src,dst) exchange + aggregate) and
+            # no count to size the layout: both are known from m
+            g = build_graph_from_edges(
+                edges,
+                vertices=vertices,
+                num_partitions=_edge_width(spark, m),
+                assume_deduped=True,
+            )
+        if phase_walls is not None:
+            phase_walls["build_s"] = round(_time.time() - t0, 3)
+        return g
+    finally:
+        url_edges.unpersist()
+
+
+def _at_width(spark: SparkSession, width: int):
+    """The conf of a build's queries at `width`: at width 1 the loop's
+    own (one partition leaves AQE nothing to coalesce or split, and no
+    sort-merge join is worth its sorts); a wider build keeps the
+    session's."""
+    return conf_override(spark, loop_conf(1)) if width == 1 else nullcontext()
+
+
+def _edge_width(spark: SparkSession, m: int) -> int:
+    """The default edge layout: the loop width, never wider than the
+    default parallelism."""
+    return min(loop_width(m), spark.sparkContext.defaultParallelism)
 
 
 def _csr_layout(edges: DataFrame, p: int) -> DataFrame:
@@ -185,7 +213,9 @@ def build_graph_from_edges(
     edge table hash-partitioned by src (the 'CSR edge table' — the
     bucketed layout the reference's CSR build S2 maps to) at
     `num_partitions`, by default at its data-sized loop width, never
-    wider than the default parallelism.
+    wider than the default parallelism. Once the edge count puts the
+    table at width 1, the re-layout, vertex and degree queries run
+    under the loop conf, as one-partition queries.
 
     If `vertices` is None the vertex set is ids 0..n-1 when `n` given,
     else the distinct ids appearing in edges.
@@ -197,39 +227,41 @@ def build_graph_from_edges(
         edges = edges.distinct()
     edges = _csr_layout(edges, p)
     m = edges.count()
-    if num_partitions is None and loop_width(m) < p:
-        # lay the cache out for its size, so the loops run on it as is
-        # instead of re-caching it on every call
-        wide, edges = edges, _csr_layout(edges, loop_width(m))
-        edges.count()
-        wide.unpersist()
-    if vertices is None:
-        if n is not None:
-            vertices = spark.range(n).select(F.col("id").cast("long"))
-        else:
-            vertices = (
-                edges.select(F.col("src").alias("id"))
-                .union(edges.select(F.col("dst").alias("id")))
-                .distinct()
-            )
-        vertices = vertices.persist(StorageLevel.MEMORY_AND_DISK)
-    n_count = vertices.count()
-    out_deg = edges.groupBy(F.col("src").alias("id")).agg(
-        F.count("*").alias("out_deg")
-    )
-    in_deg = edges.groupBy(F.col("dst").alias("id")).agg(F.count("*").alias("in_deg"))
-    degrees = (
-        vertices.select("id")
-        .join(out_deg, "id", "left")
-        .join(in_deg, "id", "left")
-        .select(
-            "id",
-            F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-            F.coalesce("in_deg", F.lit(0)).alias("in_deg"),
+    width = num_partitions or _edge_width(spark, m)
+    with _at_width(spark, width):
+        if width < p:
+            # lay the cache out for its size, so the loops run on it as
+            # is instead of re-caching it on every call
+            wide, edges = edges, _csr_layout(edges, width)
+            edges.count()
+            wide.unpersist()
+        if vertices is None:
+            if n is not None:
+                vertices = spark.range(n).select(F.col("id").cast("long"))
+            else:
+                vertices = (
+                    edges.select(F.col("src").alias("id"))
+                    .union(edges.select(F.col("dst").alias("id")))
+                    .distinct()
+                )
+            vertices = vertices.persist(StorageLevel.MEMORY_AND_DISK)
+        n_count = vertices.count()
+        out_deg = edges.groupBy(F.col("src").alias("id")).agg(
+            F.count("*").alias("out_deg")
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    degrees.count()
+        in_deg = edges.groupBy(F.col("dst").alias("id")).agg(F.count("*").alias("in_deg"))
+        degrees = (
+            vertices.select("id")
+            .join(out_deg, "id", "left")
+            .join(in_deg, "id", "left")
+            .select(
+                "id",
+                F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
+                F.coalesce("in_deg", F.lit(0)).alias("in_deg"),
+            )
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        degrees.count()
     return Graph(vertices=vertices, edges=edges, degrees=degrees, n=n_count, m=m)
 
 
@@ -350,44 +382,18 @@ def assign_ordered_ids(
     value set AND P), the range-partitioned variant is a pure function
     of the value set alone — partition boundaries move with P but the
     (sorted-order) ids do not — so a SQL ROW_NUMBER reproduces it.
-    Same two-phase scan: P-row count collect + broadcast offsets +
-    Arrow per-partition enumeration. Used by the incremental-update
-    path where new-vertex ids must be engine-reproducible.
+    Same numbering (P-row count collect + JVM in-partition row index),
+    cached. Used by the incremental-update path where new-vertex ids
+    must be engine-reproducible.
     """
-    spark = urls.sparkSession
-    p = num_partitions or spark.sparkContext.defaultParallelism
+    p = num_partitions or urls.sparkSession.sparkContext.defaultParallelism
     part = (
         urls.select(key)
         .distinct()
         .repartitionByRange(p, F.col(key))
         .sortWithinPartitions(key)
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    counts = {
-        r["pid"]: r["cnt"]
-        for r in part.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    offsets = {}
-    acc = int(start)
-    for pid in range(p):
-        offsets[pid] = acc
-        acc += counts.get(pid, 0)
-    offsets_bc = spark.sparkContext.broadcast(offsets)
-    out_schema = f"id long, {key} string"
-
-    def assign(iterator):
-        pid = TaskContext.get().partitionId()
-        pos = offsets_bc.value[pid]
-        for pdf in iterator:
-            n = len(pdf)
-            yield pdf.assign(id=np.arange(pos, pos + n, dtype="int64"))[
-                ["id", key]
-            ]
-            pos += n
-
-    return part.mapInPandas(assign, schema=out_schema)
+    return _number(part, p, ["id", key], start=int(start))
 
 
 def update_graph(
@@ -421,7 +427,6 @@ def update_graph(
     if "url" not in graph.vertices.columns:
         raise ValueError("update_graph needs a url-mapped graph "
                          "(vertices must carry a url column)")
-    spark = graph.vertices.sparkSession
     url_edges = edges_from_pages(new_pages).persist(StorageLevel.MEMORY_AND_DISK)
 
     seen = (
@@ -458,6 +463,7 @@ def update_graph(
         kept.union(fresh), vertices=vertices, num_partitions=num_partitions
     )
     url_edges.unpersist()
+    new_ids.unpersist()  # vertices holds its rows now
     return g
 
 
@@ -476,10 +482,10 @@ def relabel_by_degree(
     new_id is dense 0..n-1 in GLOBAL (deg DESC, id ASC) order — a pure
     function of the degree table, so a SQL
     ``ROW_NUMBER() OVER (ORDER BY deg DESC, id) - 1`` reproduces it
-    exactly. Same two-phase shape as assign_ordered_ids: range
-    partition + in-partition sort, a P-row count collect, broadcast
-    offsets, Arrow per-partition enumeration — no single-partition
-    window, no zipWithIndex, scales to 10^12 vertices.
+    exactly. Same numbering as assign_ordered_ids: range partition +
+    in-partition sort, a P-row count collect, the JVM in-partition row
+    index — no single-partition window, no zipWithIndex, scales to
+    10^12 vertices. The map is returned cached.
 
     order: "out" | "in" | "total" — which degree ranks first.
     """
@@ -490,42 +496,13 @@ def relabel_by_degree(
         "in": F.col("in_deg"),
         "total": F.col("out_deg") + F.col("in_deg"),
     }[order]
-    spark = graph.degrees.sparkSession
-    p = num_partitions or spark.sparkContext.defaultParallelism
+    p = num_partitions or graph.degrees.sparkSession.sparkContext.defaultParallelism
     part = (
         graph.degrees.select("id", deg_col.cast("long").alias("deg"))
         .repartitionByRange(p, F.col("deg").desc(), F.col("id"))
         .sortWithinPartitions(F.col("deg").desc(), F.col("id"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    counts = {
-        r["pid"]: r["cnt"]
-        for r in part.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count("*").alias("cnt"))
-        .collect()
-    }
-    offsets = {}
-    acc = 0
-    for pid in range(p):
-        offsets[pid] = acc
-        acc += counts.get(pid, 0)
-    offsets_bc = spark.sparkContext.broadcast(offsets)
-
-    def assign(iterator):
-        pid = TaskContext.get().partitionId()
-        pos = offsets_bc.value[pid]
-        for pdf in iterator:
-            n = len(pdf)
-            yield pdf.assign(new_id=np.arange(pos, pos + n, dtype="int64"))[
-                ["id", "new_id", "deg"]
-            ]
-            pos += n
-
-    out = part.mapInPandas(assign, schema="id long, new_id long, deg long")
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    part.unpersist()
-    return out
+    return _number(part, p, ["id", "new_id", "deg"], name="new_id")
 
 
 def relabel_edges(graph: Graph, mapping: DataFrame) -> DataFrame:

@@ -107,10 +107,18 @@ def extract_pages(pages: DataFrame) -> DataFrame:
 def edges_from_pages(pages: DataFrame) -> DataFrame:
     """(src_url, dst_url) href edges, deduped (dedup per page happens in
     the UDF; cross-page duplicates are impossible since src_url is the
-    page key, so no global distinct is needed — no extra shuffle)."""
-    return extract_pages(pages).select(
-        F.col("url").alias("src_url"),
-        F.explode("hrefs").alias("dst_url"),
+    page key, so no global distinct is needed — no extra shuffle).
+
+    One UDF pass per page: from a plain ``explode`` Catalyst infers
+    ``size(hrefs) > 0`` and pushes it below the projection, where it
+    re-evaluates the UDF, so the executed plan parsed every page twice
+    (two ArrowEvalPython nodes; 0.98 s -> 0.56 s to count 2,000 pages
+    once, local[4]). ``explode_outer`` infers no filter, and its null
+    row for a page without hrefs is dropped above the Generate."""
+    return (
+        extract_pages(pages)
+        .select(F.col("url").alias("src_url"), F.explode_outer("hrefs").alias("dst_url"))
+        .where(F.col("dst_url").isNotNull())
     )
 
 

@@ -123,6 +123,7 @@ def condensation(
             release(owned)
     if not fp.converged:
         release(cedges)
+        release(fp.state)
         raise RuntimeError(
             f"condensation did not converge in {max_iter} rounds — "
             "the labels input is not a valid SCC labeling (cycle in "

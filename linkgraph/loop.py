@@ -38,15 +38,17 @@ What the driver owns:
   without the SQL round's ``cur`` qualifier, which Spark cannot map
   onto a second reference of the checkpointed state: that costs one
   n-row scatter Exchange per round.
-* Loop conf. AQE is off unless the kernel was called with
-  ``adaptive=True``: plan shapes are fixed, and AQE's per-stage
-  re-planning cost 0.3-0.7 s of driver latency per round (25-35 % of
-  the round on rMAT-20). Sort-merge join is not preferred: the edge
+* Loop conf (:func:`loop_conf`). AQE is off unless the kernel was
+  called with ``adaptive=True``: plan shapes are fixed, and AQE's
+  per-stage re-planning cost 0.3-0.7 s of driver latency per round
+  (25-35 % of the round on rMAT-20). Sort-merge join is not preferred: the edge
   cache is src-laid-out and SMJ re-sorts the n-row state on both joins
   of every round. Shuffle partitions are pinned to the edge partitions
   so the scatter and apply joins are co-partitioned; a mismatched
   count re-adds one n-row exchange per round (10.0-11.1 s vs 8.9 s at
-  sf0.1).
+  sf0.1). A build whose edge table fits one partition runs its queries
+  under the same conf (build.py), where one partition leaves AQE
+  nothing to coalesce or split.
 * Chains. Rounds are built through ``localCheckpoint(eager=False)``:
   each round's plan truncates to a LogicalRDD leaf, so Catalyst work
   stays linear in the chain (in-plan chaining cloned the round subtree
@@ -104,6 +106,19 @@ _VIEW_SEQ = itertools.count()
 def loop_width(m: int) -> int:
     """Data-sized partition count for an m-row edge table."""
     return max(1, math.ceil(m / EDGE_ROWS_PER_PART))
+
+
+def loop_conf(width: int, adaptive: bool = False) -> dict[str, str]:
+    """The session conf of queries over a ``width``-partition edge
+    table: the loop's rounds, and a build whose edges fit one
+    partition (see "Loop conf" above)."""
+    conf = {
+        "spark.sql.join.preferSortMergeJoin": "false",
+        "spark.sql.shuffle.partitions": str(width),
+    }
+    if not adaptive:
+        conf["spark.sql.adaptive.enabled"] = "false"
+    return conf
 
 
 def view_names(prefix: str) -> tuple[str, str]:
@@ -250,12 +265,6 @@ def fixpoint(
     try:
         loop_edges, recached = _loop_edges(edges, m)
         width = loop_edges.rdd.getNumPartitions()
-        conf = {
-            "spark.sql.join.preferSortMergeJoin": "false",
-            "spark.sql.shuffle.partitions": str(width),
-        }
-        if not adaptive:
-            conf["spark.sql.adaptive.enabled"] = "false"
         if views is not None:
             loop_edges.createOrReplaceTempView(views[0])
         cur = state
@@ -264,7 +273,7 @@ def fixpoint(
         it = start
         converged = False
         metrics: list[dict] = []
-        with conf_override(spark, conf):
+        with conf_override(spark, loop_conf(width, adaptive)):
             while it < max_iter and not converged:
                 chain_t0 = time.time()
                 c = min(cap, (plan(prev) if plan is not None else None) or cap)

@@ -23,7 +23,7 @@ a SQL window reproduces it exactly.
 
 Spark shape (100 TB posture): the global order prefix sum is NOT a
 single-partition window — it is the two-phase distributed scan
-build.py's assign_dense_ids already uses: repartitionByRange(doc_id)
+build.py numbers its ids with: repartitionByRange(doc_id)
 + sortWithinPartitions (RangePartitioner keeps partition i's keys
 below partition i+1's), one P-row collect of per-partition token
 sums, then an Arrow `mapInPandas` adds each partition's broadcast

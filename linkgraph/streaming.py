@@ -47,7 +47,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from linkgraph.extract import extract_pages
+from linkgraph.extract import edges_from_pages
 
 # Common-Crawl-style pages table (BASELINE.json input_hint); file
 # streams need the schema declared up front (no inference mid-stream).
@@ -71,14 +71,10 @@ def read_page_stream(spark: SparkSession, source_dir: str) -> DataFrame:
 
 def page_stream_to_edges(pages: DataFrame) -> DataFrame:
     """Streaming pages -> (src_url, dst_url) href-edge rows, using the
-    SAME Arrow-batched extractor as the batch build (extract.py —
-    byte-identical text semantics). Pure projection: streaming-safe
-    with no state store, no watermark, no shuffle."""
-    ex = extract_pages(pages)
-    return ex.select(
-        F.col("url").alias("src_url"),
-        F.explode("hrefs").alias("dst_url"),
-    )
+    SAME edge extraction as the batch build (extract.edges_from_pages:
+    one Arrow UDF pass per page). Pure projection: streaming-safe with
+    no state store, no watermark, no shuffle."""
+    return edges_from_pages(pages)
 
 
 def stream_pages_to_edges(

@@ -4,6 +4,7 @@ write/read round-trip."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from linkgraph.build import (
@@ -66,6 +67,89 @@ def test_build_graph_from_pages(spark):
         assert deg.loc[vid, "out_deg"] == out_counts.get(vid, 0)
     assert int(deg["out_deg"].sum()) == g.m
     assert int(deg["in_deg"].sum()) == g.m
+    g.unpersist()
+
+
+def _persistent_rdds(spark) -> set[int]:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
+
+
+def _mapinpandas_ids(urls, key: str, p: int) -> dict:
+    """The Arrow numbering assign_dense_ids replaced, kept as its
+    oracle: hash partitions sorted by key, a P-row count collect,
+    broadcast offsets, then a per-partition mapInPandas enumeration."""
+    import numpy as np
+    from pyspark import TaskContext
+
+    part = (
+        urls.select(key).distinct().repartition(p, F.col(key)).sortWithinPartitions(key)
+    ).persist()
+    counts = dict(part.groupBy(F.spark_partition_id()).count().collect())
+    offsets, acc = {}, 0
+    for pid in range(p):
+        offsets[pid], acc = acc, acc + counts.get(pid, 0)
+    offsets_bc = urls.sparkSession.sparkContext.broadcast(offsets)
+
+    def assign(batches):
+        pos = offsets_bc.value[TaskContext.get().partitionId()]
+        for pdf in batches:
+            yield pdf.assign(id=np.arange(pos, pos + len(pdf), dtype="int64"))[["id", key]]
+            pos += len(pdf)
+
+    out = part.mapInPandas(assign, schema=f"id long, {key} string").toPandas()
+    part.unpersist()
+    return dict(zip(out[key], out["id"]))
+
+
+@pytest.mark.parametrize("p", [1, 4])
+def test_assign_dense_ids_equals_the_mapinpandas_numbering(spark, p):
+    pdf = generate_pages(PagesSpec(n_pages=60))
+    urls = spark.createDataFrame(
+        pd.DataFrame({"url": sorted(set(pdf["url"]) | {d for _, d in expected_edges(pdf)})})
+    )
+    rdds0 = _persistent_rdds(spark)
+    ids = assign_dense_ids(urls, num_partitions=p)
+    got = ids.toPandas()
+    ids.unpersist()
+    assert _persistent_rdds(spark) - rdds0 == set()  # the sorted partitions are released
+    assert dict(zip(got["url"], got["id"])) == _mapinpandas_ids(urls, "url", p)
+
+
+def test_default_page_build_runs_at_its_loop_width(spark, monkeypatch):
+    """A crawl below EDGE_ROWS_PER_PART edges builds at its loop width,
+    1: the edge table is laid out once, and edges, vertices and degrees
+    are one partition each. The build leaves the session conf and temp
+    views as they were, and no cache behind once the graph is
+    unpersisted."""
+    import linkgraph.build as build
+
+    pdf = generate_pages(PagesSpec(n_pages=60))
+    pages = spark.createDataFrame(pdf)
+    layouts = []
+    layout = build._csr_layout
+    monkeypatch.setattr(build, "_csr_layout", lambda e, p: layouts.append(p) or layout(e, p))
+    rdds0 = _persistent_rdds(spark)
+    conf0 = dict(spark.conf.getAll)
+    views0 = spark.catalog.listTables()
+    g = build_graph_from_pages(pages)
+    assert loop_width(g.m) == 1 and layouts == [1]
+    assert [df.rdd.getNumPartitions() for df in (g.edges, g.vertices, g.degrees)] == [1, 1, 1]
+    assert dict(spark.conf.getAll) == conf0
+    assert spark.catalog.listTables() == views0
+    v = {r["id"]: r["url"] for r in g.vertices.collect()}
+    assert {(v[r["src"]], v[r["dst"]]) for r in g.edges.collect()} == expected_edges(pdf)
+    g.unpersist()
+    assert _persistent_rdds(spark) - rdds0 == set()
+
+
+def test_page_build_assigns_ids_at_its_num_partitions(spark):
+    """An explicit num_partitions is the width ids are assigned at; the
+    edge table keeps its data-sized layout."""
+    pdf = generate_pages(PagesSpec(n_pages=60))
+    g = build_graph_from_pages(spark.createDataFrame(pdf), num_partitions=4)
+    urls = spark.createDataFrame(pd.DataFrame({"url": [r["url"] for r in g.vertices.collect()]}))
+    assert {r["url"]: r["id"] for r in g.vertices.collect()} == _mapinpandas_ids(urls, "url", 4)
+    assert g.edges.rdd.getNumPartitions() == loop_width(g.m)
     g.unpersist()
 
 

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import build_graph_from_edges
-from linkgraph.checkpoint import CheckpointManager
+from linkgraph.checkpoint import CheckpointManager, release, sever
 from linkgraph.datagen import rmat_edges
 from linkgraph.kernels import (
     bowtie,
@@ -168,3 +168,19 @@ def test_loop_leaves_caller_state(spark, tmp_path, monkeypatch, kernel):
     assert dict(spark.conf.getAll) == conf0
     assert _temp_views(spark) == views0
     g.unpersist()
+
+
+def test_release_sees_through_a_projection(spark):
+    """A loop's scratch-free state is a Project over the checkpoint's
+    LogicalRDD (and an alias adds a SubqueryAlias): release frees the
+    RDD under either, and leaves any other plan shape alone."""
+    for narrow in (
+        lambda df: df.drop("x"),
+        lambda df: df.alias("a").select("id"),
+    ):
+        df = sever(spark.range(8).withColumn("x", F.col("id") * 2))
+        rdd = _result_rdd(df)
+        release(df.where("id > 2"))
+        assert rdd in _persistent_rdds(spark)
+        release(narrow(df))
+        assert rdd not in _persistent_rdds(spark)

@@ -798,6 +798,21 @@ def test_triangle_count_plan_below_cap(spark, monkeypatch):
     g.unpersist()
 
 
+def test_page_extraction_parses_each_page_once(spark):
+    """Each page goes through its extraction UDF once: one
+    ArrowEvalPython in the executed plans of edges_from_pages, of the
+    streaming edge projection (on a batch frame) and of anchor_texts.
+    From a plain explode Catalyst infers size(hrefs) > 0 and pushes it
+    below the UDF projection, which evaluates the UDF a second time."""
+    from linkgraph.datagen import PagesSpec, generate_pages
+    from linkgraph.extract import anchor_texts, edges_from_pages
+    from linkgraph.streaming import page_stream_to_edges
+
+    pages = spark.createDataFrame(generate_pages(PagesSpec(n_pages=20)))
+    for make in (edges_from_pages, page_stream_to_edges, anchor_texts):
+        assert _plan(make(pages)).count("ArrowEvalPython") == 1, make.__name__
+
+
 def test_committed_plan_audit_is_clean():
     """The committed plan-audit artifact (tools/plan_audit.py ->
     PLANS_r6.json, r5 fallback) must show zero CartesianProduct and
