@@ -152,6 +152,25 @@ class CheckpointManager:
         record = json.loads(_fs_read_text(spark, f"{d}/_metrics.json"))
         return state, frontier, record
 
+    def load_deltas(self, spark: SparkSession) -> tuple[DataFrame, dict] | None:
+        """Resume a delta layout (bfs, msbfs and the peel kernels): the
+        union of every complete iteration's state, and the last one's
+        record; None before the first. Delta rounds are numbered from
+        1, and a gap would silently drop its delta, so it raises."""
+        done = self.complete_iters()
+        if not done:
+            return None
+        if done != list(range(1, done[-1] + 1)):
+            raise RuntimeError(
+                f"non-contiguous delta checkpoints {done} under {self.job}: "
+                "cannot reconstruct the state"
+            )
+        union, record = None, {}
+        for i in done:
+            state, _, record = self.load(spark, i)
+            union = state if union is None else union.union(state)
+        return union, record
+
     def clear(self) -> None:
         spark = _active_spark()
         fs, path = _fs_and_path(spark, f"{self.root.rstrip('/')}/{self.job}")
@@ -179,16 +198,26 @@ def sever(df: DataFrame) -> DataFrame:
     per-row state, wrap it in an identity groupBy on its key.
     pagerank's loop is naturally immune because its only derived
     branch passes the gather aggregation; louvain needed an explicit
-    identity-aggregate (kernels/louvain.py `vstate`). The second
-    measured case was trussness: a support recompute that oriented
-    the severed edge list through a plain unionAll fed two
-    un-aggregated state paths into both its wedge and closing joins,
-    and rounds grew ~5× each (1.3 s → 199 s by round 14 on 250
-    edges). The cure is the dedupe (a distinct aggregation) inside
-    kernels/triangles.py `oriented_edges`, which every triangle-family
-    loop now enumerates through. Pinned by
-    tests/test_plans.py::test_sever_loop_stays_flat and
-    tests/test_kernels.py::test_trussness_matches_sequential_peeling."""
+    identity-aggregate (kernels/louvain.py `vstate`). Pinned by
+    tests/test_plans.py::test_sever_loop_stays_flat.
+
+    ESTIMATE CAVEAT (measured, Spark 4.1, trussness): the LogicalRDD
+    this returns keeps the estimated statistics of the plan it came
+    from. A loop whose next state is a view over a join of its last
+    state (trussness's residual was a filter over `cur ⋈ support`)
+    multiplies join estimates round after round, so the estimated
+    sizeInBytes of the state squares: 1.8e10, 7.2e20, 1.2e42, 3.2e84
+    in rounds 1-4, over 4,300 digits by round 10 on R-MAT scale 8
+    symmetrized (2,062 edges). Round walls stayed ~0.8 s to round 15,
+    then reached 28.8 s by round 21, and an uncapped run ran out of
+    driver heap inside localCheckpoint around round 26. (A support
+    recompute that met two un-aggregated state paths had compounded
+    too, 1.3 s -> 199 s by round 14 on 250 edges; the dedupe inside
+    kernels/triangles.py `oriented_edges` cured that shape, not this
+    one.) The cure is linkgraph/loop.py `peel`'s residual rule: a
+    residual shrinks only by a left-anti join, whose estimate is its
+    left input's, so it stays that of the input table. Pinned by
+    tests/test_loop.py::test_trussness_residual_keeps_its_input_estimate."""
     return df.localCheckpoint(eager=True)
 
 

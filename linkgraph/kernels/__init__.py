@@ -13,8 +13,8 @@ msbfs           multi-source BFS (all lanes in one frontier loop) +
 coreness        full k-core decomposition: per-vertex core numbers +
                 degeneracy via level-synchronous bucket peeling
                 (Batagelj-Zaveršnik / Julienne KCore)
-kcore           k-core membership via iterative peeling (broadcast
-                anti-join removals over the bucketed edge state)
+kcore           k-core membership via iterative peeling (loop.py's
+                peel: anti-join removals over the bucketed edge state)
 betweenness     sampled-source Brandes BC (laned forward sigma sweep +
                 level-synchronous backward dependency accumulation)
 sssp            weighted single-source shortest paths (frontier

@@ -77,22 +77,12 @@ def bfs(
             if rec.get("delta_ckpt"):
                 # delta layout (r4): iter=<k>/state holds ONLY the rows
                 # first reached at level k — O(|frontier|) written per
-                # level, not O(|visited|). Reconstruct the reached set
-                # as root ∪ all deltas ≤ last.
-                iters = [i for i in ckpt.complete_iters() if i <= last]
-                if iters != list(range(1, last + 1)):
-                    raise RuntimeError(
-                        f"non-contiguous BFS delta checkpoints {iters}: "
-                        f"cannot reconstruct the visited set"
-                    )
-                visited = root_row
-                for i in iters[:-1]:
-                    st, _, _ = ckpt.load(spark, i)
-                    visited = visited.union(st)
-                visited = sever(visited.union(loaded))
-            else:
-                # legacy layout (≤ r3): full visited set at iter=last
-                visited = sever(loaded)
+                # level, not O(|visited|). The reached set is root ∪
+                # all deltas.
+                deltas, rec = ckpt.load_deltas(spark)
+                loaded = root_row.union(deltas)
+            # legacy layout (≤ r3): full visited set at iter=last
+            visited = sever(loaded)
             start_level = last + 1
             if rec.get("frontier_size_next") is None:
                 # sidecar without the key (legacy writer): recount the

@@ -20,25 +20,27 @@ greedy MIS in ascending priority_key order (kernels/mis.py), assign it
 the next color, delete it" — which is what the pytest and DuckDB
 oracles replay.
 
-Scale shape (the mis/kcore peeling pattern): per-round min-key gather
-is an exchange-free groupBy on the src-bucket-preserving edge cache;
-removals are broadcast anti-joins; counts ride Observations. The outer
-per-layer filter removes an entire MIS — potentially a large fraction
-of the graph — so it broadcasts only when `broadcast_layers=True`
-(default False: layer sets are O(V), plan it as a shuffle anti-join).
+Scale shape: two nested linkgraph/loop.py ``peel`` loops. The outer
+one peels one color layer per round off the uncolored residual
+(vertices and edges); its round is an inner peel of mis.py's rounds
+(`independent_set`) over that residual, whose answer is the layer,
+already tagged with its color. Per inner round the min-key gather is
+an exchange-free groupBy on the src-bucket-preserving edge cache and
+the counts ride the removed set's job; both loops cut their residuals
+by anti-joins, broadcast while the removed set is under the driver's
+row cap (a layer can be a large fraction of the graph).
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
-from linkgraph.checkpoint import release, sever
-from linkgraph.kernels.mis import priority_key
+from linkgraph.kernels.mis import independent_set
+from linkgraph.loop import Cut, PeelRound, peel
 
 
 @dataclass
@@ -54,123 +56,27 @@ def coloring(
     graph: Graph,
     max_colors: int = 10_000,
     max_iter: int = 10_000,
-    broadcast_layers: bool = False,
 ) -> ColoringResult:
     """Call with a SYMMETRIZED graph (proper coloring is undirected)."""
-    t0 = time.time()
-    unc = graph.vertices.select("id")
-    cur = graph.edges
-    colored_parts: list[DataFrame] = []
-    live: list[DataFrame] = []
-    total_rounds = 0
     metrics: list[dict] = []
-    n_colors = 0
-    for layer in range(max_colors):
-        # ---- inner: priority-greedy MIS over the residual (unc, cur)
-        und, ecur = unc, cur
-        layer_parts: list[DataFrame] = []
-        inner_live: list[DataFrame] = []
-        layer_size = 0
-        for rnd in range(1, max_iter + 1):
-            mk = ecur.groupBy("src").agg(
-                F.min(priority_key(F.col("dst"))).alias("nk")
-            )
-            roots = (
-                und.join(mk, und["id"] == mk["src"], "left")
-                .where(
-                    F.col("nk").isNull() | (F.col("nk") > priority_key(F.col("id")))
-                )
-                .select("id")
-            )
-            nbrs = ecur.join(
-                F.broadcast(roots.withColumnRenamed("id", "src")), "src"
-            ).select("dst")
-            obs = Observation(f"coloring_l{layer}_r{rnd}")
-            removed = sever(
-                roots.withColumn("is_root", F.lit(True))
-                .union(
-                    nbrs.select(F.col("dst").alias("id")).withColumn(
-                        "is_root", F.lit(False)
-                    )
-                )
-                .groupBy("id")
-                .agg(F.max("is_root").alias("is_root"))
-                .observe(
-                    obs,
-                    F.count(F.lit(1)).alias("removed"),
-                    F.sum(F.col("is_root").cast("long")).alias("roots"),
-                )
-            )
-            n_removed = int(obs.get["removed"] or 0)
-            n_roots = int(obs.get["roots"] or 0)
-            total_rounds += 1
-            metrics.append(
-                {
-                    "layer": layer,
-                    "iteration": rnd,
-                    "roots": n_roots,
-                    "removed": n_removed,
-                    "wall_s": time.time() - t0,
-                }
-            )
-            if n_removed == 0:
-                release(removed)
-                break
-            layer_size += n_roots
-            layer_parts.append(sever(removed.where("is_root").select("id")))
-            rm = F.broadcast(removed.select("id"))
-            und = sever(und.join(rm, "id", "left_anti"))
-            ecur = sever(
-                ecur.join(rm.withColumnRenamed("id", "src"), "src", "left_anti")
-                .join(rm.withColumnRenamed("id", "dst"), "dst", "left_anti")
-                .select("src", "dst")
-            )
-            release(removed)
-            inner_live += [und, ecur]
-            while len(inner_live) > 2:
-                release(inner_live.pop(0))
-        for df in inner_live:
-            release(df)
-        if layer_size == 0:  # residual empty — every vertex is colored
-            for p in layer_parts:
-                release(p)
-            break
-        layer_df = layer_parts[0]
-        for p in layer_parts[1:]:
-            layer_df = layer_df.union(p)
-        layer_df = sever(layer_df)
-        for p in layer_parts:
-            release(p)
-        colored_parts.append(
-            sever(layer_df.withColumn("color", F.lit(layer).cast("int")))
-        )
-        n_colors = layer + 1
-        # ---- outer: peel the layer off the uncolored residual
-        lay = F.broadcast(layer_df) if broadcast_layers else layer_df
-        unc = sever(unc.join(lay, "id", "left_anti"))
-        cur = sever(
-            cur.join(lay.withColumnRenamed("id", "src"), "src", "left_anti")
-            .join(lay.withColumnRenamed("id", "dst"), "dst", "left_anti")
-            .select("src", "dst")
-        )
-        release(layer_df)
-        live += [unc, cur]
-        while len(live) > 2:
-            release(live.pop(0))
-    out = colored_parts[0] if colored_parts else unc.limit(0).withColumn(
-        "color", F.lit(0).cast("int")
+
+    def layer(r: PeelRound) -> Cut:
+        color = r.iteration - 1
+        unc, cur = r.res
+        inner = independent_set(unc, cur, max_iter, F.lit(color).cast("int").alias("color"))
+        metrics.extend({"layer": color, **m} for m in inner.metrics)
+        size = sum(m["roots"] for m in inner.metrics)
+        # an empty layer: every vertex is colored
+        part = inner.df if size else None
+        return Cut(inner.df, size, {"colored": size}, done=size == 0, part=part)
+
+    res = peel(
+        [graph.vertices.select("id"), graph.edges],
+        [["id"], ["src", "dst"]],
+        layer,
+        keys=lambda d: d.select("id"),
+        max_iter=max_colors,
+        schema="id long, color int",
     )
-    for p in colored_parts[1:]:
-        out = out.union(p)
-    out = sever(out)
-    for p in colored_parts:
-        release(p)
-    for df in live:
-        release(df)
-    return ColoringResult(
-        df=out,
-        colors_used=n_colors,
-        iterations=total_rounds,
-        wall_seconds=time.time() - t0,
-        metrics=metrics,
-    )
+    colors = sum(1 for m in res.metrics if m["colored"])
+    return ColoringResult(res.df, colors, len(metrics), res.wall_seconds, metrics)

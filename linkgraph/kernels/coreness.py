@@ -7,9 +7,10 @@ core(v) = the largest k such that v belongs to the k-core. The
 reference engine at /root/reference/src has no core decomposition;
 this extends its algorithm family over the same edge table.
 
-Algorithm: level-synchronous bucket peeling. A level variable k starts
+Algorithm: level-synchronous bucket peeling (`bucket_peel`, which
+truss.trussness runs at edge granularity). A level variable k starts
 at 0; each round
-  1. recompute residual degrees of the remaining vertices;
+  1. score the remaining vertices by residual degree;
   2. advance the level: k = max(k, min residual degree) — if no vertex
      sits at or below the current level, the level jumps straight to
      the residual minimum (every remaining vertex is then in the
@@ -31,42 +32,34 @@ The vertex universe is the edge-endpoint set (degree-0 vertices of a
 wider universe trivially have core 0 and are not enumerated). Call
 with a SYMMETRIZED graph, as for kcore.
 
-Scale shape: three materializations per round, each one job —
-  * the degree table (remaining ⟕ groupBy('src') count over the
-    residual edges — the groupBy itself plans exchange-free because
-    cur descends from the src-hash-partitioned persisted edge table
-    through partition-preserving broadcast anti-joins; the left join
-    against `remaining` then exchanges O(remaining) id rows, the
-    unavoidable cost of detecting degree-0 vertices, shrinking with
-    the pool every round — unlike fixed-k kcore, which peels them
-    implicitly and stays join-free; min-degree and remaining-count
-    ride the materializing job's Observation);
-  * the peeled delta (a filter VIEW over the persisted degree table,
-    severed because it outlives the round as 1/rounds of the answer);
-  * the residual edge set (two broadcast anti-joins on the delta —
-    peeled sets shrink after the long-tail first rounds, so no edge
-    shuffle ever recurs; `first_round_shuffle=True` plans round 1's
-    filter as a shuffle anti-join when even the id-only projection
-    overflows the broadcast threshold).
-No driver-side collect beyond the two Observation scalars per round.
+Scale shape (a linkgraph/loop.py ``peel`` over two residuals, the
+edges and the remaining vertices): per round, one job materializes the
+score table (remaining ⟕ groupBy('src') count over the residual edges;
+the groupBy plans exchange-free because the residual descends from the
+src-hash-partitioned persisted edge table through partition-preserving
+anti-joins, and the left join exchanges O(remaining) id rows, the cost
+of detecting degree-0 vertices), with the remaining count and minimum
+score riding it; one job materializes the peeled delta; the driver
+then cuts the delta out of both residuals by anti-joins.
 
 With a CheckpointManager, each round persists its PEELED delta
 (id, core — O(peeled) rows, the bfs.py delta layout); resume unions
-the deltas, re-derives remaining/residual edges by one anti-join pass,
-and restores the level from the record. A converged record
-short-circuits without touching the edge table.
+the deltas, cuts them out of the residuals, and restores the level
+from the record. A converged record short-circuits without touching
+the edge table.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
+from typing import Callable
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
-from linkgraph.checkpoint import CheckpointManager, release, sever
+from linkgraph.checkpoint import CheckpointManager
+from linkgraph.loop import Cut, Peeled, PeelRound, peel
 
 
 @dataclass
@@ -78,147 +71,75 @@ class CorenessResult:
     metrics: list[dict] = field(default_factory=list)
 
 
+def _round(r: PeelRound, scored: DataFrame, key: list[str], out: str, floor: int) -> Cut:
+    """One level-synchronous round over ``scored`` (key..., score)."""
+    scored, s = r.observe(
+        scored, F.count(F.lit(1)).alias("n"), F.min("score").alias("low")
+    )
+    n = int(s["n"] or 0)
+    level = int(r.prev.get("level", floor))
+    if n == 0:
+        # nothing left (an empty input, or a resume that peeled
+        # everything without a converged flag)
+        empty = scored.select(*key, F.lit(level).cast("long").alias(out))
+        return Cut(empty, 0, {"level": level, "peeled": 0, "remaining": 0}, done=True)
+    level = max(level, int(s["low"]))
+    delta, p = r.observe(
+        scored.where(F.col("score") <= level).select(
+            *key, F.lit(level).cast("long").alias(out)
+        ),
+        F.count(F.lit(1)).alias("peeled"),
+    )
+    peeled = int(p["peeled"] or 0)
+    rec = {"level": level, "peeled": peeled, "remaining": n - peeled}
+    return Cut(delta, peeled, rec, done=peeled == n, part=delta)
+
+
+def bucket_peel(
+    residuals: list[DataFrame],
+    cuts: list[list[str]],
+    score: Callable[[list[DataFrame]], DataFrame],
+    key: list[str],
+    out: str,
+    floor: int,
+    max_iter: int,
+    ckpt: CheckpointManager | None,
+) -> Peeled:
+    """Level-synchronous bucket peeling: ``score(residuals)`` gives the
+    remaining elements' (key..., score); each round raises the level
+    (from ``floor``) to the lowest score and peels every element scored
+    at or below it, at that level, into (key..., out)."""
+    schema = ", ".join(f"{c} long" for c in [*key, out])
+    return peel(
+        residuals,
+        cuts,
+        lambda r: _round(r, score(r.res), key, out, floor),
+        keys=lambda d: d.select(*key),
+        max_iter=max_iter,
+        schema=schema,
+        ckpt=ckpt,
+    )
+
+
+def _degrees(res: list[DataFrame]) -> DataFrame:
+    edges, remaining = res
+    counts = edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
+    return remaining.join(counts, "id", "left").select(
+        "id", F.coalesce(F.col("deg"), F.lit(0)).alias("score")
+    )
+
+
 def coreness(
     graph: Graph,
     max_iter: int = 10_000,
-    first_round_shuffle: bool = False,
     ckpt: CheckpointManager | None = None,
 ) -> CorenessResult:
-    t0 = time.time()
-    spark = graph.edges.sparkSession
-    cur = graph.edges
+    e = graph.edges
     remaining = (
-        cur.select(F.col("src").alias("id"))
-        .union(cur.select(F.col("dst").alias("id")))
-        .distinct()
+        e.select(F.col("src").alias("id")).union(e.select(F.col("dst").alias("id"))).distinct()
     )
-    assigned: list[DataFrame] = []
-    old_state: list[DataFrame] = []  # prior round's degr/edges to release
-    level = 0
-    iterations = 0
-    metrics: list[dict] = []
-    start_rnd = 1
-    if ckpt is not None:
-        done = ckpt.complete_iters()
-        if done:
-            last = done[-1]
-            parts = []
-            rec_last: dict = {}
-            for it_k in done:
-                st, _, rec = ckpt.load(spark, it_k)
-                parts.append(st.select("id", "core"))
-                if it_k == last:
-                    rec_last = rec
-            prior = parts[0]
-            for p in parts[1:]:
-                prior = prior.union(p)
-            prior = sever(prior)
-            assigned.append(prior)
-            iterations = last
-            level = int(rec_last.get("level", 0))
-            metrics.append(rec_last)
-            if rec_last.get("converged"):
-                start_rnd = max_iter + 1  # skip the loop entirely
-            else:
-                peeled = F.broadcast(prior.select("id"))
-                cur = sever(
-                    graph.edges.join(
-                        peeled.withColumnRenamed("id", "src"), "src", "left_anti"
-                    )
-                    .join(peeled.withColumnRenamed("id", "dst"), "dst", "left_anti")
-                    .select("src", "dst")
-                )
-                remaining = remaining.join(peeled, "id", "left_anti")
-                old_state.append(cur)
-                start_rnd = last + 1
-    for rnd in range(start_rnd, max_iter + 1):
-        counts = cur.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).alias("deg")
-        )
-        dobs = Observation(f"coreness_deg_{rnd}")
-        degr = sever(
-            remaining.join(counts, "id", "left")
-            .select("id", F.coalesce(F.col("deg"), F.lit(0)).alias("deg"))
-            .observe(
-                dobs,
-                F.count(F.lit(1)).alias("n_remaining"),
-                F.min("deg").alias("min_deg"),
-            )
-        )
-        n_remaining = int(dobs.get["n_remaining"] or 0)
-        if n_remaining == 0:
-            # empty input (or a resume that peeled everything without a
-            # converged flag): nothing left to assign
-            iterations = rnd
-            metrics.append(
-                {"iteration": rnd, "level": level, "peeled": 0,
-                 "remaining": 0, "converged": True,
-                 "wall_s": time.time() - t0}
-            )
-            if ckpt is not None:
-                ckpt.save(
-                    rnd,
-                    degr.select("id", F.lit(level).cast("long").alias("core")),
-                    metrics=metrics[-1],
-                )
-            release(degr)
-            break
-        level = max(level, int(dobs.get["min_deg"]))
-        pobs = Observation(f"coreness_peel_{rnd}")
-        delta = sever(
-            degr.where(F.col("deg") <= level)
-            .select("id", F.lit(level).cast("long").alias("core"))
-            .observe(pobs, F.count(F.lit(1)).alias("peeled"))
-        )
-        n_peeled = int(pobs.get["peeled"] or 0)
-        iterations = rnd
-        rec = {
-            "iteration": rnd,
-            "level": level,
-            "peeled": n_peeled,
-            "remaining": n_remaining - n_peeled,
-            "converged": n_remaining - n_peeled == 0,
-            "wall_s": time.time() - t0,
-        }
-        if ckpt is not None:
-            ckpt.save(rnd, delta, metrics=rec)
-        metrics.append(rec)
-        assigned.append(delta)
-        if n_remaining - n_peeled == 0:
-            release(degr)
-            for d in old_state:
-                release(d)
-            old_state = []
-            break
-        rm = delta.select("id")
-        if not (first_round_shuffle and rnd == 1):
-            rm = F.broadcast(rm)
-        nxt = sever(
-            cur.join(rm.withColumnRenamed("id", "src"), "src", "left_anti")
-            .join(rm.withColumnRenamed("id", "dst"), "dst", "left_anti")
-            .select("src", "dst")
-        )
-        # remaining is a filter VIEW over the just-persisted degr — one
-        # lineage hop, reset every round, never re-shuffled
-        remaining = degr.where(F.col("deg") > level).select("id")
-        for d in old_state:
-            release(d)
-        old_state = [degr, nxt]
-        cur = nxt
-    out = assigned[0] if assigned else spark.createDataFrame(
-        [], "id long, core long"
+    res = bucket_peel(
+        [e, remaining], [["src", "dst"], ["id"]], _degrees, ["id"], "core", 0, max_iter, ckpt
     )
-    for p in assigned[1:]:
-        out = out.union(p)
-    out = sever(out)
-    for p in assigned:
-        release(p)
-    for d in old_state:
-        release(d)
-    return CorenessResult(
-        df=out,
-        iterations=iterations,
-        degeneracy=level,
-        wall_seconds=time.time() - t0,
-        metrics=metrics,
-    )
+    level = res.metrics[-1]["level"] if res.metrics else 0
+    return CorenessResult(res.df, res.iterations, level, res.wall_seconds, res.metrics)

@@ -8,38 +8,37 @@ surface as the densest subgraph (Gibson/Kumar/Tomkins VLDB'05). The
 reference engine at /root/reference/src has no densest-subgraph app;
 this extends its algorithm family on the same edge table.
 
-Loop shape (kcore.py's peeling skeleton): the symmetrized edge
-relation is the loop state. Each round
+Loop shape (a linkgraph/loop.py ``peel``): the symmetrized edge
+relation and the alive vertex set are the residuals. Each round
   1. one job materializes the per-vertex degree table (deg-0 vertices
      ride along via a left join on the alive set, so implicit
-     isolation is an explicit removal) with |S| and Σdeg on an
-     Observation — no extra count jobs;
+     isolation is an explicit removal) with |S| and Σdeg riding it —
+     no extra count jobs;
   2. the removal threshold (1+ε)·Σdeg/|S| ≡ 2(1+ε)ρ is a driver
      scalar; removed vertices get this round's peel tag (tags are
      disjoint across rounds — O(n) rows total across the whole run);
-  3. edges touching removed vertices fall to broadcast anti-joins.
+  3. the driver cuts the removed vertices out of both residuals by
+     anti-joins.
 Density ρ = m/n (undirected: Σdeg/2|S|) is tracked per round; the
 argmax round r* (earliest on ties) defines the answer: the subgraph
 S_{r*} = {v : peel_round(v) ≥ r*}.
 
 Scale notes: O(log n / ε) rounds by theorem regardless of graph shape;
-per round one exchange-free degree agg on the src-bucketed cache + two
-broadcast anti-joins — no recurring edge shuffle. The peel-tag union
+per round one exchange-free degree agg on the src-bucketed cache + the
+residual anti-joins — no recurring edge shuffle. The peel-tag union
 is the full answer (vertex → peel round), so no per-round snapshots of
 the surviving subgraph are ever materialized.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
-from functools import reduce
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph, symmetrize
-from linkgraph.checkpoint import release, sever
+from linkgraph.loop import Cut, PeelRound, peel
 
 
 @dataclass
@@ -57,98 +56,66 @@ class DensestResult:
         return self.df.where(F.col("peel") >= self.best_round).select("id")
 
 
+def _round(r: PeelRound, epsilon: float) -> Cut | None:
+    edges, alive = r.res
+    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
+    deg_full, s = r.observe(
+        alive.join(deg, "id", "left").select(
+            "id", F.coalesce(F.col("deg"), F.lit(0)).alias("deg")
+        ),
+        F.count(F.lit(1)).alias("n"),
+        F.sum("deg").alias("m2"),
+    )
+    n_r = int(s["n"] or 0)
+    m2_r = int(s["m2"] or 0)
+    if n_r == 0:
+        return None
+    # (1+eps)*m2/n == 2(1+eps)rho — the exact expression is mirrored
+    # in the driver oracle, so keep the operation order fixed
+    thr = (1.0 + epsilon) * m2_r / n_r
+    removed, c = r.observe(
+        deg_full.where(F.col("deg") <= thr).select(
+            "id", F.lit(r.iteration).cast("long").alias("peel")
+        ),
+        F.count(F.lit(1)).alias("rows"),
+    )
+    rec = {"n": n_r, "density": m2_r / (2.0 * n_r)}
+    return Cut(removed, int(c["rows"]), rec, part=removed)
+
+
 def densest_subgraph(
     graph: Graph, epsilon: float = 0.1, max_iter: int = 10_000
 ) -> DensestResult:
-    t0 = time.time()
     sym = symmetrize(graph.edges).where(F.col("src") != F.col("dst"))
-    cur = sever(sym)
-    alive = sever(cur.select(F.col("src").alias("id")).distinct())
-    live_states: list[DataFrame] = [cur, alive]
-    # severed removal sets — referenced by the final union, so their
-    # blocks must outlive the loop (localCheckpoint truncates lineage:
-    # released blocks are unrecoverable, not recomputable)
-    removed_states: list[DataFrame] = []
-    peels: list[DataFrame] = []
-    densities: list[float] = []
-    best_density, best_round = -1.0, 0
-    metrics: list[dict] = []
-    rnd = 0
-    while rnd < max_iter:
-        rnd += 1
-        deg = cur.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).alias("deg")
+
+    def survivors(peels: DataFrame, res: list[DataFrame], converged: bool) -> DataFrame:
+        if converged:
+            return peels
+        # max_iter exhausted with survivors: they outlast every peel
+        return peels.unionByName(
+            res[1].withColumn("peel", F.lit(max_iter + 1).cast("long"))
         )
-        obs = Observation(f"densest_round_{rnd}")
-        deg_full = sever(
-            alive.join(deg, "id", "left")
-            .select("id", F.coalesce(F.col("deg"), F.lit(0)).alias("deg"))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum("deg").alias("m2"),
-            )
-        )
-        n_r = int(obs.get["n"] or 0)
-        m2_r = int(obs.get["m2"] or 0)
-        if n_r == 0:
-            release(deg_full)
-            rnd -= 1
-            break
-        rho = m2_r / (2.0 * n_r)
-        densities.append(rho)
+
+    res = peel(
+        [sym, sym.select(F.col("src").alias("id")).distinct()],
+        [["src", "dst"], ["id"]],
+        lambda r: _round(r, epsilon),
+        keys=lambda d: d.select("id"),
+        max_iter=max_iter,
+        schema="id long, peel long",
+        finish=survivors,
+    )
+    densities = [m["density"] for m in res.metrics]
+    best_round, best_density = 0, -1.0
+    for rnd, rho in enumerate(densities, 1):
         if rho > best_density:
             best_density, best_round = rho, rnd
-        # (1+eps)*m2/n == 2(1+eps)rho — the exact expression is mirrored
-        # in the driver oracle, so keep the operation order fixed
-        thr = (1.0 + epsilon) * m2_r / n_r
-        removed = sever(
-            deg_full.where(F.col("deg") <= thr).select("id")
-        )
-        release(deg_full)
-        removed_states.append(removed)
-        peels.append(removed.withColumn("peel", F.lit(rnd).cast("long")))
-        metrics.append(
-            {
-                "iteration": rnd,
-                "n": n_r,
-                "density": rho,
-                "wall_s": time.time() - t0,
-            }
-        )
-        nxt_alive = sever(alive.join(F.broadcast(removed), "id", "left_anti"))
-        rm_src = removed.select(F.col("id").alias("src"))
-        nxt = sever(
-            cur.join(F.broadcast(rm_src), "src", "left_anti")
-            .join(
-                F.broadcast(rm_src.withColumnRenamed("src", "dst")),
-                "dst",
-                "left_anti",
-            )
-            .select("src", "dst")
-        )
-        for df in live_states:
-            release(df)
-        live_states = [nxt, nxt_alive]
-        cur, alive = nxt, nxt_alive
-    else:  # max_iter exhausted with survivors: they outlast every peel
-        peels.append(alive.withColumn("peel", F.lit(rnd + 1).cast("long")))
-    spark = graph.edges.sparkSession
-    out = sever(
-        reduce(DataFrame.unionByName, peels)
-        if peels
-        else spark.createDataFrame([], "id long, peel long")
-    )
-    for df in live_states:
-        release(df)
-    for df in removed_states:
-        release(df)
     return DensestResult(
-        df=out,
+        df=res.df,
         best_round=best_round,
         best_density=best_density,
         densities=densities,
-        iterations=rnd,
-        wall_seconds=time.time() - t0,
-        metrics=metrics,
+        iterations=res.iterations,
+        wall_seconds=res.wall_seconds,
+        metrics=res.metrics,
     )

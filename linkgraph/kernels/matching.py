@@ -28,7 +28,7 @@ Accepts directed, symmetrized, or canonical edge tables alike: the
 kernel canonicalizes to u = least, v = greatest internally (matching
 is an undirected notion), dropping self-loops.
 
-Scale shape (the mis.py loop, adapted edge-side):
+Scale shape (a linkgraph/loop.py ``peel`` over the live edge set):
   * per-round per-vertex min is ONE groupBy over the 2m-row endpoint
     incidence view (union of two column-swaps of the live edge set) —
     a partial+final aggregation (struct min plans as SortAggregate,
@@ -36,10 +36,9 @@ Scale shape (the mis.py loop, adapted edge-side):
   * local-minimum selection is two equi-joins of the live edges
     against the (vid, min-key) table — vertex-keyed shuffle joins that
     AQE handles; the live set shrinks geometrically after round 1;
-  * removal is broadcast anti-joins on the matched-vertex set
-    (`first_round_shuffle=True` plans round 1 as shuffle anti-joins
-    for graphs where even the id projection overflows the broadcast
-    threshold — same escape hatch as mis.py).
+  * the driver cuts the matched vertices out of the live set by
+    anti-joins on both endpoints, broadcast while they are under its
+    row cap, and the live count rides the cut's job.
 Per round everything is O(|live edges|), geometrically shrinking; at
 100 TB the round-1 pass dominates and is a linear scan + one
 partial-agg + two equi-joins — no n² anywhere.
@@ -47,14 +46,14 @@ partial-agg + two equi-joins — no n² anywhere.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
-from linkgraph.checkpoint import CheckpointManager, release, sever
+from linkgraph.checkpoint import CheckpointManager
+from linkgraph.loop import Cut, PeelRound, peel
 
 #: Edge-priority hash constants (Knuth / xxhash-prime multipliers).
 MATCH_HASH_MULT_U = 2654435761
@@ -86,19 +85,41 @@ class MatchingResult:
     metrics: list[dict] = field(default_factory=list)
 
 
+def _round(r: PeelRound) -> Cut:
+    (cur,) = r.res
+    # per-vertex min incident key: one hash agg over the 2m-row
+    # endpoint view — no join, partial+final combine
+    inc = cur.select(F.col("u").alias("vid"), _key_struct().alias("k")).union(
+        cur.select(F.col("v").alias("vid"), _key_struct().alias("k"))
+    )
+    mins = inc.groupBy("vid").agg(F.min("k").alias("mk"))
+    mu = mins.select(F.col("vid").alias("u"), F.col("mk").alias("mku"))
+    mv = mins.select(F.col("vid").alias("v"), F.col("mk").alias("mkv"))
+    matched, s = r.observe(
+        cur.join(mu, "u")
+        .join(mv, "v")
+        .where((_key_struct() == F.col("mku")) & (_key_struct() == F.col("mkv")))
+        .select("u", "v"),
+        F.count(F.lit(1)).alias("matched"),
+    )
+    n = int(s["matched"] or 0)
+    if n == 0:
+        # a nonempty live edge set always has a global-min edge, which
+        # is a local min at both endpoints ⇒ cur is empty
+        return Cut(matched, 0, {"matched": 0, "live_edges": 0}, done=True)
+    return Cut(matched, 2 * n, {"matched": n}, part=matched)
+
+
 def maximal_matching(
     graph: Graph,
     max_iter: int = 10_000,
-    first_round_shuffle: bool = False,
     ckpt: CheckpointManager | None = None,
 ) -> MatchingResult:
     """With a CheckpointManager, each round persists its matched-edge
     DELTA (O(matched) rows — the bfs.py delta layout); resume unions
-    the deltas, re-derives the live edge set by anti-joining their
-    endpoints (one O(m) pass, cheaper than persisting the live set
-    every round), and a converged record short-circuits."""
-    t0 = time.time()
-    spark = graph.edges.sparkSession
+    the deltas and cuts their endpoints out of the live edge set (one
+    O(m) pass, cheaper than persisting the live set every round), and
+    a converged record short-circuits."""
     # canonicalize: each undirected edge once (least/greatest handles
     # directed, symmetrized, and mixed inputs alike), self-loops dropped
     canon = (
@@ -109,122 +130,15 @@ def maximal_matching(
         )
         .distinct()
     )
-    cur = sever(
-        canon.select(
-            edge_priority(F.col("u"), F.col("v")).alias("h"), "u", "v"
-        )
+    res = peel(
+        [canon.select(edge_priority(F.col("u"), F.col("v")).alias("h"), "u", "v")],
+        [["u", "v"]],
+        _round,
+        # matched edges are vertex-disjoint: 2 ids per edge, no repeats
+        keys=lambda d: d.select(F.col("u").alias("id")).union(d.select(F.col("v").alias("id"))),
+        max_iter=max_iter,
+        schema="u long, v long",
+        size_key="live_edges",
+        ckpt=ckpt,
     )
-    matched_parts: list[DataFrame] = []  # severed per-round matched edges
-    live: list[DataFrame] = []
-    iterations = 0
-    metrics: list[dict] = []
-    start_rnd = 1
-    if ckpt is not None:
-        done = ckpt.complete_iters()
-        if done:
-            last = done[-1]
-            parts = []
-            rec_last: dict = {}
-            for k in done:
-                st, _, rec = ckpt.load(spark, k)
-                parts.append(st.select("u", "v"))
-                if k == last:
-                    rec_last = rec
-            prior = parts[0]
-            for p in parts[1:]:
-                prior = prior.union(p)
-            prior = sever(prior)
-            if rec_last.get("converged"):
-                release(cur)
-                return MatchingResult(
-                    df=prior,
-                    iterations=last,
-                    wall_seconds=time.time() - t0,
-                    metrics=[rec_last],
-                )
-            matched_parts.append(prior)
-            mids = F.broadcast(
-                prior.select(F.col("u").alias("id")).union(
-                    prior.select(F.col("v").alias("id"))
-                )
-            )
-            nxt = sever(
-                cur.join(mids.withColumnRenamed("id", "u"), "u", "left_anti")
-                .join(mids.withColumnRenamed("id", "v"), "v", "left_anti")
-                .select("h", "u", "v")
-            )
-            release(cur)
-            cur = nxt
-            live.append(cur)
-            start_rnd = last + 1
-            iterations = last
-    for rnd in range(start_rnd, max_iter + 1):
-        # per-vertex min incident key: one hash agg over the 2m-row
-        # endpoint view — no join, partial+final combine
-        inc = cur.select(F.col("u").alias("vid"), _key_struct().alias("k")).union(
-            cur.select(F.col("v").alias("vid"), _key_struct().alias("k"))
-        )
-        mins = inc.groupBy("vid").agg(F.min("k").alias("mk"))
-        mu = mins.select(F.col("vid").alias("u"), F.col("mk").alias("mku"))
-        mv = mins.select(F.col("vid").alias("v"), F.col("mk").alias("mkv"))
-        obs = Observation(f"matching_round_{rnd}")
-        matched = sever(
-            cur.join(mu, "u")
-            .join(mv, "v")
-            .where((_key_struct() == F.col("mku")) & (_key_struct() == F.col("mkv")))
-            .select("u", "v")
-            .observe(obs, F.count(F.lit(1)).alias("matched"))
-        )
-        n_matched = int(obs.get["matched"] or 0)
-        iterations = rnd
-        if n_matched == 0:
-            # a nonempty live edge set always has a global-min edge,
-            # which is a local min at both endpoints ⇒ cur is empty
-            rec0 = {"iteration": rnd, "matched": 0, "live_edges": 0,
-                    "converged": True, "wall_s": time.time() - t0}
-            if ckpt is not None:
-                ckpt.save(rnd, matched.select("u", "v"), metrics=rec0)
-            release(matched)
-            metrics.append(rec0)
-            break
-        matched_parts.append(matched)
-        mids = matched.select(F.col("u").alias("id")).union(
-            matched.select(F.col("v").alias("id"))
-        )
-        if not (first_round_shuffle and rnd == 1):
-            mids = F.broadcast(mids)
-        eobs = Observation(f"matching_live_{rnd}")
-        cur = sever(
-            cur.join(mids.withColumnRenamed("id", "u"), "u", "left_anti")
-            .join(mids.withColumnRenamed("id", "v"), "v", "left_anti")
-            .select("h", "u", "v")
-            .observe(eobs, F.count(F.lit(1)).alias("live"))
-        )
-        n_live = int(eobs.get["live"] or 0)
-        rec = {"iteration": rnd, "matched": n_matched, "live_edges": n_live,
-               "converged": n_live == 0, "wall_s": time.time() - t0}
-        if ckpt is not None:
-            ckpt.save(rnd, matched.select("u", "v"), metrics=rec)
-        metrics.append(rec)
-        live.append(cur)
-        while len(live) > 1:
-            release(live.pop(0))
-        if n_live == 0:
-            break
-    if matched_parts:
-        out = matched_parts[0]
-        for p in matched_parts[1:]:
-            out = out.union(p)
-    else:
-        out = spark.createDataFrame([], "u long, v long")
-    out = sever(out)
-    for p in matched_parts:
-        release(p)
-    for df in live:
-        release(df)
-    return MatchingResult(
-        df=out,
-        iterations=iterations,
-        wall_seconds=time.time() - t0,
-        metrics=metrics,
-    )
+    return MatchingResult(res.df, res.iterations, res.wall_seconds, res.metrics)

@@ -24,18 +24,17 @@ round bound without sacrificing cross-engine exactness.
 
 Call with a SYMMETRIZED graph (independence is an undirected notion).
 
-Scale shape (the kcore peeling pattern, kernels/kcore.py):
+Scale shape (a linkgraph/loop.py ``peel`` over two residuals, the
+undecided vertices and their edges; kernels/coloring.py runs the same
+rounds once per color):
   * per-round min-key gather is `cur.groupBy('src').agg(F.min(key(dst)))`
     — cur descends from the Graph's src-hash-partitioned persisted
-    edge table through broadcast anti-joins that PRESERVE the
-    partitioning, so the groupBy plans with no exchange;
-  * roots/removed are materialized once per round (localCheckpoint,
-    counts ride Observations — no extra count jobs);
-  * edge/undecided filtering is broadcast anti-joins on the removed
-    set, which shrinks geometrically after round 1. Round 1 may remove
-    a LARGE fraction; `first_round_shuffle=True` plans round 1's
-    filters as shuffle anti-joins for graphs where even the id-only
-    projection overflows the broadcast threshold.
+    edge table through anti-joins that PRESERVE the partitioning, so
+    the groupBy plans with no exchange;
+  * the removed set (roots and their neighbors) is materialized once
+    per round, its counts riding the same job;
+  * the driver cuts the removed set out of both residuals by
+    anti-joins, broadcast while it is under the driver's row cap.
 Three materializations per round (removed, undecided, edges), each
 O(|live subgraph|) and geometrically shrinking — at 100 TB the round-1
 pass dominates and is a linear scan + one partial-agg, no n² anywhere.
@@ -43,14 +42,13 @@ pass dominates and is a linear scan + one partial-agg, no n² anywhere.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
-from linkgraph.checkpoint import release, sever
+from linkgraph.loop import Cut, Peeled, PeelRound, peel
 
 #: Knuth multiplicative-hash priority, exact in int64 for id < 2^31.
 MIS_HASH_MULT = 2654435761
@@ -73,87 +71,50 @@ class MISResult:
     metrics: list[dict] = field(default_factory=list)
 
 
-def mis(
-    graph: Graph,
-    max_iter: int = 10_000,
-    first_round_shuffle: bool = False,
-) -> MISResult:
-    t0 = time.time()
-    und = graph.vertices.select("id")
-    cur = graph.edges
-    live: list[DataFrame] = []  # severed per-round state awaiting release
-    mis_parts: list[DataFrame] = []  # severed root sets (the answer)
-    iterations = 0
-    metrics: list[dict] = []
-    for rnd in range(1, max_iter + 1):
-        # min priority key over UNDECIDED neighbors (cur is already the
-        # undecided-only subgraph) — exchange-free on the src cache
-        mk = cur.groupBy("src").agg(F.min(priority_key(F.col("dst"))).alias("nk"))
-        roots = (
-            und.join(mk, und["id"] == mk["src"], "left")
-            .where(F.col("nk").isNull() | (F.col("nk") > priority_key(F.col("id"))))
-            .select("id")
-        )
-        # removed = roots ∪ neighbors(roots); the two are disjoint
-        # (adjacent roots are impossible: the larger-key one sees the
-        # smaller in its min), so a plain distinct union suffices.
-        rsrc = roots.withColumnRenamed("id", "src")
-        if not first_round_shuffle or rnd > 1:
-            rsrc = F.broadcast(rsrc)
-        nbrs = cur.join(rsrc, "src").select("dst")
-        obs = Observation(f"mis_round_{rnd}")
-        removed = sever(
-            roots.withColumn("is_root", F.lit(True))
-            .union(nbrs.select(F.col("dst").alias("id")).withColumn("is_root", F.lit(False)))
-            .groupBy("id")
-            .agg(F.max("is_root").alias("is_root"))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("removed"),
-                F.sum(F.col("is_root").cast("long")).alias("roots"),
-            )
-        )
-        n_removed = int(obs.get["removed"] or 0)
-        n_roots = int(obs.get["roots"] or 0)
-        iterations = rnd
-        metrics.append(
-            {
-                "iteration": rnd,
-                "roots": n_roots,
-                "removed": n_removed,
-                "wall_s": time.time() - t0,
-            }
-        )
-        if n_removed == 0:  # nonempty und always yields a root ⇒ und is empty
-            release(removed)
-            break
-        mis_parts.append(sever(removed.where("is_root").select("id")))
-        rm = removed.select("id")
-        if not (first_round_shuffle and rnd == 1):
-            rm = F.broadcast(rm)
-        # sever per round: byte-stable per-round plans + bounded lineage
-        und = sever(und.join(rm, "id", "left_anti"))
-        cur = sever(
-            cur.join(rm.withColumnRenamed("id", "src"), "src", "left_anti")
-            .join(rm.withColumnRenamed("id", "dst"), "dst", "left_anti")
-            .select("src", "dst")
-        )
-        release(removed)
-        live.append(und)
-        live.append(cur)
-        while len(live) > 2:
-            release(live.pop(0))
-    out = mis_parts[0] if mis_parts else und.limit(0)
-    for p in mis_parts[1:]:
-        out = out.union(p)
-    out = sever(out)
-    for p in mis_parts:
-        release(p)
-    for df in live:
-        release(df)
-    return MISResult(
-        df=out,
-        iterations=iterations,
-        wall_seconds=time.time() - t0,
-        metrics=metrics,
+def _round(r: PeelRound) -> Cut:
+    und, cur = r.res
+    # min priority key over UNDECIDED neighbors (cur is already the
+    # undecided-only subgraph) — exchange-free on the src cache
+    mk = cur.groupBy("src").agg(F.min(priority_key(F.col("dst"))).alias("nk"))
+    roots = (
+        und.join(mk, und["id"] == mk["src"], "left")
+        .where(F.col("nk").isNull() | (F.col("nk") > priority_key(F.col("id"))))
+        .select("id")
     )
+    # removed = roots ∪ neighbors(roots); the two are disjoint
+    # (adjacent roots are impossible: the larger-key one sees the
+    # smaller in its min), so a plain distinct union suffices.
+    nbrs = cur.join(F.broadcast(roots.withColumnRenamed("id", "src")), "src")
+    removed, s = r.observe(
+        roots.withColumn("is_root", F.lit(True))
+        .union(nbrs.select(F.col("dst").alias("id"), F.lit(False).alias("is_root")))
+        .groupBy("id")
+        .agg(F.max("is_root").alias("is_root")),
+        F.count(F.lit(1)).alias("removed"),
+        F.sum(F.col("is_root").cast("long")).alias("roots"),
+    )
+    n = int(s["removed"] or 0)
+    rec = {"roots": int(s["roots"] or 0), "removed": n}
+    # nothing removed: a nonempty undecided set always yields a root
+    return Cut(removed, n, rec, done=n == 0, part=removed if n else None)
+
+
+def independent_set(
+    und: DataFrame, edges: DataFrame, max_iter: int, *extra: Column
+) -> Peeled:
+    """Priority-greedy MIS of the undecided vertices ``und`` (id) over
+    ``edges`` (src, dst): (id, *extra) of its members."""
+    return peel(
+        [und, edges],
+        [["id"], ["src", "dst"]],
+        _round,
+        keys=lambda d: d.select("id"),
+        max_iter=max_iter,
+        schema="id long, is_root boolean",
+        finish=lambda removed, _res, _conv: removed.where("is_root").select("id", *extra),
+    )
+
+
+def mis(graph: Graph, max_iter: int = 10_000) -> MISResult:
+    res = independent_set(graph.vertices.select("id"), graph.edges, max_iter)
+    return MISResult(res.df, res.iterations, res.wall_seconds, res.metrics)

@@ -77,23 +77,14 @@ def msbfs(
     start_level = 1
     fcount = len(src_list)  # fresh start: one frontier row per lane
     if ckpt is not None:
-        last = ckpt.last_complete()
-        if last is not None:
-            loaded, _, rec = ckpt.load(spark, last)
+        loaded = ckpt.load_deltas(spark)
+        if loaded is not None:
             # delta layout only (kernel is newer than the r3 full-state
             # layout): iter=<k>/state holds the rows first reached at
-            # level k; reconstruct as seed ∪ all deltas ≤ last
-            iters = [i for i in ckpt.complete_iters() if i <= last]
-            if iters != list(range(1, last + 1)):
-                raise RuntimeError(
-                    f"non-contiguous msbfs delta checkpoints {iters}: "
-                    f"cannot reconstruct the visited set"
-                )
-            visited = seed
-            for i in iters[:-1]:
-                st, _, _ = ckpt.load(spark, i)
-                visited = visited.union(st)
-            visited = sever(visited.union(loaded))
+            # level k; the visited set is seed ∪ all deltas
+            deltas, rec = loaded
+            last = rec["iteration"]
+            visited = sever(seed.union(deltas))
             start_level = last + 1
             if rec.get("frontier_size_next") is None:
                 fcount = visited.where(F.col("dist") == last).count()

@@ -34,12 +34,16 @@ CC kernel's min-label convention.
 Scale notes: no step materializes anything denser than the residual
 edge relation. Coloring and sweeping are linkgraph/loop.py fixpoints
 (chained rounds, one union-aggregate collect per chain, |E|/20
-edge_map dispatch); trim is a degree filter; the residual subgraph is
-rebuilt through build_graph_from_edges per outer round at its
-data-sized width, so every inner loop runs over a src-hash-partitioned
-cached edge table as is. Durable checkpoints save the ASSIGNED set
-once per outer round (monotone, O(assigned) rows); resume recomputes
-the residual by anti-join.
+edge_map dispatch); trim is a degree filter; from the second outer
+round on, the residual subgraph is rebuilt through
+build_graph_from_edges at its data-sized width, so every inner loop
+runs over a src-hash-partitioned cached edge table as is. A fresh
+call's first round runs on the caller's graph itself: nothing is
+assigned yet, so a rebuild would copy it (3 builds were 3.0 s and
+19 jobs of a 20.4 s call on the sf0.001 part-succession graph).
+Durable checkpoints save the ASSIGNED set once per outer round
+(monotone, O(assigned) rows); resume recomputes the residual by
+anti-join.
 
 Known limitation (documented, inherent to coloring-SCC): a long
 directed path with ids descending along it degenerates to one
@@ -172,23 +176,28 @@ def scc(
                         "condensation; raise max_outer"
                     )
                 rnd_t0 = time.time()
-                res_edges = (
-                    graph.edges.join(
-                        res_verts.withColumnRenamed("id", "src"), "src", "left_semi"
-                    ).join(
-                        res_verts.withColumnRenamed("id", "dst"), "dst", "left_semi"
+                # a fresh call's first round has nothing assigned: its
+                # residual graph is the caller's graph, used as is
+                g_res = graph
+                if outer > 0:
+                    res_edges = (
+                        graph.edges.join(
+                            res_verts.withColumnRenamed("id", "src"), "src", "left_semi"
+                        ).join(
+                            res_verts.withColumnRenamed("id", "dst"), "dst", "left_semi"
+                        )
+                    ).select("src", "dst")
+                    g_res = build_graph_from_edges(
+                        res_edges, vertices=res_verts, assume_deduped=True
                     )
-                ).select("src", "dst")
-                g_res = build_graph_from_edges(
-                    res_edges, vertices=res_verts, assume_deduped=True
-                )
                 try:
                     new_assigned, new_res_verts, rec = _outer_round(
                         g_res, assigned, max_color_rounds
                     )
                 finally:
-                    g_res.edges.unpersist()
-                    g_res.degrees.unpersist()
+                    if g_res is not graph:
+                        g_res.edges.unpersist()
+                        g_res.degrees.unpersist()
                 release(assigned)
                 release(res_verts)
                 assigned, res_verts = new_assigned, new_res_verts

@@ -29,12 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph, symmetrize
-
-# Row cap under which the degree table / oriented edge set are
-# broadcast instead of shuffled (≈16 B/row → 64 MB). Scale-adaptive:
-# bench graphs sit far below it, a 100 TB graph far above — the
-# shuffle plans stay the fallback there.
-BCAST_ROWS = 4_000_000
+from linkgraph.loop import BCAST_ROWS
 
 
 @dataclass
@@ -54,9 +49,11 @@ def oriented_edges(edges: DataFrame, n_hint: int | None = None) -> DataFrame:
 
     The dedupe inside `symmetrize` is an aggregation, so every path
     from a checkpointed loop state into the wedge and closing joins
-    passes one — the cure for sever()'s narrow-diamond compounding
-    (linkgraph/checkpoint.py) when a peeling loop feeds its state
-    back through here."""
+    passes one: a peeling loop that feeds its state back through here
+    keeps clear of sever()'s narrow-diamond shape
+    (linkgraph/checkpoint.py). It does not keep the state's estimated
+    size from compounding; that takes peel's residual rule
+    (linkgraph/loop.py), see sever()'s estimate caveat."""
     sym = symmetrize(edges).where(F.col("src") != F.col("dst"))
     deg = sym.groupBy(F.col("src").alias("v")).agg(F.count("*").alias("deg"))
     sdeg = deg.select(F.col("v").alias("src"), F.col("deg").alias("sdeg"))

@@ -10,8 +10,9 @@ On it: the diff family (pagerank, pagerank_weighted, katz, ppr,
 eigenvector, hits, salsa), labelprop, kernels/cc.py's label loop (cc,
 and scc's forward-max coloring), kernels/scc.py's ``reach`` (scc's
 backward sweep, bowtie's two sweeps) and condensation's level
-relaxation. Still on hand-written loops: bfs, msbfs, sssp, kcore,
-coreness, mis, coloring, anf, louvain and pagerank_delta.
+relaxation. The shrinking-residual kernels run on :func:`peel`
+below. Still on hand-written loops: bfs, msbfs, sssp, anf, louvain and
+pagerank_delta.
 
 What the driver owns:
 
@@ -78,6 +79,13 @@ What the driver owns:
 Columns whose names start with ``_`` are per-round scratch (e.g. the
 previous value ``_rank`` a diff scalar reads): the scalars see them,
 the next round, the checkpoint and the caller do not.
+
+:func:`peel` is the other loop shape: Ligra's ``vertexFilter`` on a
+shrinking subset, Julienne's bucketed peeling. Its state is a set of
+residuals (edges, undecided or remaining vertices, live pairs) that
+only shrink; each round scores them, removes a delta, and the answer
+is the union of the deltas. kcore, coreness, ktruss, trussness,
+densest, mis, coloring and maximal_matching run on it.
 """
 
 from __future__ import annotations
@@ -86,10 +94,11 @@ import itertools
 import math
 import time
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Callable
 
 from pyspark import StorageLevel
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from linkgraph.checkpoint import CheckpointManager, release, sever
@@ -99,6 +108,12 @@ EDGE_ROWS_PER_PART = 64 * 1024
 CHAIN_ROWS = 32 * 1024 * 1024
 DIFF_CHAIN = 16
 LABEL_CHAIN = 4
+# Row cap under which a join's small side is broadcast instead of
+# shuffled (~16 B/row -> 64 MB): the triangle enumerator's degree joins
+# and close, and peel's residual cuts. Scale-adaptive: bench graphs sit
+# far below it, a 100 TB graph far above, where the shuffle plans stay
+# the fallback.
+BCAST_ROWS = 4_000_000
 
 _VIEW_SEQ = itertools.count()
 
@@ -336,3 +351,211 @@ def fixpoint(
             loop_edges.unpersist()
         if views is not None:
             _drop_views(spark, views)
+
+
+@dataclass
+class Cut:
+    """One peeling round's outcome, as its step hands it to :func:`peel`.
+
+    delta  : what the round removes: ``keys(delta)`` is cut out of every
+             residual, and with a checkpoint the delta is what is saved.
+    rows   : the delta's observed row count; sizes the cut's broadcast.
+    record : the round's scalars, for its metric record.
+    done   : the loop stops after this round; the residuals are not cut.
+    part   : kept to the end and unioned into the answer: None, the
+             delta, or a frame the round observed.
+    """
+
+    delta: DataFrame
+    rows: int
+    record: dict
+    done: bool = False
+    part: DataFrame | None = None
+
+
+@dataclass
+class PeelRound:
+    """What a peeling step sees: the residuals in the order :func:`peel`
+    was given them, the previous round's record (the saved one on a
+    resumed call, ``{}`` on a fresh one's first round) and the round's
+    number, from 1."""
+
+    res: list[DataFrame]
+    prev: dict
+    iteration: int
+    owned: list[DataFrame] = field(default_factory=list)
+
+    def observe(self, df: DataFrame, *aggs: Column) -> tuple[DataFrame, dict]:
+        """Materialize a frame of this round (``sever``), its aggregate
+        scalars riding the same job. It is released when the round
+        ends, unless it is the round's part."""
+        return _observe(df, aggs, self.owned)
+
+
+@dataclass
+class Peeled:
+    df: DataFrame  # the answer, severed; the caller owns it
+    iterations: int  # rounds completed, counting resumed ones
+    wall_seconds: float
+    metrics: list[dict] = field(default_factory=list)
+
+
+def _observe(df: DataFrame, aggs, owned: list[DataFrame]) -> tuple[DataFrame, dict]:
+    obs = Observation()
+    out = sever(df.observe(obs, *aggs) if aggs else df)
+    owned.append(out)
+    return out, obs.get if aggs else {}
+
+
+def _stored(df: DataFrame) -> bool:
+    level = df.storageLevel
+    if level.useMemory or level.useDisk:
+        return True
+    return df._jdf.queryExecution().analyzed().nodeName() == "LogicalRDD"
+
+
+def _cut(
+    residuals: list[DataFrame], cuts: list[list[str]], keys: DataFrame, rows: int
+) -> list[DataFrame]:
+    """The residual rule: a residual shrinks only by left-anti joins
+    against the delta's keys, so its estimated statistics stay those of
+    its input. Each entry of a residual's cut list is one anti-join, on
+    its space-separated columns, which take the key columns in order."""
+    out = []
+    for df, ons in zip(residuals, cuts):
+        for on in ons:
+            cols = on.split()
+            k = keys.toDF(*cols)
+            df = df.join(F.broadcast(k) if rows <= BCAST_ROWS else k, cols, "left_anti")
+        out.append(df)
+    return out
+
+
+def _settle(
+    residuals: list[DataFrame], held: list[DataFrame], count: bool = False
+) -> tuple[list[DataFrame], int | None]:
+    """Sever every residual that is not stored yet; the first one's row
+    count rides its job when asked."""
+    out, rows = [], None
+    for i, df in enumerate(residuals):
+        if not _stored(df):
+            aggs = [F.count(F.lit(1)).alias("rows")] if count and i == 0 else []
+            df, s = _observe(df, aggs, held)
+            rows = s.get("rows", rows)
+        out.append(df)
+    return out, rows
+
+
+def peel(
+    residuals: list[DataFrame],
+    cuts: list[list[str]],
+    step: Callable[[PeelRound], Cut | None],
+    *,
+    max_iter: int,
+    schema: str,
+    keys: Callable[[DataFrame], DataFrame] | None = None,
+    finish: Callable[[DataFrame, list[DataFrame], bool], DataFrame] | None = None,
+    size_key: str | None = None,
+    ckpt: CheckpointManager | None = None,
+) -> Peeled:
+    """Peel the residuals round by round until a step says ``done``, a
+    step returns None (nothing left: that round leaves no record), the
+    first residual's ``size_key`` count reaches 0, or ``max_iter``
+    rounds ran.
+
+    residuals : the initial residuals. A cached table or a severed
+                frame is read in place; any other plan is severed once.
+    cuts      : per residual, its anti-joins (at least one) against the
+                delta's keys (``["src", "dst"]`` for an edge list losing
+                vertices, ``["u w"]`` for one losing pairs).
+    step      : one round's scoring: PeelRound -> Cut (or None).
+    keys      : delta -> the key columns the cuts join on (default: the
+                delta itself).
+    schema    : the parts' schema when there are none.
+    finish    : (parts union, final residuals, converged) -> answer;
+                default the parts union.
+    size_key  : record key of the first residual's row count after each
+                cut; the loop converges when it reaches 0.
+
+    The driver owns, once: round materialization (PeelRound.observe);
+    the residual rule (:func:`_cut`, broadcast when the delta's observed
+    count is at most ``BCAST_ROWS``, then severed); the answer, the
+    parts unioned and severed once at the end; delta checkpoints and
+    resume (``CheckpointManager.load_deltas``: every complete delta
+    unioned and cut from the residuals, the last record carried as the
+    next round's ``prev``, a converged record short-circuiting the
+    loop); one record per round (``iteration``, the step's scalars,
+    ``converged``, the round's own ``wall_s``); and release, in
+    ``finally``, of every frame the call does not return.
+    """
+    t0 = time.time()
+    spark = residuals[0].sparkSession
+    keys = keys or (lambda d: d)
+    held: list[DataFrame] = []  # severed frames this call owns
+    parts: list[DataFrame] = []
+    metrics: list[dict] = []
+    prev: dict = {}
+    it, converged = 0, False
+    res = list(residuals)
+    rnd = None
+    answer = None
+    try:
+        loaded = ckpt.load_deltas(spark) if ckpt is not None else None
+        if loaded is not None:
+            prior, s = _observe(loaded[0], [F.count(F.lit(1)).alias("rows")], held)
+            prev = loaded[1]
+            parts.append(prior)
+            metrics.append(prev)
+            it, converged = prev["iteration"], bool(prev.get("converged"))
+            res = _cut(res, cuts, keys(prior), s["rows"])
+        if not converged:
+            res, _ = _settle(res, held)
+        while not converged and it < max_iter:
+            rt0 = time.time()
+            rnd = PeelRound(res, prev, it + 1)
+            cut = step(rnd)
+            if cut is None:
+                converged = True
+            else:
+                if not any(cut.delta is d for d in rnd.owned):
+                    rnd.owned.append(cut.delta)
+                it += 1
+                rec = {"iteration": it, **cut.record}
+                converged = cut.done
+                if not converged:
+                    nxt, rows = _settle(
+                        _cut(res, cuts, keys(cut.delta), cut.rows), held, size_key is not None
+                    )
+                    for df in res:  # every residual is cut: none is in nxt
+                        if any(df is h for h in held):
+                            release(df)
+                            held[:] = [h for h in held if h is not df]
+                    res = nxt
+                    if size_key is not None:
+                        rec[size_key] = rows
+                        converged = rows == 0
+                rec.update(converged=converged, wall_s=time.time() - rt0)
+                if ckpt is not None:
+                    ckpt.save(it, cut.delta, metrics=rec)
+                metrics.append(rec)
+                prev = rec
+                if cut.part is not None:
+                    held.append(cut.part)
+                    parts.append(cut.part)
+            for df in rnd.owned:
+                if cut is None or df is not cut.part:
+                    release(df)
+            rnd = None
+        union = (
+            reduce(DataFrame.unionByName, parts)
+            if parts
+            else spark.createDataFrame([], schema)
+        )
+        answer = union if finish is None else finish(union, res, converged)
+        if not any(answer is h for h in held):
+            answer = sever(answer)
+        return Peeled(answer, it, time.time() - t0, metrics)
+    finally:
+        for df in held + (rnd.owned if rnd is not None else []):
+            if df is not answer:
+                release(df)

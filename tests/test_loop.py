@@ -1,30 +1,41 @@
-"""The fixpoint loop driver (linkgraph/loop.py) leaves its caller's
-state alone: edge cache, persistent RDDs, temp views and session conf,
-on the normal path and when the loop raises."""
+"""The loop drivers (linkgraph/loop.py: fixpoint and peel) leave their
+caller's state alone: edge cache, persistent RDDs, temp views and
+session conf, on the normal path and when the loop raises."""
 
 from __future__ import annotations
+
+import importlib
 
 import pytest
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from linkgraph.build import build_graph_from_edges
+from linkgraph import loop
+from linkgraph.build import build_graph_from_edges, symmetrize
 from linkgraph.checkpoint import CheckpointManager, release, sever
 from linkgraph.datagen import rmat_edges
 from linkgraph.kernels import (
     bowtie,
+    coloring,
     condensation,
     connected_components,
+    coreness,
+    densest_subgraph,
     eigenvector_centrality,
     hits,
     katz,
+    kcore,
+    ktruss,
     label_propagation,
+    maximal_matching,
+    mis,
     pagerank,
     pagerank_weighted,
     ppr,
     salsa,
     scc,
+    trussness,
 )
 
 
@@ -184,3 +195,100 @@ def test_release_sees_through_a_projection(spark):
         assert rdd in _persistent_rdds(spark)
         release(narrow(df))
         assert rdd not in _persistent_rdds(spark)
+
+
+def _sym_graph(spark, scale: int, edge_factor: int):
+    pdf = rmat_edges(scale=scale, edge_factor=edge_factor)
+    sym = symmetrize(spark.createDataFrame(pdf, "src long, dst long"))
+    return build_graph_from_edges(sym, num_partitions=4)
+
+
+# each peel kernel, and the module function its rounds call once each
+PEEL_KERNELS = {
+    "kcore": (lambda g: kcore(g, 4), "kcore", "_round"),
+    "coreness": (coreness, "coreness", "_round"),
+    "ktruss": (lambda g: ktruss(g, 4), "truss", "_scored"),
+    "trussness": (trussness, "truss", "_scored"),
+    "densest_subgraph": (densest_subgraph, "densest", "_round"),
+    "mis": (mis, "mis", "_round"),
+    "coloring": (coloring, "mis", "_round"),
+    "maximal_matching": (maximal_matching, "matching", "_round"),
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(PEEL_KERNELS))
+def test_peel_leaves_only_its_answer(spark, monkeypatch, kernel):
+    """After a peel kernel the persistent RDDs are the ones before it
+    plus the returned frame's; when its second round raises, the ones
+    before it. The caller's edge and vertex caches stay."""
+    run, module, helper = PEEL_KERNELS[kernel]
+    g = _sym_graph(spark, 6, 6)
+    rdds0 = _persistent_rdds(spark)
+    res = run(g)
+    assert res.iterations >= 2  # the failure below lands in a round
+    res.df.count()
+    assert _persistent_rdds(spark) - rdds0 == {_result_rdd(res.df)}
+    del res
+
+    rdds1 = _persistent_rdds(spark)
+    mod = importlib.import_module(f"linkgraph.kernels.{module}")
+    real = getattr(mod, helper)
+    calls = {"n": 0}
+
+    def fails_second(*args, **kwargs):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise RuntimeError("injected round failure")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(mod, helper, fails_second)
+    with pytest.raises(RuntimeError, match="injected"):
+        run(g)
+    monkeypatch.undo()
+    # set differences: the ContextCleaner may drop unrelated RDDs meanwhile
+    assert _persistent_rdds(spark) - rdds1 == set()
+    for df in (g.edges, g.vertices):
+        assert df.storageLevel != StorageLevel.NONE
+    g.unpersist()
+
+
+def _estimate(df: DataFrame) -> int:
+    """The optimizer's estimated sizeInBytes of a frame."""
+    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+
+
+def test_trussness_residual_keeps_its_input_estimate(spark, monkeypatch):
+    """R-MAT scale 8, symmetrized (211 vertices, 2,062 edges): trussness
+    peels to convergence and equals the sequential peeling. Every
+    round's residual is an anti-join of the last one, so its estimated
+    size stays that of the input edge table; a residual severed from a
+    view over the scored join squared its estimate every round, and
+    round walls grew from 0.8 s to 28.8 s by round 21."""
+    from tests.oracles import trussness_py
+
+    g = _sym_graph(spark, 8, 6)
+    assert (g.n, g.m) == (211, 2062)
+    settled = []
+    settle = loop._settle
+
+    def spy(residuals, held, count=False):
+        out, rows = settle(residuals, held, count)
+        settled.append(_estimate(out[0]))
+        return out, rows
+
+    monkeypatch.setattr(loop, "_settle", spy)
+    res = trussness(g)
+    monkeypatch.undo()
+    assert res.metrics[-1]["converged"]
+    assert len(settled) == res.iterations  # the input, then every cut but the last
+    assert max(settled[1:]) <= settled[0], settled
+
+    got = {(r["u"], r["w"]): r["truss"] for r in res.df.collect()}
+    sym = g.edges.toPandas()
+    assert got == trussness_py(sym["src"].to_numpy(), sym["dst"].to_numpy())
+    walls = [m["wall_s"] for m in res.metrics]
+    head = sum(walls[:5]) / 5
+    tail = sum(walls[-3:]) / 3
+    # the rule of tests/test_plans.py::test_sever_loop_stays_flat
+    assert tail < 8 * head + 0.5, (head, tail, walls)
+    g.unpersist()
