@@ -27,14 +27,28 @@ Note for symmetric (symmetrized) graphs: the in-edge set equals the
 out-edge set, so a dense *pull* along in-edges is expressible as the
 same join over the src-bucketed edge cache — no extra exchange for the
 transpose. CC exploits this (kernels/cc.py).
+
+:func:`traverse` is the level-synchronous loop over `edge_map` (the
+reference's BFS, algos.rs:124-167: edgeMap with a visited cond()).
+bfs, msbfs (and the harmonic, radii, closeness and landmark rollups
+over it), betweenness's forward sweep and ego_net run on it. It lives
+here, not in linkgraph/loop.py, because build.py imports loop.py.
 """
 
 from __future__ import annotations
+
+import time
+from dataclasses import dataclass, field
+from functools import reduce
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
+from linkgraph.checkpoint import CheckpointManager, release
+from linkgraph.loop import loop_conf, observe
+from linkgraph.session import conf_override
 
 
 def frontier_volume(graph: Graph, frontier: DataFrame, reverse: bool = False) -> int:
@@ -149,3 +163,140 @@ def single_frontier(graph: Graph, vertex: int) -> DataFrame:
 def full_frontier(graph: Graph) -> DataFrame:
     """NodeSubset::full."""
     return graph.vertices.select("id")
+
+
+@dataclass
+class Traversal:
+    reached: DataFrame | None  # seed ∪ every level, severed once; the caller owns it
+    levels: list[DataFrame]  # keep_levels only: seed, then each non-empty level
+    iterations: int  # levels run, counting resumed ones and an empty last one
+    metrics: list[dict] = field(default_factory=list)
+
+
+def traverse(
+    graph: Graph,
+    seed: DataFrame,
+    level: Callable[[DataFrame, int], DataFrame],
+    aggs: list[Column],
+    *,
+    max_iter: int,
+    lanes: tuple[str, ...] = (),
+    direction: str = "out",
+    depth: str | None = None,
+    compact_every: int = 32,
+    keep_levels: bool = False,
+    ckpt: CheckpointManager | None = None,
+    prior: tuple[DataFrame, dict] | None = None,
+) -> Traversal:
+    """Level-synchronous traversal from ``seed`` until a level reaches
+    nothing new or ``max_iter`` levels ran.
+
+    seed      : level 0, keyed by (id, *lanes).
+    level     : (candidates, l) -> the rows first reached at level l.
+                The candidates are edge_map's (dst, *lanes, *aggs) from
+                the last level; for direction "both", the union of the
+                forward and the transpose walk.
+    aggs      : edge_map's combine per (dst, *lanes).
+    lanes     : extra combine-key columns: one traversal per lane value
+                (msbfs's and betweenness's ``source``), each with its
+                own visited set.
+    direction : "out" follows edges, "in" the transpose, "both" both
+                in the same round.
+    depth     : the column holding the level number; resume re-derives
+                the frontier from it.
+    compact_every : the visited union is severed into one frame every
+                K levels, bounding its union tree on deep graphs.
+    keep_levels : return the severed levels instead of their union
+                (betweenness's backward sweep); the caller owns them.
+    ckpt      : each level's delta is saved (``delta_ckpt`` True); a
+                call resumes from ``load_deltas`` as seed ∪ deltas.
+    prior     : (reached set, last record) to resume from instead.
+
+    The traversal owns, once: the seed, severed with its row count
+    riding the same job; each level, one edge_map from the last delta
+    with the visited set as its ``exclude_dst`` cond() and push or pull
+    chosen from the observed count × average degree; the level's delta,
+    severed with its count as an Observation; the visited set, a flat
+    union of the severed levels' (id, *lanes), compacted every
+    ``compact_every`` levels; delta checkpoints and resume; the loop
+    conf (``loop.loop_conf`` at the edge cache's width) for every
+    level; one record per level (``iteration``, ``frontier_size``,
+    ``mode``, ``volume``, ``frontier_size_next``, ``wall_s``); and
+    release, in ``finally``, of every level the caller does not keep.
+    """
+    spark = seed.sparkSession
+    key = ["id", *lanes]
+    walks = {"out": [False], "in": [True], "both": [False, True]}[direction]
+    avg_deg = graph.m / max(graph.n, 1)
+    count = [F.count(F.lit(1)).alias("rows")]
+    held: list[DataFrame] = []  # severed frames this call owns
+    kept: list[DataFrame] = []  # the ones it returns
+    metrics: list[dict] = []
+    try:
+        if prior is None and ckpt is not None:
+            loaded = ckpt.load_deltas(spark)
+            if loaded is not None:
+                prior = (seed.union(loaded[0]), loaded[1])
+        if prior is None:
+            first, s = observe(seed, count, held)
+            it, fcount, frontier = 0, s["rows"], first
+        else:
+            first, _ = observe(prior[0], [], held)
+            it, fcount = prior[1]["iteration"], prior[1].get("frontier_size_next")
+            frontier = first.where(F.col(depth) == it)
+            if fcount is None:
+                # a record without the key (legacy writer): recount the
+                # frontier rather than read the missing key as converged
+                fcount = frontier.count()
+            if fcount == 0:
+                metrics.append(prior[1])
+        levels = [first]
+        seen = [first]  # severed frames whose (id, *lanes) union is the visited set
+        with conf_override(spark, loop_conf(graph.edges.rdd.getNumPartitions())):
+            while fcount and it < max_iter:
+                t0 = time.time()
+                it += 1
+                info: dict = {}
+                visited = reduce(DataFrame.union, [f.select(*key) for f in seen])
+                cands = [
+                    edge_map(
+                        graph,
+                        frontier,
+                        aggs,
+                        volume=int(fcount * avg_deg),
+                        reverse=reverse,
+                        exclude_dst=visited,
+                        info=info,
+                        group_extra=list(lanes),
+                    )
+                    for reverse in walks
+                ]
+                delta, s = observe(level(reduce(DataFrame.union, cands), it), count, held)
+                rec = {"iteration": it, "frontier_size": fcount, **info}
+                fcount = s["rows"]
+                rec.update(frontier_size_next=fcount, wall_s=time.time() - t0)
+                metrics.append(rec)
+                if ckpt is not None:
+                    ckpt.save(it, delta, metrics={**rec, "delta_ckpt": True})
+                if not fcount:
+                    break
+                if len(seen) >= compact_every:
+                    block, _ = observe(visited, [], held)
+                    if seen[0] is not first:
+                        release(seen[0])  # the last compaction's block
+                    seen = [block]
+                levels.append(delta)
+                seen.append(delta)
+                frontier = delta
+        if keep_levels:
+            kept = levels
+            return Traversal(None, levels, it, metrics)
+        if len(levels) > 1:
+            kept = [observe(reduce(DataFrame.union, levels), [], held)[0]]
+        else:
+            kept = levels
+        return Traversal(kept[0], [], it, metrics)
+    finally:
+        for f in held:
+            if not any(f is k for k in kept):
+                release(f)

@@ -4,18 +4,19 @@ pagerank        power iteration + dangling-mass redistribution (metric kernel)
 pagerank_delta  faithful reproduction of the reference's frontier PR
                 (/root/reference/src/algos.rs:169-295, quirks included)
 cc              connected components via hash-min label propagation
-bfs             frontier BFS (levels + min-parent tree)
+bfs             frontier BFS (levels + min-parent tree) on
+                frontier.py's `traverse`, the one level-synchronous loop
 labelprop       community label propagation (most-frequent in-neighbor label)
 triangles       triangle count via degree-ordered edge-intersection join;
                 the triangle family's one enumerator (`triangles`)
-msbfs           multi-source BFS (all lanes in one frontier loop) +
+msbfs           multi-source BFS (all lanes in one `traverse`) +
                 sampled harmonic + closeness centrality rollups
 coreness        full k-core decomposition: per-vertex core numbers +
                 degeneracy via level-synchronous bucket peeling
                 (Batagelj-Zaveršnik / Julienne KCore)
 kcore           k-core membership via iterative peeling (loop.py's
                 peel: anti-join removals over the bucketed edge state)
-betweenness     sampled-source Brandes BC (laned forward sigma sweep +
+betweenness     sampled-source Brandes BC (laned `traverse` sigma sweep +
                 level-synchronous backward dependency accumulation)
 sssp            weighted single-source shortest paths (frontier
                 Bellman-Ford over a weighted edge cache)
@@ -70,7 +71,7 @@ power_law_alpha Hill MLE tail exponent of the degree distribution
 ktruss          k-truss decomposition (edge-support peeling over
                 triangles.py's edge_support, Cohen 2008)
 ego_net         radius-k ego network + induced subgraph extraction
-                (bounded frontier BFS, out/in/both walks)
+                (a `traverse` of <= radius levels, out/in/both walks)
 maximal_matching parallel greedy maximal matching with deterministic
                 edge priorities (equals sequential greedy in key order)
 minimum_spanning_forest Borůvka MSF (unique under the strict (w,u,v)

@@ -142,56 +142,61 @@ def anf(
         nf = [float(obs0.get["nf"] or 0.0)]
         last_bits = int(obs0.get["bits"] or 0)
         metrics = [{"iteration": 0, "bits": last_bits, "nf": nf[0]}]
-    for rnd in range(start, max_iter + 1):
-        # out-ball growth is M(u) |= OR over u's OUT-neighbors, i.e. a
-        # combine keyed by the edge's SOURCE — expressed as an edge_map
-        # over the transpose (reverse walk), whose `dst` is our source
-        gathered = edge_map(
-            graph,
-            state,
-            aggs=[F.expr(f"bit_or(m{k})").alias(f"g{k}") for k in ks],
-            reverse=not reverse,
-            dense=True,  # every vertex is always active: skip the volume job
-            volume=graph.m,
-        )
-        obs = Observation(f"anf_round_{rnd}")
-        nxt = sever(
-            state.join(gathered.withColumnRenamed("dst", "id"), "id", "left")
-            .select(
-                "id",
-                *[
-                    F.col(f"m{k}")
-                    .bitwiseOR(F.coalesce(F.col(f"g{k}"), F.lit(0)))
-                    .alias(f"m{k}")
-                    for k in ks
-                ],
+    try:
+        for rnd in range(start, max_iter + 1):
+            rt0 = time.time()
+            # out-ball growth is M(u) |= OR over u's OUT-neighbors, i.e. a
+            # combine keyed by the edge's SOURCE — expressed as an edge_map
+            # over the transpose (reverse walk), whose `dst` is our source
+            gathered = edge_map(
+                graph,
+                state,
+                aggs=[F.expr(f"bit_or(m{k})").alias(f"g{k}") for k in ks],
+                reverse=not reverse,
+                dense=True,  # every vertex is always active: skip the volume job
+                volume=graph.m,
             )
-            .observe(
-                obs,
-                F.sum(est).alias("nf"),
-                sum(F.sum(F.bit_count(F.col(c))) for c in mcols).alias("bits"),
+            obs = Observation(f"anf_round_{rnd}")
+            nxt = sever(
+                state.join(gathered.withColumnRenamed("dst", "id"), "id", "left")
+                .select(
+                    "id",
+                    *[
+                        F.col(f"m{k}")
+                        .bitwiseOR(F.coalesce(F.col(f"g{k}"), F.lit(0)))
+                        .alias(f"m{k}")
+                        for k in ks
+                    ],
+                )
+                .observe(
+                    obs,
+                    F.sum(est).alias("nf"),
+                    sum(F.sum(F.bit_count(F.col(c))) for c in mcols).alias("bits"),
+                )
             )
-        )
-        bits = int(obs.get["bits"] or 0)
-        nf.append(float(obs.get["nf"] or 0.0))
-        converged = bits == last_bits  # monotone Σ bit_count stalls ⇔ fixpoint
-        rec = {
-            "iteration": rnd,
-            "bits": bits,
-            "nf": nf[-1],
-            "nf_history": nf,
-            "converged": converged,
-            "wall_s": time.time() - t0,
-        }
-        metrics.append(rec)
+            bits = int(obs.get["bits"] or 0)
+            nf.append(float(obs.get["nf"] or 0.0))
+            converged = bits == last_bits  # monotone Σ bit_count stalls ⇔ fixpoint
+            rec = {
+                "iteration": rnd,
+                "bits": bits,
+                "nf": nf[-1],
+                "nf_history": nf,
+                "converged": converged,
+                "wall_s": time.time() - rt0,
+            }
+            metrics.append(rec)
+            release(state)
+            state = nxt
+            iterations = rnd
+            if ckpt is not None:
+                ckpt.save(rnd, state, metrics=rec)
+            if converged:
+                break
+            last_bits = bits
+    except BaseException:
         release(state)
-        state = nxt
-        iterations = rnd
-        if ckpt is not None:
-            ckpt.save(rnd, state, metrics=rec)
-        if converged:
-            break
-        last_bits = bits
+        raise
     return ANFResult(
         df=state,
         nf=nf,

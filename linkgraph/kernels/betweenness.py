@@ -8,12 +8,13 @@ for a deterministic source sample S, summed over S — with S = all
 vertices this is exact BC; smaller S is the standard estimator.
 
 Forward phase = multi-source BFS that also accumulates σ (the number
-of shortest paths): each round is ONE edge_map with the composite
+of shortest paths): linkgraph/frontier.py's `traverse` with `source`
+as the lane column, so each level is ONE edge_map with the composite
 (dst, source) combine key, aggs = SUM(σ) over frontier in-neighbors,
 and the per-lane visited check as the anti-join cond() — the σ
-accumulation IS the message combine, no extra pass. Per-level states
-are retained (severed) so the backward phase replays levels without
-re-filtering a big union.
+accumulation IS the message combine, no extra pass. The traversal
+keeps its per-level states (severed, `keep_levels`), so the backward
+phase replays levels without re-filtering a big union.
 
 Backward phase sweeps levels deepest-first: δ(v) = Σ over successors w
 (edge v→w, dist(w) = dist(v)+1, same lane) of (σ(v)/σ(w))·(1+δ(w)).
@@ -38,12 +39,14 @@ import time
 from dataclasses import dataclass, field
 from functools import reduce
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
 from linkgraph.checkpoint import release, sever
-from linkgraph.frontier import edge_map
+from linkgraph.frontier import traverse
+from linkgraph.loop import loop_conf
+from linkgraph.session import conf_override
 
 
 @dataclass
@@ -61,121 +64,87 @@ def betweenness(
 ) -> BCResult:
     spark = graph.edges.sparkSession
     t0 = time.time()
-    src_list = sorted(set(int(s) for s in sources))
-    if not src_list:
-        return BCResult(
-            spark.createDataFrame([], "id long, bc double"), 0, time.time() - t0
-        )
-
     # ---- forward: levels[l] = (id, source, sigma) reached at dist l
-    seed = sever(
-        spark.createDataFrame(
-            [(s, s, 1.0) for s in src_list], "id long, source long, sigma double"
-        )
+    seed = spark.createDataFrame(
+        [(s, s, 1.0) for s in sorted(set(int(s) for s in sources))],
+        "id long, source long, sigma double",
     )
-    levels: list[DataFrame] = [seed]
-    visited = seed.select("id", "source")
-    fcount = len(src_list)
-    metrics: list[dict] = []
-    iterations = 0
-    for level in range(1, max_iter + 1):
-        if fcount == 0:
-            break
-        it_t0 = time.time()
-        est_volume = int(fcount * (graph.m / max(graph.n, 1)))
-        info: dict = {}
-        nxt = edge_map(
-            graph,
-            levels[-1],
-            aggs=[F.sum("sigma").alias("sigma")],
-            volume=est_volume,
-            exclude_dst=visited,
-            info=info,
-            group_extra=["source"],
-        ).select(F.col("dst").alias("id"), "source", "sigma")
-        obs = Observation(f"bc_fwd_{level}")
-        cur = sever(nxt.observe(obs, F.count(F.lit(1)).alias("added")))
-        fcount = int(obs.get["added"] or 0)
-        if fcount == 0:
-            release(cur)
-            break
-        levels.append(cur)
-        visited = visited.union(cur.select("id", "source"))
-        iterations = level
-        metrics.append(
-            {
-                "phase": "forward",
-                "iteration": level,
-                "frontier_size": fcount,
-                "mode": info.get("mode"),
-                "wall_s": time.time() - it_t0,
-            }
-        )
-
-    # ---- backward: deepest level has delta 0; sweep up
-    edges = graph.edges
+    fwd = traverse(
+        graph,
+        seed,
+        lambda c, l: c.select(F.col("dst").alias("id"), "source", "sigma"),
+        [F.sum("sigma").alias("sigma")],
+        max_iter=max_iter,
+        lanes=("source",),
+        keep_levels=True,
+    )
+    levels = fwd.levels
+    metrics = [{"phase": "forward", **r} for r in fwd.metrics]
     delta_states: list[DataFrame] = []
-    upper = sever(levels[-1].withColumn("delta", F.lit(0.0)))
-    delta_states.append(upper)
-    for l in range(len(levels) - 2, -1, -1):
-        it_t0 = time.time()
-        low = levels[l]
-        contrib = (
-            edges.join(
-                low.select(
-                    F.col("id").alias("src"),
-                    "source",
-                    F.col("sigma").alias("sigma_v"),
-                ),
-                "src",
-            )
-            .join(
-                upper.select(
-                    F.col("id").alias("dst"),
-                    "source",
-                    F.col("sigma").alias("sigma_w"),
-                    F.col("delta").alias("delta_w"),
-                ),
-                ["dst", "source"],
-            )
-            .groupBy(F.col("src").alias("id"), "source")
-            .agg(
-                F.sum(
-                    (F.col("sigma_v") / F.col("sigma_w"))
-                    * (F.lit(1.0) + F.col("delta_w"))
-                ).alias("d")
-            )
-        )
-        cur = sever(
-            low.join(contrib, ["id", "source"], "left").select(
-                "id",
-                "source",
-                "sigma",
-                F.coalesce(F.col("d"), F.lit(0.0)).alias("delta"),
-            )
-        )
-        delta_states.append(cur)
-        upper = cur
-        metrics.append(
-            {"phase": "backward", "level": l, "wall_s": time.time() - it_t0}
-        )
+    try:
+        with conf_override(spark, loop_conf(graph.edges.rdd.getNumPartitions())):
+            # ---- backward: deepest level has delta 0; sweep up
+            edges = graph.edges
+            upper = sever(levels[-1].withColumn("delta", F.lit(0.0)))
+            delta_states.append(upper)
+            for l in range(len(levels) - 2, -1, -1):
+                it_t0 = time.time()
+                low = levels[l]
+                contrib = (
+                    edges.join(
+                        low.select(
+                            F.col("id").alias("src"),
+                            "source",
+                            F.col("sigma").alias("sigma_v"),
+                        ),
+                        "src",
+                    )
+                    .join(
+                        upper.select(
+                            F.col("id").alias("dst"),
+                            "source",
+                            F.col("sigma").alias("sigma_w"),
+                            F.col("delta").alias("delta_w"),
+                        ),
+                        ["dst", "source"],
+                    )
+                    .groupBy(F.col("src").alias("id"), "source")
+                    .agg(
+                        F.sum(
+                            (F.col("sigma_v") / F.col("sigma_w"))
+                            * (F.lit(1.0) + F.col("delta_w"))
+                        ).alias("d")
+                    )
+                )
+                cur = sever(
+                    low.join(contrib, ["id", "source"], "left").select(
+                        "id",
+                        "source",
+                        "sigma",
+                        F.coalesce(F.col("d"), F.lit(0.0)).alias("delta"),
+                    )
+                )
+                delta_states.append(cur)
+                upper = cur
+                metrics.append(
+                    {"phase": "backward", "level": l, "wall_s": time.time() - it_t0}
+                )
 
-    bc = reduce(
-        lambda a, b: a.union(b),
-        [d.select("id", "source", "delta") for d in delta_states],
-    )
-    out = sever(
-        bc.where(F.col("id") != F.col("source"))
-        .groupBy("id")
-        .agg(F.round(F.sum("delta"), 9).alias("bc"))
-    )
-    for d in delta_states:
-        release(d)
-    for s in levels:
-        release(s)
+            bc = reduce(
+                lambda a, b: a.union(b),
+                [d.select("id", "source", "delta") for d in delta_states],
+            )
+            out = sever(
+                bc.where(F.col("id") != F.col("source"))
+                .groupBy("id")
+                .agg(F.round(F.sum("delta"), 9).alias("bc"))
+            )
+    finally:
+        for d in delta_states + levels:
+            release(d)
     return BCResult(
         df=out,
-        iterations=iterations,
+        iterations=len(levels) - 1,
         wall_seconds=time.time() - t0,
         metrics=metrics,
     )

@@ -11,10 +11,11 @@ are 0; min distance on multi-seed). `edges` = ALL original directed
 edges whose endpoints both fall inside the ball (the induced subgraph
 keeps direction regardless of walk direction).
 
-Plan shape: a bounded frontier BFS (≤ radius edge_map rounds, delta
-frontiers, anti-join visitedness — bfs.py's loop without the parent
-tree; "both" walks forward and transpose in the same round), then one
-double semi-join for the induced edges. Scale: O(radius) rounds, work
+Plan shape: a bounded frontier BFS (≤ radius levels of
+linkgraph/frontier.py's `traverse`: delta frontiers, anti-join
+visitedness, bfs's traversal without the parent tree; "both" walks
+forward and transpose in the same round), then one double semi-join
+for the induced edges. Scale: O(radius) rounds, work
 proportional to the ball size, not the graph; the induced-edge join
 is two hash joins against the (typically small) ball. The reference
 engine at /root/reference/src has no subgraph extraction; this
@@ -26,13 +27,12 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
 from linkgraph.checkpoint import release, sever
-from linkgraph.frontier import edge_map
-from linkgraph.session import conf_override
+from linkgraph.frontier import traverse
 
 
 @dataclass
@@ -54,65 +54,29 @@ def ego_net(
         raise ValueError("radius must be >= 0")
     spark = graph.edges.sparkSession
     t0 = time.time()
-    avg_deg = graph.m / max(graph.n, 1)
-
-    visited = sever(
-        spark.createDataFrame(
-            [(int(s), 0) for s in set(seeds)], "id long, dist long"
-        )
-    )
-    frontier = visited.select("id")
-    fcount = visited.count()
-    with conf_override(spark, {"spark.sql.adaptive.enabled": "false"}):
-        for hop in range(1, radius + 1):
-            if fcount == 0:
-                break
-            parts = []
-            if direction in ("out", "both"):
-                parts.append(
-                    edge_map(
-                        graph,
-                        frontier,
-                        aggs=[F.count("*").alias("_m")],
-                        volume=int(fcount * avg_deg),
-                        exclude_dst=visited.select("id"),
-                    ).select(F.col("dst").alias("id"))
-                )
-            if direction in ("in", "both"):
-                parts.append(
-                    edge_map(
-                        graph,
-                        frontier,
-                        aggs=[F.count("*").alias("_m")],
-                        reverse=True,
-                        volume=int(fcount * avg_deg),
-                        exclude_dst=visited.select("id"),
-                    ).select(F.col("dst").alias("id"))
-                )
-            nxt_ids = parts[0] if len(parts) == 1 else parts[0].union(parts[1])
-            obs = Observation(f"ego_hop_{hop}")
-            nxt = sever(
-                nxt_ids.distinct()
-                .withColumn("dist", F.lit(hop).cast("long"))
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-            )
-            fcount = int(obs.get["n"] or 0)
-            if fcount == 0:
-                release(nxt)
-                break
-            new_visited = sever(visited.unionByName(nxt))
-            release(visited)
-            visited = new_visited
-            frontier = nxt.select("id")
-
+    seed = spark.createDataFrame([(int(s), 0) for s in set(seeds)], "id long, dist long")
+    visited = traverse(
+        graph,
+        seed,
+        lambda c, l: c.select(F.col("dst").alias("id"))
+        .distinct()
+        .withColumn("dist", F.lit(l).cast("long")),
+        [F.count("*").alias("_m")],
+        max_iter=radius,
+        direction=direction,
+    ).reached
     ball = visited.select("id")
-    induced = sever(
-        graph.edges.join(
-            ball.withColumnRenamed("id", "src").hint("shuffle_hash"), "src"
+    try:
+        induced = sever(
+            graph.edges.join(
+                ball.withColumnRenamed("id", "src").hint("shuffle_hash"), "src"
+            )
+            .join(ball.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst")
+            .select("src", "dst")
         )
-        .join(ball.withColumnRenamed("id", "dst").hint("shuffle_hash"), "dst")
-        .select("src", "dst")
-    )
+    except BaseException:
+        release(visited)
+        raise
     return EgoNetResult(
         vertices=visited,
         edges=induced,

@@ -18,9 +18,11 @@ edge_map(group_extra=["source"], exclude_dst=per-lane visited)).
 Scale shape: per round, messages = Σ out_deg over (frontier × lanes
 present) — the dispatcher's volume statistic counts lane multiplicity,
 so a wide multi-lane frontier switches to dense-pull exactly when the
-real message volume crosses |E|/20. Durable checkpoints persist
-per-level DELTAS only (the bfs.py r4 layout): O(|frontier|) rows per
-level, reconstructed by union at resume.
+real message volume crosses |E|/20. The levels run on
+linkgraph/frontier.py's `traverse` with `source` as the lane column:
+per-level delta severs, the per-lane visited set as a flat union of
+them, durable checkpoints of the per-level DELTAS only (the bfs.py r4
+layout), reconstructed by union at resume.
 
 harmonic_centrality() is the textbook sampled estimator (Boldi &
 Vigna, "Axioms for Centrality", 2014): harmonic(v) ≈ Σ_{s ∈ S,
@@ -32,12 +34,12 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
-from linkgraph.checkpoint import CheckpointManager, release, sever
-from linkgraph.frontier import edge_map
+from linkgraph.checkpoint import CheckpointManager
+from linkgraph.frontier import traverse
 
 
 @dataclass
@@ -62,100 +64,25 @@ def msbfs(
     reverse=True walks in-edges (dist = hops from `id` TO `source`)."""
     spark = graph.edges.sparkSession
     t0 = time.time()
-
-    src_list = sorted(set(int(s) for s in sources))
-    if not src_list:
-        return MSBFSResult(
-            spark.createDataFrame([], "id long, source long, dist long"),
-            0,
-            time.time() - t0,
-        )
     seed = spark.createDataFrame(
-        [(s, s, 0) for s in src_list], "id long, source long, dist long"
+        [(s, s, 0) for s in sorted(set(int(s) for s in sources))],
+        "id long, source long, dist long",
     )
-    visited = None
-    start_level = 1
-    fcount = len(src_list)  # fresh start: one frontier row per lane
-    if ckpt is not None:
-        loaded = ckpt.load_deltas(spark)
-        if loaded is not None:
-            # delta layout only (kernel is newer than the r3 full-state
-            # layout): iter=<k>/state holds the rows first reached at
-            # level k; the visited set is seed ∪ all deltas
-            deltas, rec = loaded
-            last = rec["iteration"]
-            visited = sever(seed.union(deltas))
-            start_level = last + 1
-            if rec.get("frontier_size_next") is None:
-                fcount = visited.where(F.col("dist") == last).count()
-            else:
-                fcount = int(rec["frontier_size_next"])
-            if fcount == 0:
-                return MSBFSResult(visited, last, 0.0, [rec])
-    if visited is None:
-        visited = sever(seed)
-    frontier = visited.where(F.col("dist") == start_level - 1).select(
-        "id", "source"
+    res = traverse(
+        graph,
+        seed,
+        lambda c, l: c.select(
+            F.col("dst").alias("id"), "source", F.lit(l).cast("long").alias("dist")
+        ),
+        [F.count(F.lit(1)).alias("paths")],
+        max_iter=max_iter,
+        lanes=("source",),
+        direction="in" if reverse else "out",
+        depth="dist",
+        compact_every=compact_every,
+        ckpt=ckpt,
     )
-
-    deltas = [visited]
-    iterations = start_level - 1
-    metrics: list[dict] = []
-    for level in range(start_level, max_iter + 1):
-        if fcount == 0:
-            break
-        it_t0 = time.time()
-        entering = fcount
-        # volume counts lane multiplicity: fcount is (vertex, lane) rows
-        est_volume = int(fcount * (graph.m / max(graph.n, 1)))
-        info: dict = {}
-        nxt = edge_map(
-            graph,
-            frontier,
-            aggs=[F.count(F.lit(1)).alias("paths")],
-            volume=est_volume,
-            reverse=reverse,
-            exclude_dst=visited.select("id", "source"),
-            info=info,
-            group_extra=["source"],
-        ).select(
-            F.col("dst").alias("id"),
-            "source",
-            F.lit(level).cast("long").alias("dist"),
-        )
-        obs = Observation("msbfs_iter")
-        delta = sever(nxt.observe(obs, F.count(F.lit(1)).alias("added")))
-        fcount = int(obs.get["added"] or 0)
-        deltas.append(delta)
-        visited = visited.union(delta)
-        frontier = delta.select("id", "source")
-        iterations = level
-        rec = {
-            "iteration": level,
-            "frontier_size": entering,
-            "mode": info.get("mode"),
-            "volume": info.get("volume"),
-            "frontier_size_next": fcount,
-            "wall_s": time.time() - it_t0,
-        }
-        metrics.append(rec)
-        if ckpt is not None:
-            ckpt.save(level, delta, metrics={**rec, "delta_ckpt": True})
-        if len(deltas) >= compact_every:
-            compacted = sever(visited)
-            for d in deltas:
-                release(d)
-            deltas = [compacted]
-            visited = compacted
-            frontier = visited.where(F.col("dist") == level).select(
-                "id", "source"
-            )
-    return MSBFSResult(
-        df=visited,
-        iterations=iterations,
-        wall_seconds=time.time() - t0,
-        metrics=metrics,
-    )
+    return MSBFSResult(res.reached, res.iterations, time.time() - t0, res.metrics)
 
 
 def harmonic_centrality(

@@ -41,11 +41,12 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from linkgraph.build import Graph
-from linkgraph.checkpoint import CheckpointManager, release, sever
+from linkgraph.checkpoint import CheckpointManager, release
+from linkgraph.loop import observe
 
 DAMPING_FACTOR = 0.85  # algos.rs:178
 TOLERANCE = 1e-7  # algos.rs:179
@@ -94,100 +95,97 @@ def pagerank_delta(
 
     state = None
     metrics: list[dict] = []
-    if ckpt is not None:
-        last = ckpt.last_complete()
-        if last is not None:
-            loaded, _, rec = ckpt.load(graph.edges.sparkSession, last)
-            state = sever(loaded)
-            sum_of_delta = rec["sum_of_delta"]
-            rounds = last + 1
-            remaining = max_iterations - last
-            metrics.append(rec)
+    held: list[DataFrame] = []  # severed frames this call owns
+    try:
+        if ckpt is not None:
+            last = ckpt.last_complete()
+            if last is not None:
+                loaded, _, rec = ckpt.load(graph.edges.sparkSession, last)
+                state, _ = observe(loaded, [], held)
+                sum_of_delta = rec["sum_of_delta"]
+                rounds = last + 1
+                remaining = max_iterations - last
+                metrics.append(rec)
 
-    if state is None:
-        # state: (id, out_deg, rank, delta, active)
-        state = sever(
-            graph.degrees.select(
+        if state is None:
+            # state: (id, out_deg, rank, delta, active)
+            init = graph.degrees.select(
                 "id",
                 "out_deg",
                 F.lit(0.0).alias("rank"),
                 F.lit(one_over_n).alias("delta"),
                 F.lit(True).alias("active"),
             )
-        )
 
-        # ---- round 0: full-frontier scatter + FirstRound apply ----
-        gathered = _scatter(graph, state)  # full frontier (algos.rs:277)
-        g = F.coalesce(F.col("gathered"), F.lit(0.0))
-        pre_delta = g * DAMPING_FACTOR + F.lit(ALPHA)
-        new_rank = F.col("rank") + pre_delta  # rank was 0
-        state = (
-            state.join(gathered, state["id"] == gathered["dst"], "left")
-            .select(
-                state["id"],
-                state["out_deg"],
-                new_rank.alias("rank"),
-                (pre_delta - one_over_n).alias("delta"),
-                (F.abs(pre_delta - one_over_n) > new_rank + DELTA_THRESHOLD).alias(
-                    "active"
-                ),
+            # ---- round 0: full-frontier scatter + FirstRound apply ----
+            gathered = _scatter(graph, init)  # full frontier (algos.rs:277)
+            g = F.coalesce(F.col("gathered"), F.lit(0.0))
+            pre_delta = g * DAMPING_FACTOR + F.lit(ALPHA)
+            new_rank = F.col("rank") + pre_delta  # rank was 0
+            state = (
+                init.join(gathered, init["id"] == gathered["dst"], "left")
+                .select(
+                    init["id"],
+                    init["out_deg"],
+                    new_rank.alias("rank"),
+                    (pre_delta - one_over_n).alias("delta"),
+                    (F.abs(pre_delta - one_over_n) > new_rank + DELTA_THRESHOLD).alias(
+                        "active"
+                    ),
+                )
             )
-        )
-        # sum_of_delta rides the checkpoint materialization as an
-        # Observation (one job per round, same as the other kernels)
-        obs = Observation("prd_round")
-        state = sever(
-            state.observe(obs, F.sum("delta").alias("sum_of_delta"))
-        )
-        sum_of_delta = obs.get["sum_of_delta"] or 0.0
-        rounds = 1
-        remaining = max_iterations
-        rec0 = {"round": 0, "sum_of_delta": sum_of_delta}
-        metrics.append(rec0)
-        if ckpt is not None:
-            ckpt.save(0, state, metrics=rec0)
+            # sum_of_delta rides the checkpoint materialization as an
+            # Observation (one job per round, same as the other kernels)
+            state, obs = observe(state, [F.sum("delta").alias("sum_of_delta")], held)
+            sum_of_delta = obs["sum_of_delta"] or 0.0
+            rounds = 1
+            remaining = max_iterations
+            rec0 = {"round": 0, "sum_of_delta": sum_of_delta}
+            metrics.append(rec0)
+            if ckpt is not None:
+                ckpt.save(0, state, metrics=rec0)
 
-    prev_ckpt = state
-
-    # ---- remaining rounds (algos.rs:281-291) ----
-    while True:
-        error = sum_of_delta  # sum_of_delta_and_reset (:263-265)
-        remaining -= 1
-        # <= 0 (not == 0): a resume with max_iterations smaller than
-        # the checkpointed round makes `remaining` start negative, and
-        # max_iterations=0 on a fresh run starts it at -1 after the
-        # decrement — both must stop here, not run to error-convergence
-        if error < TOLERANCE or remaining <= 0:
-            break
-        frontier_state = state.where(F.col("active"))
-        gathered = _scatter(graph, frontier_state)
-        g = F.coalesce(F.col("gathered"), F.lit(0.0))
-        delta = g * DAMPING_FACTOR
-        keep = F.abs(F.col("rank")) > F.col("rank") * DELTA_THRESHOLD  # quirk 2
-        state = (
-            state.join(gathered, state["id"] == gathered["dst"], "left")
-            .select(
-                state["id"],
-                state["out_deg"],
-                F.when(keep, F.col("rank") + delta).otherwise(F.col("rank")).alias(
-                    "rank"
+        # ---- remaining rounds (algos.rs:281-291) ----
+        while True:
+            error = sum_of_delta  # sum_of_delta_and_reset (:263-265)
+            remaining -= 1
+            # <= 0 (not == 0): a resume with max_iterations smaller than
+            # the checkpointed round makes `remaining` start negative, and
+            # max_iterations=0 on a fresh run starts it at -1 after the
+            # decrement — both must stop here, not run to error-convergence
+            if error < TOLERANCE or remaining <= 0:
+                break
+            frontier_state = state.where(F.col("active"))
+            gathered = _scatter(graph, frontier_state)
+            g = F.coalesce(F.col("gathered"), F.lit(0.0))
+            delta = g * DAMPING_FACTOR
+            keep = F.abs(F.col("rank")) > F.col("rank") * DELTA_THRESHOLD  # quirk 2
+            prev = state
+            state, obs = observe(
+                state.join(gathered, state["id"] == gathered["dst"], "left").select(
+                    state["id"],
+                    state["out_deg"],
+                    F.when(keep, F.col("rank") + delta).otherwise(F.col("rank")).alias(
+                        "rank"
+                    ),
+                    delta.alias("delta"),
+                    keep.alias("active"),
                 ),
-                delta.alias("delta"),
-                keep.alias("active"),
+                [F.sum("delta").alias("sum_of_delta")],
+                held,
             )
-        )
-        obs = Observation("prd_round")
-        state = sever(
-            state.observe(obs, F.sum("delta").alias("sum_of_delta"))
-        )
-        release(prev_ckpt)
-        prev_ckpt = state
-        sum_of_delta = obs.get["sum_of_delta"] or 0.0
-        rounds += 1
-        rec = {"round": rounds - 1, "sum_of_delta": sum_of_delta}
-        metrics.append(rec)
-        if ckpt is not None:
-            ckpt.save(rounds - 1, state, metrics=rec)
+            release(prev)
+            held = [state]
+            sum_of_delta = obs["sum_of_delta"] or 0.0
+            rounds += 1
+            rec = {"round": rounds - 1, "sum_of_delta": sum_of_delta}
+            metrics.append(rec)
+            if ckpt is not None:
+                ckpt.save(rounds - 1, state, metrics=rec)
+    except BaseException:
+        for df in held:
+            release(df)
+        raise
 
     return PageRankDeltaResult(
         df=state.select("id", "rank"),

@@ -27,12 +27,13 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from linkgraph.build import Graph
-from linkgraph.checkpoint import release, sever
+from linkgraph.checkpoint import release
+from linkgraph.loop import observe
 
 
 @dataclass
@@ -66,16 +67,17 @@ def sssp(
     else:
         ew = ew.withColumn("w", F.lit(1.0))
     ew = ew.persist(StorageLevel.MEMORY_AND_DISK)
-    ew.count()
-
-    state = sever(
-        spark.createDataFrame([(root, 0.0)], "id long, dist double")
-    )
-    frontier = state
-    fcount = 1
-    iterations = 0
-    metrics: list[dict] = []
+    held: list[DataFrame] = []  # severed frames this call owns
+    out = None
     try:
+        ew.count()
+        state, _ = observe(
+            spark.createDataFrame([(root, 0.0)], "id long, dist double"), [], held
+        )
+        frontier = state
+        fcount = 1
+        iterations = 0
+        metrics: list[dict] = []
         for rnd in range(1, max_iter + 1):
             if fcount == 0:
                 break
@@ -100,11 +102,10 @@ def sssp(
                 .where(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
                 .select(F.col("dst").alias("id"), F.col("nd").alias("dist"))
             )
-            obs = Observation(f"sssp_round_{rnd}")
-            improved = sever(
-                improved.observe(obs, F.count(F.lit(1)).alias("improved"))
+            improved, obs = observe(
+                improved, [F.count(F.lit(1)).alias("improved")], held
             )
-            fcount = int(obs.get["improved"] or 0)
+            fcount = int(obs["improved"] or 0)
             iterations = rnd
             metrics.append(
                 {
@@ -115,22 +116,26 @@ def sssp(
                 }
             )
             if fcount == 0:
-                release(improved)
                 break
-            new_state = sever(
-                state.join(improved.select("id"), "id", "left_anti").union(
-                    improved
-                )
+            state, _ = observe(
+                state.join(improved.select("id"), "id", "left_anti").union(improved),
+                [],
+                held,
             )
-            release(state)
-            release(frontier) if frontier is not state else None
-            state = new_state
+            for df in held:
+                if df is not state and df is not improved:
+                    release(df)
+            held = [state, improved]
             frontier = improved
+        out = state
+        return SSSPResult(
+            df=state,
+            iterations=iterations,
+            wall_seconds=time.time() - t0,
+            metrics=metrics,
+        )
     finally:
         ew.unpersist()
-    return SSSPResult(
-        df=state,
-        iterations=iterations,
-        wall_seconds=time.time() - t0,
-        metrics=metrics,
-    )
+        for df in held:
+            if df is not out:
+                release(df)

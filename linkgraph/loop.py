@@ -11,8 +11,9 @@ eigenvector, hits, salsa), labelprop, kernels/cc.py's label loop (cc,
 and scc's forward-max coloring), kernels/scc.py's ``reach`` (scc's
 backward sweep, bowtie's two sweeps) and condensation's level
 relaxation. The shrinking-residual kernels run on :func:`peel`
-below. Still on hand-written loops: bfs, msbfs, sssp, anf, louvain and
-pagerank_delta.
+below, and the level-synchronous traversals (bfs, msbfs, betweenness's
+forward sweep, ego_net) on linkgraph/frontier.py's ``traverse``. Still
+on hand-written loops: sssp, anf, louvain and pagerank_delta.
 
 What the driver owns:
 
@@ -389,7 +390,7 @@ class PeelRound:
         """Materialize a frame of this round (``sever``), its aggregate
         scalars riding the same job. It is released when the round
         ends, unless it is the round's part."""
-        return _observe(df, aggs, self.owned)
+        return observe(df, aggs, self.owned)
 
 
 @dataclass
@@ -400,7 +401,9 @@ class Peeled:
     metrics: list[dict] = field(default_factory=list)
 
 
-def _observe(df: DataFrame, aggs, owned: list[DataFrame]) -> tuple[DataFrame, dict]:
+def observe(df: DataFrame, aggs, owned: list[DataFrame]) -> tuple[DataFrame, dict]:
+    """Sever ``df`` into ``owned``; the scalars of ``aggs`` (if any)
+    ride the same job as an Observation."""
     obs = Observation()
     out = sever(df.observe(obs, *aggs) if aggs else df)
     owned.append(out)
@@ -440,7 +443,7 @@ def _settle(
     for i, df in enumerate(residuals):
         if not _stored(df):
             aggs = [F.count(F.lit(1)).alias("rows")] if count and i == 0 else []
-            df, s = _observe(df, aggs, held)
+            df, s = observe(df, aggs, held)
             rows = s.get("rows", rows)
         out.append(df)
     return out, rows
@@ -502,7 +505,7 @@ def peel(
     try:
         loaded = ckpt.load_deltas(spark) if ckpt is not None else None
         if loaded is not None:
-            prior, s = _observe(loaded[0], [F.count(F.lit(1)).alias("rows")], held)
+            prior, s = observe(loaded[0], [F.count(F.lit(1)).alias("rows")], held)
             prev = loaded[1]
             parts.append(prior)
             metrics.append(prev)
@@ -523,9 +526,8 @@ def peel(
                 rec = {"iteration": it, **cut.record}
                 converged = cut.done
                 if not converged:
-                    nxt, rows = _settle(
-                        _cut(res, cuts, keys(cut.delta), cut.rows), held, size_key is not None
-                    )
+                    cut_res = _cut(res, cuts, keys(cut.delta), cut.rows)
+                    nxt, rows = _settle(cut_res, held, size_key is not None)
                     for df in res:  # every residual is cut: none is in nxt
                         if any(df is h for h in held):
                             release(df)

@@ -9,9 +9,16 @@ bench, and spark-submit jobs agree on shuffle sizing, AQE, and Arrow.
 from __future__ import annotations
 
 import os
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
+
+
+# per (session, key): the overrides still open, oldest first; each
+# holds the value to restore when it is the last one out
+_OPEN: dict[tuple[int, str], list[list]] = {}
+_LOCK = threading.Lock()
 
 
 @contextmanager
@@ -20,20 +27,41 @@ def conf_override(spark: SparkSession, conf: dict[str, str]):
     switch AQE off inside their loops: the plan shapes are fixed and
     known, and AQE's per-stage re-planning adds ~0.3-0.7s of driver
     latency per iteration — measured 25-35% of iteration wall time on
-    the rMAT-20 loop)."""
-    # get(k, None) is None for a key the session never set explicitly,
-    # so restoring unsets it rather than pinning its default value
-    old = {k: spark.conf.get(k, None) for k in conf}
-    for k, v in conf.items():
-        spark.conf.set(k, v)
+    the rMAT-20 loop).
+
+    Safe on driver threads sharing the session: overrides of one key
+    form a stack, and one that exits while a later one is still open
+    hands its saved value to that one instead of restoring it, so the
+    last one out restores the value from before the first one in.
+    Nested overrides on one thread exit in stack order and restore
+    their own saved values."""
+    opened = []
+    with _LOCK:
+        for k, v in conf.items():
+            # get(k, None) is None for a key the session never set
+            # explicitly, so restoring unsets it rather than pinning
+            # its default value
+            entry = [spark.conf.get(k, None)]
+            _OPEN.setdefault((id(spark), k), []).append(entry)
+            opened.append((k, entry))
+            spark.conf.set(k, v)
     try:
         yield
     finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        with _LOCK:
+            for k, entry in opened:
+                stack = _OPEN[(id(spark), k)]
+                i = next(i for i, e in enumerate(stack) if e is entry)
+                del stack[i]
+                if i < len(stack):
+                    stack[i][0] = entry[0]
+                    continue
+                if not stack:
+                    del _OPEN[(id(spark), k)]
+                if entry[0] is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, entry[0])
 
 
 def get_spark(

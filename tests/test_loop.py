@@ -1,10 +1,13 @@
-"""The loop drivers (linkgraph/loop.py: fixpoint and peel) leave their
-caller's state alone: edge cache, persistent RDDs, temp views and
-session conf, on the normal path and when the loop raises."""
+"""The loop drivers (linkgraph/loop.py: fixpoint and peel;
+linkgraph/frontier.py: traverse) and the kernels still on hand-written
+loops leave their caller's state alone: edge cache, persistent RDDs,
+temp views and session conf, on the normal path and when the loop
+raises."""
 
 from __future__ import annotations
 
 import importlib
+import threading
 
 import pytest
 from pyspark import StorageLevel
@@ -16,27 +19,36 @@ from linkgraph.build import build_graph_from_edges, symmetrize
 from linkgraph.checkpoint import CheckpointManager, release, sever
 from linkgraph.datagen import rmat_edges
 from linkgraph.kernels import (
+    anf,
+    betweenness,
+    bfs,
     bowtie,
     coloring,
     condensation,
     connected_components,
     coreness,
     densest_subgraph,
+    ego_net,
     eigenvector_centrality,
     hits,
     katz,
     kcore,
     ktruss,
     label_propagation,
+    landmark_distances,
     maximal_matching,
     mis,
+    msbfs,
     pagerank,
+    pagerank_delta,
     pagerank_weighted,
     ppr,
     salsa,
     scc,
+    sssp,
     trussness,
 )
+from linkgraph.session import conf_override
 
 
 def _rmat_graph(spark, num_partitions: int):
@@ -291,4 +303,139 @@ def test_trussness_residual_keeps_its_input_estimate(spark, monkeypatch):
     tail = sum(walls[-3:]) / 3
     # the rule of tests/test_plans.py::test_sever_loop_stays_flat
     assert tail < 8 * head + 0.5, (head, tail, walls)
+    g.unpersist()
+
+
+# each kernel on a hand-written or traverse loop, the frames it returns,
+# and the module attribute whose second call lands in its second level
+# or round (sssp's fourth observe: seed, round 1's improved and state)
+TRAVERSE_AND_HAND_KERNELS = {
+    "bfs": (lambda g: [bfs(g, 0).df], "linkgraph.frontier", "edge_map", 2),
+    "msbfs": (lambda g: [msbfs(g, [0, 1, 5]).df], "linkgraph.frontier", "edge_map", 2),
+    "betweenness": (
+        lambda g: [betweenness(g, [0, 1, 5]).df],
+        "linkgraph.frontier",
+        "edge_map",
+        2,
+    ),
+    "ego_net": (
+        lambda g: (lambda r: [r.vertices, r.edges])(ego_net(g, [0], radius=3)),
+        "linkgraph.frontier",
+        "edge_map",
+        2,
+    ),
+    "sssp": (lambda g: [sssp(g, 0).df], "linkgraph.kernels.sssp", "observe", 4),
+    "pagerank_delta": (
+        lambda g: [pagerank_delta(g, max_iterations=6).df],
+        "linkgraph.kernels.pagerank_delta",
+        "_scatter",
+        2,
+    ),
+    "anf": (lambda g: [anf(g, max_iter=6).df], "linkgraph.kernels.anf", "edge_map", 2),
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(TRAVERSE_AND_HAND_KERNELS))
+def test_traversal_leaves_only_its_answer(spark, monkeypatch, kernel):
+    """After each call the new persistent RDDs are exactly the ones
+    under its returned frames; when its second level or round raises,
+    there are none. The caller's edge and vertex caches stay."""
+    run, module, attr, fail_at = TRAVERSE_AND_HAND_KERNELS[kernel]
+    g = _sym_graph(spark, 6, 6)
+    rdds0 = _persistent_rdds(spark)
+    frames = run(g)
+    for df in frames:
+        df.count()
+    assert _persistent_rdds(spark) - rdds0 == {_result_rdd(df) for df in frames}
+    del frames
+
+    rdds1 = _persistent_rdds(spark)
+    mod = importlib.import_module(module)
+    real = getattr(mod, attr)
+    calls = {"n": 0}
+
+    def fails(*args, **kwargs):
+        calls["n"] += 1
+        if calls["n"] == fail_at:
+            raise RuntimeError("injected round failure")
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(mod, attr, fails)
+    with pytest.raises(RuntimeError, match="injected"):
+        run(g)
+    monkeypatch.undo()
+    # set differences: the ContextCleaner may drop unrelated RDDs meanwhile
+    assert _persistent_rdds(spark) - rdds1 == set()
+    for df in (g.edges, g.vertices):
+        assert df.storageLevel != StorageLevel.NONE
+    g.unpersist()
+
+
+def test_anf_records_each_rounds_own_wall(spark):
+    """Each anf record's wall_s is its round's, so they sum to at most
+    the call's wall (a wall since the call started overcounts from the
+    second round on)."""
+    g = _sym_graph(spark, 6, 6)
+    res = anf(g, max_iter=6)
+    assert res.iterations >= 2
+    assert sum(m.get("wall_s", 0.0) for m in res.metrics) <= res.wall_seconds
+    g.unpersist()
+
+
+AQE = "spark.sql.adaptive.enabled"
+
+
+@pytest.mark.parametrize("first_out", ["a", "b"])
+def test_conf_override_is_safe_on_driver_threads(spark, first_out):
+    """Two same-valued overrides on two threads, entered A then B and
+    exited in either order, leave the conf as it was before either
+    entered; until the last one exits the override holds."""
+    before = spark.conf.get(AQE, None)
+    a_in, b_in, out = threading.Event(), threading.Event(), threading.Event()
+    seen = []
+
+    def a():
+        with conf_override(spark, {AQE: "false"}):
+            a_in.set()
+            b_in.wait()
+            if first_out == "b":
+                out.wait()
+                seen.append(spark.conf.get(AQE))
+        if first_out == "a":
+            out.set()
+
+    def b():
+        a_in.wait()
+        with conf_override(spark, {AQE: "false"}):
+            b_in.set()
+            if first_out == "a":
+                out.wait()
+                seen.append(spark.conf.get(AQE))
+        if first_out == "b":
+            out.set()
+
+    threads = [threading.Thread(target=f) for f in (a, b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=30)
+    assert seen == ["false"]
+    assert spark.conf.get(AQE, None) == before
+
+    # nesting on one thread: each exit restores the value it found
+    with conf_override(spark, {AQE: "false"}):
+        with conf_override(spark, {AQE: "true"}):
+            assert spark.conf.get(AQE) == "true"
+        assert spark.conf.get(AQE) == "false"
+    assert spark.conf.get(AQE, None) == before
+
+
+def test_landmark_distances_leaves_session_conf(spark):
+    """landmark_distances runs its two msbfs sweeps on two driver
+    threads, each under the loop conf; the session conf is unchanged
+    after it."""
+    g = _sym_graph(spark, 6, 6)
+    before = dict(spark.conf.getAll)
+    landmark_distances(g, [0, 1, 5]).count()
+    assert dict(spark.conf.getAll) == before
     g.unpersist()

@@ -193,7 +193,8 @@ def test_anf_round_aggregates_map_side(spark, tiny_graph):
 
 def test_scc_sweep_accept_is_equi_join_not_nested_loop(spark, tiny_graph):
     """The multi-lane accept (edge_map group_extra, then a lane/color
-    equality filter, as in the msbfs and betweenness lanes)
+    equality filter, as in frontier.traverse's lanes under msbfs and
+    betweenness)
     filters candidates by color equality AFTER an equi-join on dst;
     Catalyst must plan a hash/broadcast equi-join
     (the color predicate is a post-join filter), never fall to a
